@@ -5055,39 +5055,341 @@ object Similarity {
     * mirrored verbatim in the q206 oracle's HAVING. */
   private[llm] val LsmDeltaAbsMax = 2000000L
 
-  /** q193: LSM vector index — the WRITE path of the SERVING tier. The
-    * q192 dirty-bucket discipline cannot carry to the cell-partitioned
-    * vector store: cells number only ~⌈√N⌉ (71 at N=5000, ~3e5 at
-    * 1e11), so even a modest arrival batch touches MOST cells and a
-    * dirty-cell rewrite degenerates to a full one. The production shape
-    * for this tier is the LSM/segment pattern (Lucene-style): arrivals
-    * land as APPEND-ONLY per-generation delta segments — assignments of
-    * live arrivals against the frozen centroids plus explicit tombstone
-    * rows — and the BASE segment (partitionBy(cluster), q187's serving
-    * layout) is never touched by ingest. The served view resolves
-    * latest-wins at read time: base anti-join (broadcast) the delta
-    * entities, union the newest surviving delta row per entity. When
-    * the accumulated delta rows cross [[LsmDeltaPct]] percent of the
-    * base, COMPACTION folds the view into a fresh cell-partitioned base
-    * and clears the deltas — the amortized full rewrite, scheduled by
-    * the trigger exactly like q188's retrain.
+  /** Reads a quantizer table (`centroids`, `codebook`) stored under an
+    * LSM root by name. */
+  private[llm] type LsmTables = String => DataFrame
+
+  /** An [[LsmTables]] that reads each table at most once: a parquet read
+    * infers its schema with a Spark job, so the batch lifecycle and the
+    * mid-store build share one reader while each stream batch takes a
+    * fresh one (the stored tables are frozen either way). */
+  private def lsmTables(spark: org.apache.spark.sql.SparkSession,
+                        root: String): LsmTables = {
+    val read = scala.collection.mutable.Map.empty[String, DataFrame]
+    name => read.getOrElseUpdate(name, spark.read.parquet(s"$root/$name"))
+  }
+
+  /** One LSM vector tier's codec: everything that differs between the
+    * flat (q193), SQ8 (q232) and composed (q196) segment stores. The
+    * store mechanism itself is [[LsmStore]], written once.
+    *  - `tag`: the corpus-key namespace and ServedRoots temp-dir stem;
+    *  - `payload`: the columns a store row carries beyond (ent, vec_id,
+    *    cluster, dist) — what compaction folds and the serve reads;
+    *  - `seed`: trains the frozen quantizer tables, stores them under
+    *    the root and writes `base`;
+    *  - `arrivals`: corpus rows as the tier's arrival rows (ent, vec_id,
+    *    vector, label), the vector drifted d generations in the tier's
+    *    arrival domain;
+    *  - `deltaOf`: one delta segment from an arrival frame (the above
+    *    plus `del`) against the stored quantizer tables: store rows for
+    *    live arrivals plus explicit tombstone rows;
+    *  - `auditSums`: the tier's extra lifecycle-audit aggregates. */
+  private[llm] final case class LsmCodec(
+      tag: String,
+      payload: Seq[String],
+      seed: (DataFrame, String, LsmTables) => Unit,
+      arrivals: (DataFrame, Int) => DataFrame,
+      deltaOf: (DataFrame, LsmTables) => DataFrame,
+      auditSums: Seq[Column])
+
+  /** The LSM segment store of the vector serving tiers (the
+    * Lucene-style segment pattern: the q192 dirty-bucket discipline
+    * cannot carry to a cell-partitioned store — cells number only
+    * ~⌈√N⌉, so a modest arrival batch touches MOST cells and a
+    * dirty-cell rewrite degenerates to a full one). ONE implementation
+    * for every tier, parameterised by the tier's [[LsmCodec]].
+    *
+    * On-disk layout under a root — a contract, because readers outside
+    * this object parse it: perfbench's `ServeIngest.newestBase` and
+    * `segments`, and SimilaritySpec/StreamingSpec, which assert
+    * `base_c3`/`base_c6`/`deltaN`:
+    *  - `centroids` (and `codebook` for the composed tier): the frozen
+    *    quantizer tables, written once by the seed;
+    *  - `base`: the gen-0 segment in the bucketed [[CellStore]] layout;
+    *  - `base_cN`: the base compaction wrote when delta N crossed the
+    *    trigger; the highest N (or `base`) is the live base;
+    *  - `deltaN`: append-only delta segments, numbered above every live
+    *    delta and the live base's N ([[lsmNextSeg]]).
+    *
+    * Ingest appends ONE delta per arrival batch and never touches the
+    * base ([[appendDelta]], O(batch)); readers resolve latest-wins at
+    * read time ([[resolvedView]]); when live delta rows cross
+    * [[LsmDeltaPct]] percent of the base, [[compactIfDue]] folds the
+    * view into a fresh base and deletes the deltas — the amortized
+    * corpus-sized pass, paid only behind the trigger. The batch
+    * lifecycle ([[indexTo]]) and the stream leg ([[ingest]]) run the
+    * same append + trigger step, so stream ≡ batch by construction. */
+  private[llm] final class LsmStore(val codec: LsmCodec) {
+    /** The registered fixture's generation-g arrival band: entities
+      * `vec_id % 100 ∈ {g, 4}` (the %100=4 entities re-arrive every
+      * generation — latest-wins through multiple deltas), drifted g
+      * generations (moving some entities across cells, so tombstoned
+      * base rows and cell-moves are both real), `vec_id % 3 = 0`
+      * tombstoned. Cumulative delta fraction is 2/4/6%, so the trigger
+      * first fires at g3 at EVERY corpus size. */
+    def band(embeddings: DataFrame, g: Int): DataFrame =
+      codec.arrivals(embeddings.filter(
+          col("vec_id") % 100 === g || col("vec_id") % 100 === 4), g)
+        .withColumn("del", col("vec_id") % 3 === 0)
+
+    /** Appends one delta segment for an arrival batch — zero base IO. */
+    def appendDelta(root: String, arrivals: DataFrame,
+                    tables: LsmTables): Unit = {
+      val (basePath, prior) = lsmStorePaths(root)
+      codec.deltaOf(arrivals, tables).write.mode("overwrite")
+        .parquet(s"$root/delta${lsmNextSeg(basePath, prior)}")
+    }
+
+    /** Checks the [[LsmDeltaPct]] trigger against the CURRENT base and,
+      * on fire, compacts the resolved view into `base_cN` (N = the
+      * newest delta) and deletes the deltas. True when it compacted. */
+    def compactIfDue(spark: org.apache.spark.sql.SparkSession,
+                     root: String): Boolean = {
+      val (basePath, deltas) = lsmStorePaths(root)
+      val deltaPaths = deltas.map(i => s"$root/delta$i")
+      // memoized per immutable segment: batch k counts ONE new segment,
+      // not all k — ingest stays O(batch)
+      val due = deltaPaths.map(segCount(spark, _)).sum * 100L >
+        segCount(spark, basePath) * LsmDeltaPct
+      if (due) {
+        val compacted = s"$root/base_c${deltas.last}"
+        lsmWriteBase(resolvedView(spark, root, None), root, compacted)
+        // a base path can be re-created under one root (StreamingSpec
+        // deletes and rewrites base_c3), so the trigger re-anchors on
+        // the new segment's footer count, never a memo of the old one
+        dropSegCount(compacted)
+        deltaPaths.foreach { p =>
+          graft.FsUtil.deleteRecursively(new java.io.File(p))
+          dropSegCount(p)
+        }
+      }
+      due
+    }
+
+    /** The ingest step on its own — the stream legs' micro-batch body. */
+    def ingest(root: String, batch: DataFrame): Unit = {
+      appendDelta(root, batch, lsmTables(batch.sparkSession, root))
+      compactIfDue(batch.sparkSession, root)
+      ()
+    }
+
+    /** The batch lifecycle over an EXPLICIT root: seed, audit g0, then
+      * per fixture generation g ∈ 1..3 append, audit, and compact if
+      * due (audited again as `g<g>c`). One audit row per state over the
+      * SERVED VIEW — rows/entities/cells, live delta rows, compacted
+      * flag, checksum and the codec's [[LsmCodec.auditSums]] — which
+      * the oracle recomputes from scratch per state, emitting the
+      * post-compaction row behind the SAME integer trigger predicate. */
+    def indexTo(embeddings: DataFrame, root: String,
+                onState: String => Unit): DataFrame = {
+      val spark = embeddings.sparkSession
+      val tables = lsmTables(spark, root)
+      codec.seed(embeddings, root, tables)
+      val baseRows = graft.FsUtil.parquetRowCount(spark, s"$root/base")
+      // the oracle emits the compaction row only at g3 (the registered
+      // fixture's cumulative 2/4/6% bands first cross the 5% trigger
+      // there); below ~100 rows the integer band sizes round such that
+      // the trigger can fire earlier and the two sides diverge — fail
+      // loudly instead of hash-mismatching (review r11)
+      require(baseRows >= 100,
+        s"${codec.tag} LSM store: fixture needs >= 100 vectors (got " +
+          s"$baseRows) for the oracle's fires-first-at-g3 trigger " +
+          "contract to hold")
+      val audits = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def audit(state: String, compacted: Long): Unit = {
+        val nDelta = lsmStorePaths(root)._2
+          .map(i => segCount(spark, s"$root/delta$i")).sum
+        val aggs = Seq(lit(state).as("state"), count(lit(1)).as("n_rows"),
+          countDistinct(col("ent")).as("n_ents"),
+          countDistinct(col("cluster")).as("n_cells"),
+          lit(nDelta).as("n_delta"), lit(compacted).as("compacted"),
+          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
+            .as("checksum")) ++ codec.auditSums
+        audits += resolvedView(spark, root, None)
+          .agg(aggs.head, aggs.tail: _*).localCheckpoint()
+        onState(state)
+      }
+      audit("g0", 0L)
+      for (g <- 1 to 3) {
+        appendDelta(root, band(embeddings, g), tables)
+        audit(s"g$g", 0L)
+        if (compactIfDue(spark, root)) audit(s"g${g}c", 1L)
+      }
+      audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
+    }
+
+    /** The MID-LIFECYCLE store the serve legs read: the seed plus TWO
+      * fixture generations (cumulative 4% — deliberately below the
+      * trigger, so one live base and two live delta segments). */
+    def midStoreTo(embeddings: DataFrame, root: String): Unit = {
+      val tables = lsmTables(embeddings.sparkSession, root)
+      codec.seed(embeddings, root, tables)
+      for (g <- 1 to 2) appendDelta(root, band(embeddings, g), tables)
+    }
+
+    /** The mid-lifecycle store of a corpus, built once per corpus into
+      * the [[graft.FsUtil.ServedRoots]] cache: ONE physical store serves
+      * the tier's plain, filtered and streamed legs. */
+    def servedRoot(embeddings: DataFrame, corpusTag: String): String =
+      graft.FsUtil.ServedRoots.getOrBuild(
+        corpusKey(embeddings, "vec_id", s"${codec.tag}:$corpusTag", embSig),
+        s"graft_${codec.tag}_served_")(midStoreTo(embeddings, _))
+
+    /** The latest-wins view of the store's current state: the live base
+      * anti-join (broadcast: deltas are batch-sized) the delta entity
+      * set, union the newest surviving delta row per entity. The ingest
+      * contract is ONE row per entity per batch; should a caller violate
+      * it, the within-generation tie falls back deterministically to
+      * the highest vec_id rather than task-retry roulette (review r11).
+      * With a probed-cell frame `cells` (the serve path, r16) the base
+      * read prunes via [[CellStore.prunedToF]]'s bucket-keyed DPP
+      * semi-join and the delta rows by the same census AFTER their
+      * latest-wins window; the anti-join always uses the UNFILTERED
+      * delta entity set — an entity can change cells on re-write. */
+    def resolvedView(spark: org.apache.spark.sql.SparkSession, root: String,
+                     cells: Option[DataFrame]): DataFrame = {
+      val (basePath, deltas) = lsmStorePaths(root)
+      val cols = Seq(col("ent"), col("vec_id"),
+        col("cluster").cast("long").as("cluster"), col("dist")) ++
+        codec.payload.map(col)
+      val base = spark.read.parquet(basePath)
+      val b = cells.fold(base)(CellStore.prunedToF(base,
+          CellStore.bucketCount(graft.FsUtil.parquetRowCount(
+            spark, s"$root/centroids")), _))
+        .select(cols: _*)
+      if (deltas.isEmpty) b
+      else {
+        val ds = deltas.zipWithIndex.map { case (i, gen) =>
+            spark.read.parquet(s"$root/delta$i")
+              .withColumn("gen", lit(gen.toLong))
+          }.reduce(_ unionByName _)
+        val latest = ds
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("ent"))
+              .orderBy(col("gen").desc, col("vec_id").desc)))
+          .filter(col("rn") === 1 && !col("del"))
+          .select(cols: _*)
+        b.join(broadcast(ds.select(col("ent")).distinct()),
+            Seq("ent"), "left_anti")
+          .unionByName(cells.fold(latest)(cs => latest.join(broadcast(cs),
+            latest("cluster") === cs("cell"), "left_semi")))
+      }
+    }
+
+    /** The serve legs' prologue over a stored root: rank the frozen
+      * cells per probe at the dynamic ⌈frac·⌈√N⌉⌉ budget scaled by
+      * `widen` (the measured 1/selectivity on the filtered legs, the
+      * q204 discipline), resolve ONLY the probed cells' view rows, and
+      * apply `pred` to the RESOLVED candidates — never below the entity
+      * anti-join (Catalyst still pushes a label predicate through it to
+      * the base scan, as a parquet filter on the co-stored column).
+      * Returns (probed cells, candidate rows) for the tier's rank tail. */
+    def probedView(root: String, probes: DataFrame, embeddings: DataFrame,
+                   frac: Double, pred: Option[Column],
+                   widen: Column): (DataFrame, DataFrame) = {
+      val spark = embeddings.sparkSession
+      val pcells = broadcast(probeCellsFor(probes, embeddings,
+        spark.read.parquet(s"$root/centroids"), nProbe = 0, frac = frac,
+        widen = widen))
+      val resolved =
+        resolvedView(spark, root, Some(pcells.select(col("cell")).distinct()))
+      (pcells, pred.map(resolved.filter).getOrElse(resolved))
+    }
+
+    /** A probe micro-batch (vec_id, embedding) served by `serve` from
+      * the SAME stored root as the batch leg (resolved once per stream
+      * tag, [[streamRootFor]]), results appended to `outDir`. Per-probe
+      * results depend only on the probe row and the stored segments, so
+      * the union of micro-batches ≡ one batch (StreamingSpec). */
+    def serveStream(embeddings: DataFrame, corpusTag: String, outDir: String,
+                    batch: DataFrame)(
+        serve: (String, DataFrame) => DataFrame): Unit = {
+      val probes = batch.select(col("vec_id").as("probe_id"),
+        col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
+      val root = streamRootFor(s"${codec.tag}:$corpusTag") {
+        servedRoot(embeddings, corpusTag)
+      }
+      serve(root, probes).write.mode("append").parquet(outDir)
+    }
+  }
+
+  /** Trains the frozen coarse centroids on the whole corpus and stores
+    * them as the root's `centroids` table. */
+  private def lsmTrainTo(embeddings: DataFrame, root: String): Unit =
+    sweepAfter(embeddings.sparkSession) {
+      val (_, cents0) =
+        trainLloyd(embeddings.select(col("vec_id"), col("embedding")))
+      cents0.write.mode("overwrite").parquet(s"$root/centroids")
+    }
+
+  /** Writes an LSM base segment in the bucketed block-file layout
+    * ([[CellStore]], r16 — the r15 layout was `repartition(32,
+    * cluster)` + `partitionBy(cluster)`: up to 32 files per cell dir,
+    * dir count linear in N). B derives from the root's stored centroid
+    * table, the same rule the pruned readers apply. */
+  private def lsmWriteBase(df: DataFrame, root: String,
+                           path: String): Unit =
+    CellStore.write(df,
+      CellStore.bucketCount(graft.FsUtil.parquetRowCount(
+        df.sparkSession, s"$root/centroids")),
+      path)
+
+  /** The corpus in the ×1000 integer domain with its label riding
+    * along (entity-stable in the fixture): (vec_id, qe, label). */
+  private def lsmQuantized(embeddings: DataFrame): DataFrame =
+    quantized(embeddings.select(col("vec_id"), col("embedding")), 1000)
+      .join(embeddings.select(col("vec_id"), col("label")), "vec_id")
+
+  /** The flat and composed tiers' arrival domain: the quantized vector
+    * drifted +500·d milli-units per coordinate in the INTEGER domain
+    * (the q188 drift trick — deterministic and oracle-exact). */
+  private def lsmQeArrivals(corpus: DataFrame, d: Int): DataFrame =
+    lsmQuantized(corpus)
+      .select(col("vec_id").as("ent"), col("vec_id"),
+        transform(col("qe"), x => x + lit(500L * d)).as("qe"), col("label"))
+
+  /** The flat (IVF-Flat) tier: the quantized vector rides with its
+    * frozen-centroid assignment, so the store SERVES without a side
+    * lookup, and the filterable `label` is CO-STORED on every row the
+    * way a production filtered-ANN store keeps its metadata (r17). */
+  private[llm] val FlatLsm: LsmStore = new LsmStore(LsmCodec(
+    tag = "lsm",
+    payload = Seq("qe", "label"),
+    seed = (embeddings, root, tables) => {
+      lsmTrainTo(embeddings, root)
+      val q0 = lsmQuantized(embeddings)
+      lsmWriteBase(
+        frozenAssignQ(
+            q0.select(col("vec_id").as("ent"), col("vec_id"), col("qe")),
+            tables("centroids"))
+          .join(q0, "vec_id")
+          .select(col("ent"), col("vec_id"), col("cluster"), col("dist"),
+            col("qe"), col("label")),
+        root, s"$root/base")
+    },
+    arrivals = lsmQeArrivals,
+    deltaOf = (arr, tables) =>
+      frozenAssignQ(arr.filter(!col("del")), tables("centroids"))
+        .join(arr.select(col("vec_id"), col("qe"), col("label")), "vec_id")
+        .select(col("ent"), col("vec_id"), col("cluster"), col("dist"),
+          col("qe"), col("label"), lit(false).as("del"))
+        .unionByName(arr.filter(col("del"))
+          .select(col("ent"), col("vec_id"), lit(-1L).as("cluster"),
+            lit(0L).as("dist"), col("qe"), col("label"),
+            lit(true).as("del"))),
+    auditSums = Nil))
+
+  /** q193: LSM vector index — the WRITE path of the SERVING tier, on
+    * the flat codec ([[FlatLsm]]): arrivals land as APPEND-ONLY delta
+    * segments against the frozen centroids, the cell-partitioned BASE
+    * (q187's serving layout) is never touched by ingest, the served
+    * view resolves latest-wins at read time, and compaction runs behind
+    * the [[LsmDeltaPct]] trigger exactly like q188's retrain.
     *
     * Fixture: ent = vec_id over the embedding corpus; gen0 = every
-    * vector, original embedding; batch g ∈ {1,2,3} revises
-    * `vec_id % 100 ∈ {g, 4}` (the %100=4 entities re-arrive every
-    * generation — latest-wins through multiple deltas) with the arrival
-    * embedding shifted +500·g milli-units per coordinate in the integer
-    * domain (the q188 drift trick — deterministic, oracle-exact, and it
-    * moves some entities across cells so tombstoned base rows and
-    * cell-moves are both real); `vec_id % 3 = 0` arrivals are
-    * tombstones. Cumulative delta fraction is 2/4/6%, so the trigger
-    * fires at g3 at EVERY corpus size (scale-invariant control flow).
-    * Output: one audit row per state g0..g3 + post-compaction g3c
-    * (rows/entities/cells of the SERVED VIEW, delta-row count,
-    * compacted flag, checksum); the oracle recomputes every state's
-    * view from scratch (frozen trained-Lloyd CTE, latest-wins window,
-    * per-vector argmin) and emits g3c behind the SAME integer trigger
-    * predicate — a green hash proves served-view-over-deltas ≡
+    * vector, original embedding; batch g ∈ {1,2,3} is
+    * [[LsmStore.band]]. Output: one audit row per state g0..g3 +
+    * post-compaction g3c; a green hash proves served-view-over-deltas ≡
     * from-scratch rebuild at every generation AND across the compaction
     * boundary.
     *
@@ -5110,226 +5412,13 @@ object Similarity {
   private[graft] def lsmVectorIndexTo(embeddings: DataFrame,
                                       root: String,
                                       onState: String => Unit = _ => ())
-      : DataFrame = {
-    val spark = embeddings.sparkSession
-    val (q0, cents) = lsmSeedTo(embeddings, root)
-    var basePath = s"$root/base"
-    var deltaPaths = Vector.empty[String]
-    def view(): DataFrame = lsmResolvedView(spark, basePath, deltaPaths)
-    def audit(state: String, nDelta: Long, compacted: Long): DataFrame =
-      view()
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("ent")).as("n_ents"),
-          countDistinct(col("cluster")).as("n_cells"),
-          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-            .as("checksum"))
-        .select(lit(state).as("state"), col("n_rows"), col("n_ents"),
-          col("n_cells"), lit(nDelta).as("n_delta"),
-          lit(compacted).as("compacted"), col("checksum"))
-        .localCheckpoint()
-    var baseRows = graft.FsUtil.parquetRowCount(spark, basePath)
-    // the oracle emits the compaction row only at g3 (the registered
-    // fixture's cumulative 2/4/6% bands first cross the 5% trigger
-    // there); below ~100 rows the integer band sizes round such that
-    // the trigger can fire earlier and the two sides diverge — fail
-    // loudly instead of hash-mismatching (review r11)
-    require(baseRows >= 100,
-      s"lsmVectorIndex: fixture needs >= 100 vectors (got $baseRows) " +
-        "for the oracle's fires-first-at-g3 trigger contract to hold")
-    var deltaRows = 0L
-    val audits = scala.collection.mutable.ArrayBuffer(audit("g0", 0L, 0L))
-    onState("g0")
-    for (g <- 1 to 3) {
-      val p = s"$root/delta$g"
-      lsmDeltaOf(lsmArrivals(q0, g), cents)
-        .write.mode("overwrite").parquet(p)
-      deltaPaths :+= p
-      deltaRows += graft.FsUtil.parquetRowCount(spark, p)
-      audits += audit(s"g$g", deltaRows, 0L)
-      onState(s"g$g")
-      if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-        val np = s"$root/base_c$g"
-        lsmWriteBase(view(), root, np)
-        deltaPaths.foreach(d =>
-          graft.FsUtil.deleteRecursively(new java.io.File(d)))
-        deltaPaths = Vector.empty
-        basePath = np
-        // re-anchor the trigger denominator on the COMPACTED base —
-        // the stream leg recounts the current base per batch, and the
-        // two legs must implement the same trigger (review r11)
-        baseRows = graft.FsUtil.parquetRowCount(spark, np)
-        deltaRows = 0L
-        audits += audit(s"g${g}c", 0L, 1L)
-        onState(s"g${g}c")
-      }
-    }
-    audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-  }
+      : DataFrame =
+    FlatLsm.indexTo(embeddings, root, onState)
 
-  /** Trains the frozen centroids on the whole corpus and writes the
-    * seed tables (`centroids`, the cell-partitioned gen-0 `base` — an
-    * IVF-Flat layout: the quantized vector rides with its assignment,
-    * so the store SERVES without a side lookup, and the filterable
-    * `label` attribute is CO-STORED on every row the way a production
-    * filtered-ANN store keeps its metadata, r17). Returns the quantized
-    * corpus frame (label riding along — the arrival fixtures carry it
-    * into the delta segments) and the stored centroids. */
-  private def lsmSeedTo(embeddings: DataFrame,
-                        root: String): (DataFrame, DataFrame) = {
-    val spark = embeddings.sparkSession
-    sweepAfter(spark) {
-      val (_, cents0) =
-        trainLloyd(embeddings.select(col("vec_id"), col("embedding")))
-      cents0.write.mode("overwrite").parquet(s"$root/centroids")
-    }
-    val cents = spark.read.parquet(s"$root/centroids")
-    val q0 = quantized(embeddings.select(col("vec_id"), col("embedding")), 1000)
-      .join(embeddings.select(col("vec_id"), col("label")), "vec_id")
-    lsmWriteBase(
-      frozenAssignQ(
-          q0.select(col("vec_id").as("ent"), col("vec_id"), col("qe")), cents)
-        .join(q0, "vec_id")
-        .select(col("ent"), col("vec_id"), col("cluster"), col("dist"),
-          col("qe"), col("label")),
-      root, s"$root/base")
-    (q0, cents)
-  }
-
-  /** The q193 fixture's generation-g arrival band: absolute entities
-    * `vec_id % 100 ∈ {g, 4}`, embedding drifted +500·g milli-units in
-    * the integer domain, `vec_id % 3 = 0` tombstoned. The label rides
-    * along (entity-stable in the fixture — a re-arrival keeps its
-    * vec_id-keyed label). */
-  private def lsmArrivals(q0: DataFrame, g: Int): DataFrame = q0
-    .filter(col("vec_id") % 100 === g || col("vec_id") % 100 === 4)
-    .select(col("vec_id").as("ent"), col("vec_id"),
-      transform(col("qe"), x => x + lit(500L * g)).as("qe"),
-      col("label"), (col("vec_id") % 3 === 0).as("del"))
-
-  /** One delta segment from an arrival frame (ent, vec_id, qe, label,
-    * del): frozen-centroid assignments of the live arrivals (vector and
-    * label co-stored) plus explicit tombstone rows. */
-  private def lsmDeltaOf(arr: DataFrame, cents: DataFrame): DataFrame =
-    frozenAssignQ(arr.filter(!col("del")), cents)
-      .join(arr.select(col("vec_id"), col("qe"), col("label")), "vec_id")
-      .select(col("ent"), col("vec_id"), col("cluster"), col("dist"),
-        col("qe"), col("label"), lit(false).as("del"))
-      .unionByName(arr.filter(col("del"))
-        .select(col("ent"), col("vec_id"), lit(-1L).as("cluster"),
-          lit(0L).as("dist"), col("qe"), col("label"), lit(true).as("del")))
-
-  /** The LSM served view — latest-wins resolution at read time: base
-    * anti-join the delta entity set (broadcast: deltas are
-    * batch-sized), union the newest surviving delta row per entity.
-    * `deltaPaths` MUST be in ascending generation order. The ingest
-    * contract is ONE row per entity per batch (every registered
-    * fixture and stream leg honors it); should a caller violate it,
-    * the within-generation tie falls back deterministically to the
-    * highest vec_id rather than task-retry roulette (review r11).
-    * Shared by the batch lifecycle and the streaming ingest leg. */
-  /** Writes an LSM base segment in the bucketed block-file layout
-    * ([[CellStore]], r16 — the r15 layout was `repartition(32,
-    * cluster)` + `partitionBy(cluster)`: up to 32 files per cell dir,
-    * dir count linear in N). B derives from the root's stored centroid
-    * table, the same rule the pruned readers apply. */
-  private def lsmWriteBase(df: DataFrame, root: String,
-                           path: String): Unit =
-    CellStore.write(df,
-      CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-        df.sparkSession, s"$root/centroids")),
-      path)
-
-  /** The latest-wins view RESTRICTED to a probed-cell frame — the
-    * serve-path resolution (r16): the base scan prunes via
-    * [[CellStore.prunedToF]]'s bucket-keyed DPP semi-join (the r15
-    * serve resolved the WHOLE view and pruned only at the probe join —
-    * through the anti-join + union no partition filter ever reached
-    * the base scan, an O(N)-per-batch resolution), and the delta view
-    * prunes by the same census AFTER its latest-wins window. The
-    * liveness invariant is the graph lifecycle's: the anti-join uses
-    * the UNFILTERED delta entity set — cell predicates are not
-    * entity-stable, an entity can change cells on re-write. */
-  private def lsmResolvedViewPruned(spark: org.apache.spark.sql.SparkSession,
-                                    root: String, basePath: String,
-                                    deltaPaths: Seq[String],
-                                    cellsF: DataFrame,
-                                    payload: Seq[String] = Seq("qe", "label"))
-      : DataFrame = {
-    val cols = Seq(col("ent"), col("vec_id"),
-      col("cluster").cast("long").as("cluster"), col("dist")) ++
-      payload.map(col)
-    val nb = CellStore.bucketCount(
-      graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
-    val b = CellStore.prunedToF(spark.read.parquet(basePath), nb, cellsF)
-      .select(cols: _*)
-    if (deltaPaths.isEmpty) b
-    else {
-      val ds = deltaPaths.zipWithIndex.map { case (p, i) =>
-          spark.read.parquet(p).withColumn("gen", lit(i.toLong))
-        }.reduce(_ unionByName _)
-      val latest = ds
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("ent"))
-            .orderBy(col("gen").desc, col("vec_id").desc)))
-        .filter(col("rn") === 1 && !col("del"))
-        .select(cols: _*)
-      val latestPruned = latest.join(broadcast(cellsF),
-        latest("cluster") === cellsF("cell"), "left_semi")
-      b.join(broadcast(ds.select(col("ent")).distinct()),
-          Seq("ent"), "left_anti")
-        .unionByName(latestPruned)
-    }
-  }
-
-  private def lsmResolvedView(spark: org.apache.spark.sql.SparkSession,
-                              basePath: String,
-                              deltaPaths: Seq[String],
-                              payload: Seq[String] = Seq("qe", "label"))
-      : DataFrame = {
-    val cols = Seq(col("ent"), col("vec_id"),
-      col("cluster").cast("long").as("cluster"), col("dist")) ++
-      payload.map(col)
-    val b = spark.read.parquet(basePath).select(cols: _*)
-    if (deltaPaths.isEmpty) b
-    else {
-      val ds = deltaPaths.zipWithIndex.map { case (p, i) =>
-          spark.read.parquet(p).withColumn("gen", lit(i.toLong))
-        }.reduce(_ unionByName _)
-      val latest = ds
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("ent"))
-            .orderBy(col("gen").desc, col("vec_id").desc)))
-        .filter(col("rn") === 1 && !col("del"))
-        .select(cols: _*)
-      b.join(broadcast(ds.select(col("ent")).distinct()),
-          Seq("ent"), "left_anti")
-        .unionByName(latest)
-    }
-  }
-
-  /** q193 under STRUCTURED STREAMING — the LSM index's ingest leg (the
-    * [[ivfPqIngestStreamBatch]] pattern carried to the segment store):
-    * each arrival micro-batch appends ONE delta segment (frozen-centroid
-    * assignments of live arrivals + tombstone rows — zero base IO), then
-    * checks the [[LsmDeltaPct]] trigger against the CURRENT base and,
-    * on fire, compacts the resolved view into a fresh cell-partitioned
-    * base and clears the deltas — the same control flow as the batch
-    * lifecycle, driven by micro-batches. Batch schema: (ent, vec_id,
-    * qe, label, del) — the filterable label rides every arrival into
-    * the store (r17, the co-stored-metadata contract) — with qe
-    * PRE-QUANTIZED (array<bigint>, the [[quantized]]
-    * ×1000 domain) — the stream's upstream owns the float→int
-    * quantization, which keeps drifted-arrival fixtures bit-exact
-    * across the stream/batch boundary (float addition does not commute
-    * with rounding; integer addition does). StreamingSpec proves the
-    * streamed chain ≡ the batch lifecycle's: untouched base across
-    * non-compacting batches, identical compacted store after the
-    * trigger fires. */
   /** Segment discovery over an LSM store root: the NEWEST base segment
     * (`base`, or the highest-numbered `base_cN` if compaction ran) and
-    * the live delta generation numbers in ascending order. Shared by
-    * the ingest stream, the served leg (q195), and its probe stream —
-    * every reader resolves the store's current state the same way. */
+    * the live delta generation numbers in ascending order. Every reader
+    * and writer resolves the store's current state this way. */
   private def lsmStorePaths(root: String): (String, Seq[Int]) = {
     val dirs = Option(new java.io.File(root).list()).getOrElse(Array.empty)
     require(dirs.contains("base") && dirs.contains("centroids"),
@@ -5342,13 +5431,13 @@ object Similarity {
       dirs.filter(_.startsWith("delta")).map(_.drop(5).toInt).sorted.toSeq)
   }
 
-  /** Immutable-segment row-count cache for the ingest stream legs:
-    * without it, micro-batch k re-counts all k prior delta segments
-    * plus the corpus-sized base (O(segments²) cumulative IO over a
-    * long stream — review r11). Sound because segment paths are never
-    * reused within a root: delta numbers are monotonic past every
-    * compaction ([[lsmNextSeg]]) and base segments are written once;
-    * entries are dropped when compaction deletes their segment. */
+  /** Immutable-segment row-count cache for the ingest step: without it,
+    * micro-batch k re-counts all k prior delta segments plus the
+    * corpus-sized base (O(segments²) cumulative IO over a long stream —
+    * review r11). Keyed by path alone, which is sound because delta
+    * numbers are monotonic past every compaction ([[lsmNextSeg]]) and
+    * entries are dropped when compaction deletes their segment or
+    * (re)writes a base at their path. */
   private val segCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -5388,33 +5477,22 @@ object Similarity {
     * reading (Spark refuses: "Cannot overwrite a path that is also
     * being read from") or write a LOWER-numbered base that
     * [[lsmStorePaths]]' maxBy then ignores, silently dropping the
-    * cycle's arrivals. Spec-pinned across two full cycles. */
+    * cycle's arrivals. Spec-pinned across two full cycles, per tier. */
   private def lsmNextSeg(basePath: String, prior: Seq[Int]): Int =
     (prior :+ lsmBaseIdx(basePath)).max + 1
 
+  /** q193 under STRUCTURED STREAMING — the flat store's ingest leg:
+    * each arrival micro-batch runs the lifecycle's append + trigger
+    * step ([[LsmStore.ingest]]). Batch schema: (ent, vec_id, qe, label,
+    * del) with qe PRE-QUANTIZED (array<bigint>, the [[quantized]] ×1000
+    * domain) — the stream's upstream owns the float→int quantization,
+    * which keeps drifted-arrival fixtures bit-exact across the
+    * stream/batch boundary (float addition does not commute with
+    * rounding; integer addition does). StreamingSpec proves the
+    * streamed chain ≡ the batch lifecycle's. */
   def lsmIngestStreamBatch(root: String)(batch: DataFrame,
-                                         batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val (basePath, prior) = lsmStorePaths(root)
-    val next = lsmNextSeg(basePath, prior)
-    val cents = spark.read.parquet(s"$root/centroids")
-    lsmDeltaOf(batch, cents)
-      .write.mode("overwrite").parquet(s"$root/delta$next")
-    val deltaPaths = (prior :+ next).map(i => s"$root/delta$i")
-    // memoized per immutable segment: batch k counts ONE new segment,
-    // not all k — ingest stays O(batch) as the scaladoc promises
-    val deltaRows = deltaPaths.map(p => segCount(spark, p)).sum
-    val baseRows = segCount(spark, basePath)
-    if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-      lsmWriteBase(lsmResolvedView(spark, basePath, deltaPaths),
-        root, s"$root/base_c$next")
-      deltaPaths.foreach { p =>
-        graft.FsUtil.deleteRecursively(new java.io.File(p))
-        dropSegCount(p)
-      }
-    }
-    ()
-  }
+                                         batchId: Long): Unit =
+    FlatLsm.ingest(root, batch)
 
   /** Oracle: the frozen trained-Lloyd CTE over the whole corpus, every
     * state's served view from one latest-wins window (drifted arrivals
@@ -5464,20 +5542,19 @@ object Similarity {
 
   /** q194: top-k search SERVED THROUGH THE LSM VIEW — the point of the
     * segment design: queries answer correctly against base + live
-    * deltas WITHOUT waiting for compaction. Builds the q193 seed and
-    * TWO ingest generations (cumulative 4% — deliberately below the
-    * [[LsmDeltaPct]] trigger, so the store is mid-LSM: one base + two
-    * live delta segments), then runs the q37-shaped probed-cell search
-    * against the resolved view: rank the trained cells per probe by
-    * centroid cosine at the dynamic ⌈0.13·⌈√N⌉⌉ budget, score ONLY the
-    * view rows in probed cells (the quantized vector rides with its
-    * assignment — IVF-Flat, no side lookup), top-k by quantized cosine
-    * (scale-invariant, so the ×1000 integer domain ranks identically).
-    * The oracle recomputes the g2 view from scratch (latest-wins +
-    * frozen argmin) and searches it with the same CTEs — a green hash
-    * proves the LSM-served answer ≡ a from-scratch index of the current
-    * corpus state: deletes invisible, revisions visible at their NEW
-    * cells.
+    * deltas WITHOUT waiting for compaction. Builds the mid-lifecycle
+    * store ([[LsmStore.midStoreTo]]: one base + two live delta
+    * segments, below the trigger), then runs the q37-shaped
+    * probed-cell search against the resolved view: rank the trained
+    * cells per probe by centroid cosine at the dynamic ⌈0.13·⌈√N⌉⌉
+    * budget, score ONLY the view rows in probed cells (the quantized
+    * vector rides with its assignment — IVF-Flat, no side lookup),
+    * top-k by quantized cosine (scale-invariant, so the ×1000 integer
+    * domain ranks identically). The oracle recomputes the g2 view from
+    * scratch (latest-wins + frozen argmin) and searches it with the
+    * same CTEs — a green hash proves the LSM-served answer ≡ a
+    * from-scratch index of the current corpus state: deletes invisible,
+    * revisions visible at their NEW cells.
     *
     * 100 TB shape: the base scan is cell-partition-prunable to the
     * probe budget (q187's layout); the delta contribution is a
@@ -5488,55 +5565,24 @@ object Similarity {
     val scratch =
       java.nio.file.Files.createTempDirectory("graft_lsmsrv_").toString
     try {
-      lsmMidStoreTo(embeddings, scratch)
+      FlatLsm.midStoreTo(embeddings, scratch)
       lsmServeRoot(scratch, probesFrame(embeddings, nProbes), embeddings, k)
         .localCheckpoint()
     } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
   }
 
-  /** Writes the q194/q195 MID-LIFECYCLE LSM store under `root`: the
-    * q193 seed (centroids + cell-partitioned gen-0 base) plus TWO
-    * ingest generations (cumulative 4% — deliberately below the
-    * [[LsmDeltaPct]] trigger, so the store holds one live base and two
-    * live delta segments). Shared by q194's self-contained run and
-    * q195's ServedRoots build. */
-  private[llm] def lsmMidStoreTo(embeddings: DataFrame,
-                                 root: String): Unit = {
-    val (q0, cents) = lsmSeedTo(embeddings, root)
-    for (g <- 1 to 2)
-      lsmDeltaOf(lsmArrivals(q0, g), cents)
-        .write.mode("overwrite").parquet(s"$root/delta$g")
-  }
-
-  /** The LSM serve plan over a STORED root and an arbitrary probe
-    * frame — segment discovery through [[lsmStorePaths]] (newest base +
-    * live deltas), latest-wins view resolution, then the q37-shaped
-    * probed-cell top-k over the view's co-stored quantized vectors.
-    * Shared by q194 (self-contained scratch store), q195 (ServedRoots
-    * cached store), the probe-stream legs, and the FILTERED leg (r17,
-    * VERDICT r16 missing #2): `pred` applies to the RESOLVED view —
-    * candidates only, never below the entity anti-join (the
-    * entity-stability invariant; Catalyst pushes the label predicate
-    * through the anti-join to the base scan on its own, where it rides
-    * as a pushed parquet filter on the co-stored column) — and `widen`
-    * scales the probe budget by the measured 1/selectivity, the q204
-    * discipline. */
+  /** The flat LSM serve plan over a STORED root and an arbitrary probe
+    * frame: [[LsmStore.probedView]] at the [[IvfProbeFrac]] budget,
+    * then the q37-shaped top-k over the view's co-stored quantized
+    * vectors. Shared by q194, q195, the filtered leg (q228) and the
+    * probe-stream legs. */
   private def lsmServeRoot(root: String, probes: DataFrame,
                            embeddings: DataFrame, k: Int,
                            pred: Option[Column] = None,
                            widen: Column = lit(1.0)): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val (basePath, deltas) = lsmStorePaths(root)
-    val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
-      nProbe = 0, frac = IvfProbeFrac, widen = widen))
-    // resolve ONLY the probed cells' view rows (r16): the census rides
-    // the bucket-pruned base read instead of resolving the whole
-    // corpus and discarding unprobed cells at this join
-    val resolved = lsmResolvedViewPruned(spark, root, basePath,
-      deltas.map(i => s"$root/delta$i"),
-      pcells.select(col("cell")).distinct())
-    val view = pred.map(resolved.filter).getOrElse(resolved)
+    val (pcells, cand) = FlatLsm.probedView(root, probes, embeddings,
+      IvfProbeFrac, pred, widen)
+    val view = cand
       .withColumn("qvec", transform(col("qe"), x => x.cast("double")))
       .withColumn("qn", l2norm(col("qvec")))
     val w = Window.partitionBy(col("probe_id"))
@@ -5556,54 +5602,30 @@ object Similarity {
   }
 
   /** q195: q194's search timed on its SERVE leg (oracle: q194's
-    * VERBATIM — the store≡recompute proof): the mid-lifecycle store
-    * (frozen centroids + gen-0 base + two delta segments) is built once
-    * per corpus into the [[graft.FsUtil.ServedRoots]] cache; afterwards
-    * query-time work is exactly what the LSM serving tier pays per
-    * probe batch — broadcast the √N centroids, rank cells per probe,
-    * resolve the latest-wins view (base anti-join the broadcast
-    * batch-sized delta entity set, union the newest surviving delta
-    * rows), and scan ONLY probed cells' view rows. q194 measures
-    * build+serve; this is the q187-shaped split that shows the serve
-    * cost alone — the number a 100 TB deployment pays per query batch
-    * between compactions. */
+    * VERBATIM — the store≡recompute proof): the mid-lifecycle store is
+    * built once per corpus into the [[graft.FsUtil.ServedRoots]] cache;
+    * afterwards query-time work is exactly what the LSM serving tier
+    * pays per probe batch — broadcast the √N centroids, rank cells per
+    * probe, resolve the latest-wins view of ONLY the probed cells, and
+    * score them. q194 measures build+serve; this is the q187-shaped
+    * split that shows the serve cost alone — the number a 100 TB
+    * deployment pays per query batch between compactions. */
   def lsmServed(embeddings: DataFrame, corpusTag: String,
                 nProbes: Int = 10, k: Int = 5): DataFrame =
-    lsmServeFor(probesFrame(embeddings, nProbes), embeddings, corpusTag, k)
-
-  /** The serve plan over an arbitrary probe frame — shared by q195 and
-    * the streaming leg ([[lsmServeStreamBatch]]). */
-  private def lsmServeFor(probes: DataFrame, embeddings: DataFrame,
-                          corpusTag: String, k: Int): DataFrame =
-    lsmServeRoot(
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsm:$corpusTag", embSig),
-        "graft_lsm_served_")(lsmMidStoreTo(embeddings, _)),
-      probes, embeddings, k)
+    lsmServeRoot(FlatLsm.servedRoot(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k)
 
   /** q195 under STRUCTURED STREAMING — the LSM index's online serve
     * half (with [[lsmIngestStreamBatch]] the segment store both ingests
-    * and serves continuously): probe vectors arrive as a stream and
-    * each micro-batch runs the full view-serve plan — segment
-    * discovery, latest-wins resolution, probed-cell top-k — against the
-    * SAME stored root as the batch leg, appending results to `outDir`.
-    * Per-probe results depend only on the probe row + the stored
-    * segments, so union-of-micro-batches ≡ one batch over all probes
-    * bit-for-bit (StreamingSpec proves it against q195). */
+    * and serves continuously): each probe micro-batch runs the full
+    * view-serve plan against the SAME stored root as the batch leg
+    * ([[LsmStore.serveStream]]); StreamingSpec proves it against q195
+    * bit-for-bit. */
   def lsmServeStreamBatch(embeddings: DataFrame, corpusTag: String,
                           outDir: String, k: Int = 5)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"lsm:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsm:$corpusTag", embSig),
-        "graft_lsm_served_")(lsmMidStoreTo(embeddings, _))
-    }
-    lsmServeRoot(root, probes, embeddings, k)
-      .write.mode("append").parquet(outDir)
-    ()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    FlatLsm.serveStream(embeddings, corpusTag, outDir, batch)(
+      lsmServeRoot(_, _, embeddings, k))
 
   /** q228: FILTERED LSM search — the q204 metadata-predicate discipline
     * on the segment store (r17, VERDICT r16 missing #2: the predicate +
@@ -5623,37 +5645,20 @@ object Similarity {
     // registered constants
     require(nProbes == 10 && k == 5,
       "lsmFilteredServed is oracle-gated at nProbes=10, k=5")
-    lsmFilteredServeFor(probesFrame(embeddings, nProbes), embeddings,
-      corpusTag, k)
-  }
-
-  private def lsmFilteredServeFor(probes: DataFrame, embeddings: DataFrame,
-                                  corpusTag: String, k: Int): DataFrame =
-    lsmServeRoot(
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsm:$corpusTag", embSig),
-        "graft_lsm_served_")(lsmMidStoreTo(embeddings, _)),
-      probes, embeddings, k,
+    lsmServeRoot(FlatLsm.servedRoot(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k,
       pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
+  }
 
   /** The q228 serve leg under Structured Streaming (foreachBatch) —
     * stream ≡ batch proved in StreamingSpec against
     * [[lsmFilteredServed]]'s rows. */
   def lsmFilteredServeStreamBatch(embeddings: DataFrame, corpusTag: String,
                                   outDir: String, k: Int = 5)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"lsm:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsm:$corpusTag", embSig),
-        "graft_lsm_served_")(lsmMidStoreTo(embeddings, _))
-    }
-    lsmServeRoot(root, probes, embeddings, k,
-        pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
-      .write.mode("append").parquet(outDir)
-    ()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    FlatLsm.serveStream(embeddings, corpusTag, outDir, batch)(
+      lsmServeRoot(_, _, embeddings, k,
+        pred = Some(col("label") % 2 === 0), widen = evenLabelWiden))
 
   /** q230: the filtered LSM tier's acceptance gate — recall@k of the
     * SERVED filtered LSM search (q228's store) against the FILTERED
@@ -5667,13 +5672,8 @@ object Similarity {
                         nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "lsmFilteredRecall is oracle-gated at nProbes=10, k=5")
-    val spark = embeddings.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"lsm:$corpusTag", embSig),
-      "graft_lsm_served_")(lsmMidStoreTo(embeddings, _))
-    val (basePath, deltas) = lsmStorePaths(root)
-    val view = lsmResolvedView(spark, basePath,
-        deltas.map(i => s"$root/delta$i"))
+    val view = FlatLsm.resolvedView(embeddings.sparkSession,
+        FlatLsm.servedRoot(embeddings, corpusTag), None)
       .withColumn("qvec", transform(col("qe"), x => x.cast("double")))
       .withColumn("qn", l2norm(col("qvec")))
     val probes = probesFrame(embeddings, nProbes)
@@ -5854,77 +5854,55 @@ object Similarity {
   // the O(N)/batch pattern is a cadence choice, not the only option).
   // -------------------------------------------------------------------
 
-  /** The q232 fixture's generation-g arrival band over the FLOAT
-    * corpus: entities `vec_id % 100 ∈ {g, 4}` (the q193 bands —
-    * cumulative 2/4/6% of the base, so the [[LsmDeltaPct]] trigger
-    * first fires at g3 at every corpus size), embedding drifted +0.5·g
-    * per coordinate in the FLOAT domain (the q231
-    * innocuous-double-rounding argument: binary32 add ≡ the oracle's
-    * double-add-then-cast-to-float, and the byte PACK reads floats, so
-    * the drift must live there — q193's qe-domain drift cannot feed a
-    * pack), `vec_id % 3 = 0` tombstoned. */
-  private def sq8LsmArrivals(embeddings: DataFrame, g: Int): DataFrame =
-    embeddings
-      .filter(col("vec_id") % 100 === g || col("vec_id") % 100 === 4)
-      .select(col("vec_id").as("ent"), col("vec_id"),
-        transform(col("embedding"), x => x + lit(0.5f * g)).as("embedding"),
-        col("label"), (col("vec_id") % 3 === 0).as("del"))
-
-  /** One SQ8 delta segment from an arrival frame (ent, vec_id,
-    * embedding, del): packed + frozen-assigned live arrivals (the
-    * per-row [[sq8ComposedRowsD]] kernels — batch-sized, zero base IO)
-    * plus explicit tombstone rows (packed bytes ride along for schema
-    * uniformity; cluster −1, dist 0 — the q193 tombstone shape). */
-  private def sq8LsmDeltaOf(arr: DataFrame, cents: DataFrame): DataFrame =
-    sq8ComposedRowsD(arr.filter(!col("del")), cents)
-      .join(arr.select(col("vec_id"), col("label")), "vec_id")
-      .withColumn("del", lit(false))
-      .unionByName(
-        sq8Packed(arr.filter(col("del"))
-            .select(col("vec_id"), col("embedding")))
-          .join(arr.select(col("ent"), col("vec_id"), col("label")),
-            "vec_id")
-          .select(col("ent"), col("vec_id"), col("b8"), col("nsq"),
-            lit(-1L).as("cluster"), lit(0L).as("dist"), col("label"),
-            lit(true).as("del")))
-
-  /** Seeds the SQ8 LSM store under `root`: frozen coarse centroids
-    * trained on the whole corpus, base = every vector's packed
-    * composed row plus the frozen-assignment dist (the q231 drift-audit
+  /** The packed SQ8 tier: per-row packed composed rows ([[sq8ComposedRowsD]]
+    * — 64 B/vector plus the frozen-assignment dist, the q231 drift-audit
     * term, co-stored so a production trigger reads the store, not the
-    * corpus) in the bucketed [[CellStore]] layout. Returns the stored
-    * centroids. */
-  private def sq8LsmSeedTo(embeddings: DataFrame,
-                           root: String): DataFrame = {
-    val spark = embeddings.sparkSession
-    sweepAfter(spark) {
-      val (_, cents0) =
-        trainLloyd(embeddings.select(col("vec_id"), col("embedding")))
-      cents0.write.mode("overwrite").parquet(s"$root/centroids")
-    }
-    val cents = spark.read.parquet(s"$root/centroids")
-    lsmWriteBase(
-      sq8ComposedRowsD(embeddings.select(col("vec_id").as("ent"),
-          col("vec_id"), col("embedding")), cents)
-        .join(embeddings.select(col("vec_id"), col("label")), "vec_id"),
-      root, s"$root/base")
-    cents
-  }
+    * corpus) with the co-stored label. Arrivals drift +0.5·d per
+    * coordinate in the FLOAT domain (the q231 innocuous-double-rounding
+    * argument: binary32 add ≡ the oracle's double-add-then-cast-to-
+    * float, and the byte PACK reads floats, so the drift must live
+    * there — the flat tier's qe-domain drift cannot feed a pack).
+    * Tombstone rows carry their packed bytes for schema uniformity
+    * (cluster −1, dist 0). The extra audit term is the summed int64
+    * self-dots — the pack-sensitive term: a mis-packed byte anywhere in
+    * the resolved view moves it. */
+  private[llm] val Sq8Lsm: LsmStore = new LsmStore(LsmCodec(
+    tag = "sq8lsm",
+    payload = Seq("b8", "nsq", "label"),
+    seed = (embeddings, root, tables) => {
+      lsmTrainTo(embeddings, root)
+      lsmWriteBase(
+        sq8ComposedRowsD(embeddings.select(col("vec_id").as("ent"),
+            col("vec_id"), col("embedding")), tables("centroids"))
+          .join(embeddings.select(col("vec_id"), col("label")), "vec_id"),
+        root, s"$root/base")
+    },
+    arrivals = (corpus, d) => corpus
+      .select(col("vec_id").as("ent"), col("vec_id"),
+        transform(col("embedding"), x => x + lit(0.5f * d)).as("embedding"),
+        col("label")),
+    deltaOf = (arr, tables) =>
+      sq8ComposedRowsD(arr.filter(!col("del")), tables("centroids"))
+        .join(arr.select(col("vec_id"), col("label")), "vec_id")
+        .withColumn("del", lit(false))
+        .unionByName(
+          sq8Packed(arr.filter(col("del"))
+              .select(col("vec_id"), col("embedding")))
+            .join(arr.select(col("ent"), col("vec_id"), col("label")),
+              "vec_id")
+            .select(col("ent"), col("vec_id"), col("b8"), col("nsq"),
+              lit(-1L).as("cluster"), lit(0L).as("dist"), col("label"),
+              lit(true).as("del"))),
+    auditSums = Seq(sum(col("nsq")).as("nsq_sum"))))
 
-  /** q232: the SQ8 LSM INGEST LIFECYCLE — append-only packed delta
-    * segments + latest-wins reads + the [[LsmDeltaPct]] compaction
-    * trigger, on the 64 B/vector packed row shape. Ingest cost is
-    * O(batch): one segment write of (ent, vec_id, b8, nsq, cluster,
-    * dist, del) rows, the base untouched (vs q225, whose every
-    * generation rewrites the surviving index — O(N) bytes per batch).
-    * Output: one audit row per state g0..g3 + post-compaction g3c over
-    * the SERVED VIEW (rows/entities/cells, delta-row count, compacted
-    * flag, the cluster-sensitive checksum, and the summed int64
-    * self-dots — the pack-sensitive term: a mis-packed byte anywhere
-    * in the resolved view moves it). The oracle recomputes every
-    * state's view from scratch — frozen trained-Lloyd CTE, FLOAT-domain
-    * drifted latest-wins, per-vector argmin, per-row re-pack — and
-    * emits g3c behind the same integer trigger predicate: a green hash
+  /** q232: the SQ8 LSM INGEST LIFECYCLE — [[LsmStore.indexTo]] on the
+    * packed codec ([[Sq8Lsm]]). Ingest cost is O(batch): one segment
+    * write of (ent, vec_id, b8, nsq, cluster, dist, label, del) rows,
+    * the base untouched (vs q225, whose every generation rewrites the
+    * surviving index — O(N) bytes per batch). Audit rows add `nsq_sum`
+    * to the q193 columns; the oracle recomputes every state's view from
+    * scratch — frozen trained-Lloyd CTE, FLOAT-domain drifted
+    * latest-wins, per-vector argmin, per-row re-pack — so a green hash
     * proves packed-view-over-deltas ≡ from-scratch rebuild at every
     * generation AND across the compaction boundary.
     *
@@ -5944,173 +5922,62 @@ object Similarity {
     * and StreamingSpec can compare the streamed store byte-for-byte. */
   private[graft] def sq8LsmIndexTo(embeddings: DataFrame, root: String,
                                    onState: String => Unit = _ => ())
-      : DataFrame = {
-    val spark = embeddings.sparkSession
-    val cents = sq8LsmSeedTo(embeddings, root)
-    var basePath = s"$root/base"
-    var deltaPaths = Vector.empty[String]
-    // label rides the payload so compaction carries the filterable
-    // attribute through (the q228 co-stored-metadata contract)
-    def view(): DataFrame = lsmResolvedView(spark, basePath, deltaPaths,
-      payload = Seq("b8", "nsq", "label"))
-    def audit(state: String, nDelta: Long, compacted: Long): DataFrame =
-      view()
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("ent")).as("n_ents"),
-          countDistinct(col("cluster")).as("n_cells"),
-          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-            .as("checksum"),
-          sum(col("nsq")).as("nsq_sum"))
-        .select(lit(state).as("state"), col("n_rows"), col("n_ents"),
-          col("n_cells"), lit(nDelta).as("n_delta"),
-          lit(compacted).as("compacted"), col("checksum"),
-          col("nsq_sum"))
-        .localCheckpoint()
-    var baseRows = graft.FsUtil.parquetRowCount(spark, basePath)
-    // the fires-first-at-g3 contract needs the integer bands to round
-    // cleanly — same floor as q193 (review r11)
-    require(baseRows >= 100,
-      s"sq8LsmIndex: fixture needs >= 100 vectors (got $baseRows) " +
-        "for the oracle's fires-first-at-g3 trigger contract to hold")
-    var deltaRows = 0L
-    val audits = scala.collection.mutable.ArrayBuffer(audit("g0", 0L, 0L))
-    onState("g0")
-    for (g <- 1 to 3) {
-      val p = s"$root/delta$g"
-      sq8LsmDeltaOf(sq8LsmArrivals(embeddings, g), cents)
-        .write.mode("overwrite").parquet(p)
-      deltaPaths :+= p
-      deltaRows += graft.FsUtil.parquetRowCount(spark, p)
-      audits += audit(s"g$g", deltaRows, 0L)
-      onState(s"g$g")
-      if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-        val np = s"$root/base_c$g"
-        lsmWriteBase(view(), root, np)
-        deltaPaths.foreach(d =>
-          graft.FsUtil.deleteRecursively(new java.io.File(d)))
-        deltaPaths = Vector.empty
-        basePath = np
-        baseRows = graft.FsUtil.parquetRowCount(spark, np)
-        deltaRows = 0L
-        audits += audit(s"g${g}c", 0L, 1L)
-        onState(s"g${g}c")
-      }
-    }
-    audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-  }
+      : DataFrame =
+    Sq8Lsm.indexTo(embeddings, root, onState)
 
   /** The q232 ingest leg under Structured Streaming (foreachBatch):
     * arrival micro-batches (ent, vec_id, embedding, label, del) with
     * FLOAT embeddings — the pack IS the quantization here and runs per-row
     * deterministically at build and ingest alike, so no upstream
-    * quantization seam exists (the generic tier's qe-domain contract
-    * guards a seam the packed tier doesn't have). Each batch appends
-    * ONE delta segment, checks the [[LsmDeltaPct]] trigger against the
-    * CURRENT base and, on fire, compacts — the batch lifecycle's
-    * control flow driven by micro-batches; stream ≡ batch proved in
+    * quantization seam exists (the flat tier's qe-domain contract
+    * guards a seam the packed tier doesn't have). Each batch runs the
+    * lifecycle's append + trigger step; stream ≡ batch proved in
     * StreamingSpec. */
   def sq8LsmIngestStreamBatch(root: String)(batch: DataFrame,
-                                            batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val (basePath, prior) = lsmStorePaths(root)
-    val next = lsmNextSeg(basePath, prior)
-    val cents = spark.read.parquet(s"$root/centroids")
-    sq8LsmDeltaOf(batch, cents)
-      .write.mode("overwrite").parquet(s"$root/delta$next")
-    val deltaPaths = (prior :+ next).map(i => s"$root/delta$i")
-    val deltaRows = deltaPaths.map(p => segCount(spark, p)).sum
-    val baseRows = segCount(spark, basePath)
-    if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-      lsmWriteBase(lsmResolvedView(spark, basePath, deltaPaths,
-        payload = Seq("b8", "nsq", "label")), root, s"$root/base_c$next")
-      for (p <- deltaPaths) {
-        graft.FsUtil.deleteRecursively(new java.io.File(p))
-        dropSegCount(p)
-      }
-    }
-    ()
-  }
-
-  /** Writes the q233 MID-LIFECYCLE SQ8 LSM store under `root`: the
-    * seed (centroids + bucketed packed base) plus TWO arrival
-    * generations (cumulative 4% — below the trigger, so the store
-    * holds one live base and two live delta segments). */
-  private[llm] def sq8LsmMidStoreTo(embeddings: DataFrame,
-                                    root: String): Unit = {
-    val cents = sq8LsmSeedTo(embeddings, root)
-    for (g <- 1 to 2)
-      sq8LsmDeltaOf(sq8LsmArrivals(embeddings, g), cents)
-        .write.mode("overwrite").parquet(s"$root/delta$g")
-  }
+                                            batchId: Long): Unit =
+    Sq8Lsm.ingest(root, batch)
 
   /** q233: byte-kernel top-k SERVED through the SQ8 LSM view — the
     * point of the packed segment store: queries answer against base +
     * live deltas without waiting for compaction, at the composed tier's
     * scan cost. Probes rank the frozen centroids at the
     * [[IvfPqProbeFrac]]·⌈√N⌉ packed-tier budget, the view resolves
-    * ONLY the probed cells' rows ([[lsmResolvedViewPruned]] — the base
-    * read prunes via the bucket-keyed DPP semi-join, the delta leg by
-    * the same census after its latest-wins window, the anti-join on
-    * the UNFILTERED delta entity set), and the probed rows stream
-    * through the q213 byte kernel. The oracle recomputes the g2 view
-    * from scratch and unrolls the identical scan — deletes invisible,
-    * revisions scored at their CURRENT packed bytes in their NEW
-    * cells. */
+    * ONLY the probed cells' rows ([[LsmStore.probedView]]), and the
+    * probed rows stream through the q213 byte kernel. The oracle
+    * recomputes the g2 view from scratch and unrolls the identical
+    * scan — deletes invisible, revisions scored at their CURRENT packed
+    * bytes in their NEW cells. */
   def sq8LsmServed(embeddings: DataFrame, corpusTag: String,
                    nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "sq8LsmServed is oracle-gated at nProbes=10, k=5")
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"sq8lsm:$corpusTag", embSig),
-      "graft_sq8lsm_served_")(sq8LsmMidStoreTo(embeddings, _))
-    sq8LsmServeRoot(root, probesFrame(embeddings, nProbes), embeddings, k)
+    sq8LsmServeRoot(Sq8Lsm.servedRoot(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k)
   }
 
   /** The SQ8 LSM serve plan over a stored root and an arbitrary probe
-    * frame. `pred` applies to the RESOLVED view's candidates only —
-    * never below the entity anti-join (the entity-stability
-    * invariant), and BEFORE the byte-kernel rank join, so ineligible
-    * packed rows never reach the kernel; `widen` scales the probed-cell
-    * budget by the measured 1/selectivity (the q204/q228 discipline). */
+    * frame: the filtered leg's `pred` drops candidates BEFORE the
+    * byte-kernel rank join, so ineligible packed rows never reach the
+    * kernel. */
   private def sq8LsmServeRoot(root: String, probes: DataFrame,
                               embeddings: DataFrame, k: Int,
                               pred: Option[Column] = None,
                               widen: Column = lit(1.0)): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val (basePath, deltas) = lsmStorePaths(root)
-    val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
-      nProbe = 0, frac = IvfPqProbeFrac, widen = widen))
-    val resolved = lsmResolvedViewPruned(spark, root, basePath,
-      deltas.map(i => s"$root/delta$i"),
-      pcells.select(col("cell")).distinct(),
-      payload = Seq("b8", "nsq", "label"))
-    val view = pred.map(resolved.filter).getOrElse(resolved)
+    val (pcells, view) = Sq8Lsm.probedView(root, probes, embeddings,
+      IvfPqProbeFrac, pred, widen)
     ivfSq8Rank(pcells,
       view.select(col("vec_id"), col("b8"), col("nsq"),
         col("cluster")), k)
   }
 
   /** The q233 serve leg under Structured Streaming (foreachBatch):
-    * probe vectors arrive as micro-batches and each runs the identical
-    * pruned-view byte-kernel scan against the SAME stored root as the
-    * batch leg. Per-probe results depend only on the probe row + the
-    * stored segments, so union-of-micro-batches ≡ one batch —
-    * StreamingSpec proves it against [[sq8LsmServed]]'s rows. */
+    * StreamingSpec proves union-of-micro-batches ≡ [[sq8LsmServed]]'s
+    * rows. */
   def sq8LsmServeStreamBatch(embeddings: DataFrame, corpusTag: String,
                              outDir: String, k: Int = 5)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"sq8lsm:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"sq8lsm:$corpusTag", embSig),
-        "graft_sq8lsm_served_")(sq8LsmMidStoreTo(embeddings, _))
-    }
-    sq8LsmServeRoot(root, probes, embeddings, k)
-      .write.mode("append").parquet(outDir)
-    ()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    Sq8Lsm.serveStream(embeddings, corpusTag, outDir, batch)(
+      sq8LsmServeRoot(_, _, embeddings, k))
 
   /** q234: FILTERED search on the SQ8 LSM tier — the q204/q228
     * metadata-predicate discipline on the packed segment store,
@@ -6128,10 +5995,8 @@ object Similarity {
                            nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "sq8LsmFilteredServed is oracle-gated at nProbes=10, k=5")
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"sq8lsm:$corpusTag", embSig),
-      "graft_sq8lsm_served_")(sq8LsmMidStoreTo(embeddings, _))
-    sq8LsmServeRoot(root, probesFrame(embeddings, nProbes), embeddings, k,
+    sq8LsmServeRoot(Sq8Lsm.servedRoot(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k,
       pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
   }
 
@@ -6152,7 +6017,7 @@ object Similarity {
     val bs0 = embeddings.select(lit(0).as("b"), col("vec_id").as("ent"),
       col("vec_id"), col("embedding"), col("label"),
       lit(false).as("del"))
-    val al = (1 to 2).map(g => sq8LsmArrivals(embeddings, g)
+    val al = (1 to 2).map(g => Sq8Lsm.band(embeddings, g)
         .withColumn("b", lit(g))
         .select(col("b"), col("ent"), col("vec_id"), col("embedding"),
           col("label"), col("del")))
@@ -6451,7 +6316,7 @@ object Similarity {
   // -------------------------------------------------------------------
 
   /** One composed store row per vector of a pre-quantized (ent, vec_id,
-    * qe) frame against BOTH frozen quantizers: coarse cell + dist
+    * qe, label) frame against BOTH frozen quantizers: coarse cell + dist
     * ([[frozenAssignQ]]) and the m=16 codeword array in subspace order
     * ([[frozenEncodeQ]] collapsed per vector) — with the quantized
     * vector CO-STORED (the q193 IVF-Flat discipline: the store is also
@@ -6470,62 +6335,54 @@ object Similarity {
       .select(col("ent"), col("vec_id"), col("cluster"), col("dist"),
         col("qe"), col("cws"), col("label"))
 
-  /** One composed delta segment from an arrival frame (ent, vec_id, qe,
-    * label, del): composed rows for the live arrivals plus explicit
-    * tombstone rows — the [[lsmDeltaOf]] shape carrying the codeword
-    * array and the co-stored label. */
-  private def lsmComposedDeltaOf(arr: DataFrame, cents: DataFrame,
-                                 cb: DataFrame): DataFrame =
-    composedRowsQ(arr.filter(!col("del")), cents, cb)
-      .withColumn("del", lit(false))
-      .unionByName(arr.filter(col("del"))
-        .select(col("ent"), col("vec_id"), lit(-1L).as("cluster"),
-          lit(0L).as("dist"), col("qe"),
-          lit(null).cast("array<bigint>").as("cws"), col("label"),
-          lit(true).as("del")))
-
-  /** Trains BOTH quantizers on the gen-0 corpus, freezes them as stored
-    * tables, and writes the cell-partitioned gen-0 base of composed
-    * rows. Returns the quantized corpus frame (the delta fixtures'
-    * source) and the two stored quantizer frames. */
-  private def lsmComposedSeedTo(embeddings: DataFrame, root: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val spark = embeddings.sparkSession
-    sweepAfter(spark) {
-      val (_, cents0) =
-        trainLloyd(embeddings.select(col("vec_id"), col("embedding")))
-      cents0.write.mode("overwrite").parquet(s"$root/centroids")
-      trainPqCodebook(embeddings)
-        .write.mode("overwrite").parquet(s"$root/codebook")
-    }
-    val cents = spark.read.parquet(s"$root/centroids")
-    val cb = spark.read.parquet(s"$root/codebook")
-    val q0 = quantized(embeddings.select(col("vec_id"), col("embedding")), 1000)
-      .join(embeddings.select(col("vec_id"), col("label")), "vec_id")
-    lsmWriteBase(
-      composedRowsQ(
-        q0.select(col("vec_id").as("ent"), col("vec_id"), col("qe"),
-          col("label")),
-        cents, cb),
-      root, s"$root/base")
-    (q0, cents, cb)
-  }
+  /** The composed (IVF-PQ) tier: both quantizers trained on generation
+    * 0 and FROZEN (q190's contract) as stored tables, store rows from
+    * [[composedRowsQ]], arrivals in the flat tier's integer domain,
+    * tombstones with a null codeword array. The extra audit term is the
+    * positional codeword checksum over the served view's encodings. */
+  private[llm] val ComposedLsm: LsmStore = new LsmStore(LsmCodec(
+    tag = "lsmc",
+    payload = Seq("qe", "cws", "label"),
+    seed = (embeddings, root, tables) => {
+      lsmTrainTo(embeddings, root)
+      sweepAfter(embeddings.sparkSession) {
+        trainPqCodebook(embeddings)
+          .write.mode("overwrite").parquet(s"$root/codebook")
+      }
+      lsmWriteBase(
+        composedRowsQ(
+          lsmQuantized(embeddings).select(col("vec_id").as("ent"),
+            col("vec_id"), col("qe"), col("label")),
+          tables("centroids"), tables("codebook")),
+        root, s"$root/base")
+    },
+    arrivals = lsmQeArrivals,
+    deltaOf = (arr, tables) =>
+      composedRowsQ(arr.filter(!col("del")), tables("centroids"),
+          tables("codebook"))
+        .withColumn("del", lit(false))
+        .unionByName(arr.filter(col("del"))
+          .select(col("ent"), col("vec_id"), lit(-1L).as("cluster"),
+            lit(0L).as("dist"), col("qe"),
+            lit(null).cast("array<bigint>").as("cws"), col("label"),
+            lit(true).as("del"))),
+    auditSums = Seq(sum(aggregate(
+      transform(col("cws"), (cw, m) => col("vec_id") * 1000000L +
+        col("cluster") * 4096L + m * 256L + cw),
+      lit(0L), (a, b) => a + b)).as("enc_checksum"))))
 
   /** q196: the LSM segment store for the COMPOSED index — q193's
-    * append-only lifecycle carried to the production serving tier's row
-    * shape. Both quantizers are trained on generation 0 and FROZEN
-    * (q190's contract); each arrival batch lands as ONE delta segment
-    * of composed rows — coarse assignment + 16 frozen codewords +
-    * co-stored quantized vector, batch-sized kernels, zero base IO —
-    * and the cell-partitioned base (q187's inverted-list layout, with
-    * the vector riding along) is rewritten only by trigger-scheduled
-    * compaction ([[LsmDeltaPct]], fires at g3 on the 2/4/6% fixture at
-    * every corpus size). Audit rows carry the q193 view identity
-    * columns PLUS `enc_checksum` — the positional codeword checksum
-    * over the served view's encodings — so a green hash proves the
-    * incrementally-ingested COMPRESSED index ≡ a from-scratch
-    * assign+encode of every state's latest-wins corpus, across the
-    * compaction boundary too.
+    * append-only lifecycle ([[LsmStore.indexTo]]) carried to the
+    * production serving tier's row shape ([[ComposedLsm]]): each
+    * arrival batch lands as ONE delta segment of composed rows —
+    * coarse assignment + 16 frozen codewords + co-stored quantized
+    * vector, batch-sized kernels, zero base IO — and the
+    * cell-partitioned base (q187's inverted-list layout, with the
+    * vector riding along) is rewritten only by trigger-scheduled
+    * compaction. Audit rows carry the q193 view identity columns PLUS
+    * `enc_checksum`, so a green hash proves the incrementally-ingested
+    * COMPRESSED index ≡ a from-scratch assign+encode of every state's
+    * latest-wins corpus, across the compaction boundary too.
     *
     * 100 TB shape: ingest cost is O(batch) against two broadcast
     * quantizers (√N·8 B centroids + ~256 KB codebook); serve cost is
@@ -6545,104 +6402,17 @@ object Similarity {
   private[graft] def lsmComposedIndexTo(embeddings: DataFrame,
                                         root: String,
                                         onState: String => Unit = _ => ())
-      : DataFrame = {
-    val spark = embeddings.sparkSession
-    val (q0, cents, cb) = lsmComposedSeedTo(embeddings, root)
-    var basePath = s"$root/base"
-    var deltaPaths = Vector.empty[String]
-    def view(): DataFrame = lsmResolvedView(spark, basePath, deltaPaths,
-      payload = Seq("qe", "cws", "label"))
-    def audit(state: String, nDelta: Long, compacted: Long): DataFrame = {
-      val v = view()
-      val enc = v.select(col("vec_id"), col("cluster"),
-          posexplode(col("cws")).as(Seq("m", "cw")))
-        .agg(sum(col("vec_id") * 1000000L + col("cluster") * 4096L +
-          col("m") * 256L + col("cw")).as("enc_checksum"))
-      v.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("ent")).as("n_ents"),
-          countDistinct(col("cluster")).as("n_cells"),
-          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-            .as("checksum"))
-        .crossJoin(broadcast(enc))
-        .select(lit(state).as("state"), col("n_rows"), col("n_ents"),
-          col("n_cells"), lit(nDelta).as("n_delta"),
-          lit(compacted).as("compacted"), col("checksum"),
-          col("enc_checksum"))
-        .localCheckpoint()
-    }
-    var baseRows = graft.FsUtil.parquetRowCount(spark, basePath)
-    // same small-N oracle contract as lsmVectorIndexTo (review r11)
-    require(baseRows >= 100,
-      s"lsmComposedIndex: fixture needs >= 100 vectors (got $baseRows) " +
-        "for the oracle's fires-first-at-g3 trigger contract to hold")
-    var deltaRows = 0L
-    val audits = scala.collection.mutable.ArrayBuffer(audit("g0", 0L, 0L))
-    onState("g0")
-    for (g <- 1 to 3) {
-      val p = s"$root/delta$g"
-      lsmComposedDeltaOf(lsmArrivals(q0, g), cents, cb)
-        .write.mode("overwrite").parquet(p)
-      deltaPaths :+= p
-      deltaRows += graft.FsUtil.parquetRowCount(spark, p)
-      audits += audit(s"g$g", deltaRows, 0L)
-      onState(s"g$g")
-      if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-        val np = s"$root/base_c$g"
-        lsmWriteBase(view(), root, np)
-        deltaPaths.foreach(d =>
-          graft.FsUtil.deleteRecursively(new java.io.File(d)))
-        deltaPaths = Vector.empty
-        basePath = np
-        // re-anchor on the compacted base, as the stream leg does
-        baseRows = graft.FsUtil.parquetRowCount(spark, np)
-        deltaRows = 0L
-        audits += audit(s"g${g}c", 0L, 1L)
-        onState(s"g${g}c")
-      }
-    }
-    audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-  }
+      : DataFrame =
+    ComposedLsm.indexTo(embeddings, root, onState)
 
   /** q196 under STRUCTURED STREAMING — [[lsmIngestStreamBatch]] for the
     * composed store: each arrival micro-batch (ent, vec_id, qe
-    * PRE-QUANTIZED, label, del) appends one composed delta segment through the
-    * frozen stored quantizers, then compacts behind the same trigger.
-    * StreamingSpec proves the streamed chain ≡ the batch lifecycle's. */
+    * PRE-QUANTIZED, label, del) runs the lifecycle's append + trigger
+    * step through the frozen stored quantizers. StreamingSpec proves
+    * the streamed chain ≡ the batch lifecycle's. */
   def lsmComposedIngestStreamBatch(root: String)(batch: DataFrame,
-                                                 batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val (basePath, prior) = lsmStorePaths(root)
-    val next = lsmNextSeg(basePath, prior)
-    val cents = spark.read.parquet(s"$root/centroids")
-    val cb = spark.read.parquet(s"$root/codebook")
-    lsmComposedDeltaOf(batch, cents, cb)
-      .write.mode("overwrite").parquet(s"$root/delta$next")
-    val deltaPaths = (prior :+ next).map(i => s"$root/delta$i")
-    val deltaRows = deltaPaths.map(p => segCount(spark, p)).sum
-    val baseRows = segCount(spark, basePath)
-    if (deltaRows * 100L > baseRows * LsmDeltaPct) {
-      lsmWriteBase(
-        lsmResolvedView(spark, basePath, deltaPaths,
-          payload = Seq("qe", "cws", "label")),
-        root, s"$root/base_c$next")
-      deltaPaths.foreach { p =>
-        graft.FsUtil.deleteRecursively(new java.io.File(p))
-        dropSegCount(p)
-      }
-    }
-    ()
-  }
-
-  /** Writes the q197 mid-lifecycle composed store (seed + two delta
-    * segments, below the trigger) — q194's fixture over composed
-    * rows. */
-  private[llm] def lsmComposedMidStoreTo(embeddings: DataFrame,
-                                         root: String): Unit = {
-    val (q0, cents, cb) = lsmComposedSeedTo(embeddings, root)
-    for (g <- 1 to 2)
-      lsmComposedDeltaOf(lsmArrivals(q0, g), cents, cb)
-        .write.mode("overwrite").parquet(s"$root/delta$g")
-  }
+                                                 batchId: Long): Unit =
+    ComposedLsm.ingest(root, batch)
 
   /** q197: the q186-shaped ADC + fixed-R-refine search SERVED THROUGH
     * the composed LSM view mid-lifecycle — the production serving tier
@@ -6662,17 +6432,16 @@ object Similarity {
     val scratch =
       java.nio.file.Files.createTempDirectory("graft_lsmcsrv_").toString
     try {
-      lsmComposedMidStoreTo(embeddings, scratch)
+      ComposedLsm.midStoreTo(embeddings, scratch)
       lsmComposedServeRoot(scratch, probesFrame(embeddings, nProbes),
         embeddings, k).localCheckpoint()
     } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
   }
 
   /** The composed-view serve plan over a STORED root and an arbitrary
-    * probe frame — [[lsmServeRoot]]'s discovery + resolution with the
-    * hybrid's three-stage tail. `pred`/`widen` are the filtered leg's
-    * (r17): the predicate applies to the RESOLVED view before decode —
-    * candidates at the packed rows, never below the entity anti-join —
+    * probe frame — [[LsmStore.probedView]] with the hybrid's
+    * three-stage tail. The filtered leg's predicate (r17) applies to
+    * the RESOLVED view before decode — candidates at the packed rows —
     * so ineligible rows never reach the ADC kernel, and every shortlist
     * member (hence the refine) is eligible by construction. */
   private def lsmComposedServeRoot(root: String, probes: DataFrame,
@@ -6680,23 +6449,16 @@ object Similarity {
                                    k: Int,
                                    pred: Option[Column] = None,
                                    widen: Column = lit(1.0)): DataFrame = {
-    val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val cb = spark.read.parquet(s"$root/codebook")
-    val (basePath, deltas) = lsmStorePaths(root)
-    val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
-      nProbe = 0, frac = IvfPqProbeFrac, widen = widen))
     // prune FIRST, decode after (the q187 discipline): the probed-cell
     // census rides the bucket-pruned base read inside the resolution
     // (r16), so only probed cells' rows are resolved, exploded or
     // decoded
-    val resolved = lsmResolvedViewPruned(spark, root, basePath,
-      deltas.map(i => s"$root/delta$i"),
-      pcells.select(col("cell")).distinct(), payload = Seq("qe", "cws", "label"))
-    val pruned = pred.map(resolved.filter).getOrElse(resolved)
+    val (pcells, pruned) = ComposedLsm.probedView(root, probes, embeddings,
+      IvfPqProbeFrac, pred, widen)
     val labeled = pqDecodeLabeled(
       pruned.select(col("vec_id"), col("cluster"),
-        posexplode(col("cws")).as(Seq("m", "cw"))), cb)
+        posexplode(col("cws")).as(Seq("m", "cw"))),
+      embeddings.sparkSession.read.parquet(s"$root/codebook"))
     val shortlist = adcShortlist(pcells, labeled, RegisteredFixedR)
     // exact refine against the view's co-stored CURRENT vectors —
     // built from the PRUNED frame: every shortlist vec_id lives in a
@@ -6729,37 +6491,17 @@ object Similarity {
     * the fixed R against the co-stored vectors. */
   def lsmComposedServeSplit(embeddings: DataFrame, corpusTag: String,
                             nProbes: Int = 10, k: Int = 5): DataFrame =
-    lsmComposedServeFor(probesFrame(embeddings, nProbes), embeddings,
-      corpusTag, k)
-
-  /** The composed serve plan over an arbitrary probe frame — shared by
-    * q198 and its probe-stream leg ([[lsmComposedServeStreamBatch]]). */
-  private def lsmComposedServeFor(probes: DataFrame, embeddings: DataFrame,
-                                  corpusTag: String, k: Int): DataFrame =
-    lsmComposedServeRoot(
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsmc:$corpusTag", embSig),
-        "graft_lsmc_served_")(lsmComposedMidStoreTo(embeddings, _)),
-      probes, embeddings, k)
+    lsmComposedServeRoot(ComposedLsm.servedRoot(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k)
 
   /** q198 under STRUCTURED STREAMING: probe micro-batches served from
-    * the SAME stored composed root as the batch leg — per-probe results
-    * depend only on the probe row + the stored segments, so
-    * union-of-micro-batches ≡ one batch (StreamingSpec). */
+    * the SAME stored composed root as the batch leg — union-of-
+    * micro-batches ≡ one batch (StreamingSpec). */
   def lsmComposedServeStreamBatch(embeddings: DataFrame, corpusTag: String,
                                   outDir: String, k: Int = 5)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"lsmc:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsmc:$corpusTag", embSig),
-        "graft_lsmc_served_")(lsmComposedMidStoreTo(embeddings, _))
-    }
-    lsmComposedServeRoot(root, probes, embeddings, k)
-      .write.mode("append").parquet(outDir)
-    ()
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    ComposedLsm.serveStream(embeddings, corpusTag, outDir, batch)(
+      lsmComposedServeRoot(_, _, embeddings, k))
 
   /** q229: FILTERED composed-LSM search — the q228 predicate + widening
     * discipline on the composed segment store (the last serving tier
@@ -6777,10 +6519,7 @@ object Similarity {
     // registered constants
     require(nProbes == 10 && k == 5,
       "lsmComposedFilteredServed is oracle-gated at nProbes=10, k=5")
-    lsmComposedServeRoot(
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"lsmc:$corpusTag", embSig),
-        "graft_lsmc_served_")(lsmComposedMidStoreTo(embeddings, _)),
+    lsmComposedServeRoot(ComposedLsm.servedRoot(embeddings, corpusTag),
       probesFrame(embeddings, nProbes), embeddings, k,
       pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
   }

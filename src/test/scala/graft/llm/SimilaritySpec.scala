@@ -659,51 +659,52 @@ class SimilaritySpec extends SparkSpec {
     } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
   }
 
-  test("lsm ingest survives a SECOND compaction cycle: segment numbers " +
-      "never collide with the compacted base and no arrivals are lost") {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(spark, sf)
-    val root =
-      java.nio.file.Files.createTempDirectory("graft_lsm2c_").toString
-    try {
-      // cycle 1: the batch lifecycle ends compacted into base_c3
-      Similarity.lsmVectorIndexTo(emb, root)
-      assert(new java.io.File(s"$root/base_c3").exists())
-      // cycle 2: three more ingest batches driven directly through the
-      // stream body — the same bands re-arriving with a deeper drift
-      def arrivals(g: Int) = emb
-        .filter(col("vec_id") % 100 === g || col("vec_id") % 100 === 4)
-        .select(col("vec_id").as("ent"), col("vec_id"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 1000).cast("long") +
-              lit(500L * (g + 3))).as("qe"),
-          col("label"), (col("vec_id") % 3 === 0).as("del"))
-      for (g <- 1 to 3)
-        Similarity.lsmIngestStreamBatch(root)(arrivals(g), g.toLong)
-      // deltas numbered ABOVE the base index (4, 5, 6); the second
-      // compaction landed in base_c6, not on top of base_c3
-      assert(new java.io.File(s"$root/base_c6").exists(),
-        "second compaction did not land above the current base index")
-      assert(!new java.io.File(s"$root/delta4").exists() &&
-        !new java.io.File(s"$root/delta1").exists(),
-        "second compaction did not clear its delta segments")
-      // entity accounting: final base = base_c3's entities, minus the
-      // cycle's tombstones, with re-arrived live entities retained
-      val before = spark.read.parquet(s"$root/base_c3")
-        .select(col("ent")).distinct().collect().map(_.getLong(0)).toSet
-      val arr = (1 to 3).flatMap(g => arrivals(g)
-        .select(col("ent"), col("del")).collect()
-        .map(r => (r.getLong(0), r.getBoolean(1), g)))
-      val lastState = arr.groupBy(_._1)
-        .map { case (e, rows) => e -> rows.maxBy(_._3)._2 }
-      val expected =
-        (before -- lastState.keySet) ++ lastState.filter(!_._2).keys
-      val after = spark.read.parquet(s"$root/base_c6")
-        .select(col("ent")).distinct().collect().map(_.getLong(0)).toSet
-      assert(after === expected,
-        "second compaction lost or revived entities")
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(root))
-  }
+  // one body, every codec: the segment numbering and the second
+  // compaction cycle are store mechanics the tiers share
+  for (store <- Seq(Similarity.FlatLsm, Similarity.Sq8Lsm,
+      Similarity.ComposedLsm))
+    test(s"lsm ingest survives a SECOND compaction cycle " +
+        s"(${store.codec.tag} codec): segment numbers never collide with " +
+        "the compacted base and no arrivals are lost") {
+      import org.apache.spark.sql.functions._
+      val emb = Tables.embeddings(spark, sf)
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft_${store.codec.tag}2c_").toString
+      try {
+        // cycle 1: the batch lifecycle ends compacted into base_c3
+        store.indexTo(emb, root, _ => ())
+        assert(new java.io.File(s"$root/base_c3").exists())
+        // cycle 2: three more ingest batches driven directly through the
+        // stream step — the same bands re-arriving with a deeper drift
+        def arrivals(g: Int) = store.codec
+          .arrivals(emb.filter(
+            col("vec_id") % 100 === g || col("vec_id") % 100 === 4), g + 3)
+          .withColumn("del", col("vec_id") % 3 === 0)
+        for (g <- 1 to 3) store.ingest(root, arrivals(g))
+        // deltas numbered ABOVE the base index (4, 5, 6); the second
+        // compaction landed in base_c6, not on top of base_c3
+        assert(new java.io.File(s"$root/base_c6").exists(),
+          "second compaction did not land above the current base index")
+        assert(!new java.io.File(s"$root/delta4").exists() &&
+          !new java.io.File(s"$root/delta1").exists(),
+          "second compaction did not clear its delta segments")
+        // entity accounting: final base = base_c3's entities, minus the
+        // cycle's tombstones, with re-arrived live entities retained
+        val before = spark.read.parquet(s"$root/base_c3")
+          .select(col("ent")).distinct().collect().map(_.getLong(0)).toSet
+        val arr = (1 to 3).flatMap(g => arrivals(g)
+          .select(col("ent"), col("del")).collect()
+          .map(r => (r.getLong(0), r.getBoolean(1), g)))
+        val lastState = arr.groupBy(_._1)
+          .map { case (e, rows) => e -> rows.maxBy(_._3)._2 }
+        val expected =
+          (before -- lastState.keySet) ++ lastState.filter(!_._2).keys
+        val after = spark.read.parquet(s"$root/base_c6")
+          .select(col("ent")).distinct().collect().map(_.getLong(0)).toSet
+        assert(after === expected,
+          "second compaction lost or revived entities")
+      } finally graft.FsUtil.deleteRecursively(new java.io.File(root))
+    }
 
   test("lsm composed index (q196): ingest never touches the base; " +
       "compaction preserves view AND encodings; tombstones drop") {
