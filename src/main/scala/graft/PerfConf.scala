@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared harness-session performance settings (OPTIMIZATION_r17.md),
-  * applied by Bench and Verify on top of the driver contract's
-  * `local[$SPARK_GRAFT_CPUS]` / `shuffle.partitions = cpus` base. Every
-  * setting here is scale-honest — it either matches what a production
-  * deployment already does or adapts with input size; none bakes in a
-  * fixture-size assumption:
+  * applied by Bench, Verify, Profile and PlanSnap on top of the driver
+  * contract's `local[$SPARK_GRAFT_CPUS]` / `shuffle.partitions = cpus`
+  * base. Every setting here is scale-honest — it either matches what a
+  * production deployment already does or adapts with input size; none
+  * bakes in a fixture-size assumption:
   *
   *  - `spark.sql.codegen.cache.maxEntries` (default 100): the 241-query
   *    suite generates thousands of distinct whole-stage-codegen units

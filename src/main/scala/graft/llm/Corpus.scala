@@ -1498,13 +1498,7 @@ object Corpus {
   private[graft] def fpIndexStreamBatch(root: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val gens = Option(new java.io.File(root).list()).getOrElse(Array.empty)
-      .filter(_.startsWith("gen")).map(_.drop(3).toInt)
-    // an opaque `empty.max` here would surface mid-stream (ADVICE r10)
-    require(gens.nonEmpty,
-      s"fpIndexStreamBatch: no genN directory under $root — " +
-        "writeFpGen0 must seed the index before the stream starts")
-    val cur = gens.max
+    val cur = Similarity.nextGen(root) - 1
     val stored = spark.read.parquet(s"$root/gen$cur")
     val surv = batch.select(col("doc_id"), normFp.as("fp"))
       .join(stored.select(col("fp")).distinct(), Seq("fp"), "left_anti")
@@ -1592,11 +1586,19 @@ object Corpus {
       |  CAST(sum(inh) AS BIGINT) AS n_inherited
       |FROM kb GROUP BY 1 ORDER BY split""".stripMargin
 
+  /** q181's generation store ([[Similarity.GenStore]]): fingerprints are
+    * stored as they arrive — no quantizer tables, identity encoder. */
+  private[graft] lazy val FpGen: Similarity.GenStore =
+    new Similarity.GenStore(Similarity.GenEncoder(
+      id = "doc_id", domain = "fp", arrival = normFp,
+      train = _ => Nil,
+      encode = (v, _) => v.select(col("ent"), col("doc_id"), col("fp"))))
+
   /** q181: MULTI-GENERATION index lifecycle — q176's generation update
     * composed with the q148 latest-wins CDC discipline over 4
-    * generations of interleaved adds, updates and DELETES (VERDICT r8
-    * Next #5 — the compaction a daily pipeline needs once documents are
-    * revised, not just added). The fixture models an entity stream:
+    * generations of interleaved adds, updates and DELETES (the
+    * compaction a daily pipeline needs once documents are revised, not
+    * just added), on [[FpGen]]. The fixture models an entity stream:
     * ent = ⌊doc_id/4⌋ is the stable key, batch b = doc_id % 4 is the
     * arrival generation (so an entity can be touched up to 4 times,
     * each arrival carrying a new fingerprint), and doc_id % 7 == 0
@@ -1616,38 +1618,16 @@ object Corpus {
     * keys — an anti-join on ent plus an append of the batch's
     * survivors; document bodies are read once per batch for
     * fingerprinting and never again. */
-  def indexLifecycle(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    val scratch = java.nio.file.Files.createTempDirectory("graft_genidx_").toString
-    try {
-      val base = documents.select(
-        floor(col("doc_id") / 4).cast("long").as("ent"),
-        col("doc_id"), (col("doc_id") % 4).as("b"),
-        normFp.as("fp"), (col("doc_id") % 7 === 0).as("del"))
-      base.filter(col("b") === 0 && !col("del"))
-        .select(col("ent"), col("doc_id"), col("fp"))
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(batch.filter(!col("del"))
-            .select(col("ent"), col("doc_id"), col("fp")))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      val audits = (0 to 3).map { g =>
-        spark.read.parquet(s"$scratch/gen$g")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("ent")).as("n_ents"),
-            sum(col("ent") * 100000L + col("doc_id") +
-              conv(substring(col("fp"), 1, 8), 16, 10).cast("long"))
-              .as("checksum"))
-          .select(lit(s"g$g").as("state"), col("n_rows"), col("n_ents"),
-            col("checksum"))
-      }
-      audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+  def indexLifecycle(documents: DataFrame): DataFrame =
+    FpGen.inScratch { root =>
+      FpGen.lifecycleTo(root, FpGen.band(documents))
+      FpGen.audit(documents.sparkSession, root, Similarity.GenStates, Seq(
+        count(lit(1)).as("n_rows"),
+        countDistinct(col("ent")).as("n_ents"),
+        sum(col("ent") * 100000L + col("doc_id") +
+          conv(substring(col("fp"), 1, 8), 16, 10).cast("long"))
+          .as("checksum")))
+    }
 
   /** Oracle: every generation recomputed from scratch — one latest-wins
     * window (max batch per entity among batches ≤ g, tombstones drop)

@@ -2348,111 +2348,42 @@ object Similarity {
       |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
 
   // -----------------------------------------------------------------
-  // q225/q226: SQ8-family ingest lifecycle (VERDICT r15 missing #3 —
-  // every other index family had generations/tombstones; the packed
-  // tier had none)
+  // q225/q226/q231: the SQ8 family on the generation store ([[Sq8Gen]],
+  // [[Sq8RtGen]]) — generations and tombstones for the packed tier
   // -----------------------------------------------------------------
 
-  /** The q184 entity/arrival fixture band: entities of four versions
-    * (ent = vec_id/4, version b = vec_id%4), gen-0 indexes the b=0
-    * rows, batch g re-writes each entity with its b=g row, vec_id%7=0
-    * arrivals are tombstones. */
-  private def sq8ArrivalBand(embeddings: DataFrame): DataFrame =
-    embeddings.select(
-      floor(col("vec_id") / 4).cast("long").as("ent"),
-      col("vec_id"), (col("vec_id") % 4).as("b"),
-      col("embedding"), (col("vec_id") % 7 === 0).as("del"))
-
-  /** One composed store row per live arrival: the frozen-coarse argmin
-    * (the q184/q190 frozen-quantizer contract — arrivals are assigned
-    * by the STORED centroids, training never re-runs on ingest) plus
-    * the q213 per-row SQ8 pack — (ent, vec_id, b8, nsq, cluster).
-    * Batch-sized kernels only: quantize, one broadcast-centroid argmin,
-    * one pack pass. */
+  /** One packed SQ8 store row per vector of an (ent, vec_id, embedding)
+    * frame: the q213 per-row pack plus the frozen-coarse argmin against
+    * the STORED centroids (arrivals are assigned, training never re-runs
+    * on ingest) and its distance, the drift-audit term — (ent, vec_id,
+    * b8, nsq, cluster, dist). Batch-sized kernels only: one pack pass,
+    * one broadcast-centroid argmin. */
   private def sq8ComposedRows(vecs: DataFrame,
-                              cents: DataFrame): DataFrame = {
-    val asg = quantized(vecs.select(col("vec_id"), col("embedding")), 1000)
-      .crossJoin(broadcast(cents))
-      .withColumn("d2", graft.functions.VectorFunctions.longSqDist(
-        col("qe"), col("ce")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("d2"), col("cluster"))).as("mm"))
-      .select(col("vec_id"), col("mm.cluster").as("cluster"))
+                              cents: DataFrame): DataFrame =
     sq8Packed(vecs.select(col("vec_id"), col("embedding")))
-      .join(asg, "vec_id")
-      .join(vecs.select(col("ent"), col("vec_id")), "vec_id")
+      .join(frozenAssignQ(qeRows(vecs), cents), "vec_id")
       .select(col("ent"), col("vec_id"), col("b8"), col("nsq"),
-        col("cluster"))
-  }
+        col("cluster"), col("dist"))
 
-  /** Seeds the SQ8 lifecycle store under `root`: frozen coarse
-    * centroids trained on the gen-0 live set, then `gen0` — the packed
-    * composed rows. */
-  private[graft] def sq8SeedTo(embeddings: DataFrame, root: String): Unit = {
-    val spark = embeddings.sparkSession
-    val live0 = sq8ArrivalBand(embeddings)
-      .filter(col("b") === 0 && !col("del"))
-    sweepAfter(spark) {
-      val (_, cents) =
-        trainLloyd(live0.select(col("vec_id"), col("embedding")))
-      cents.write.mode("overwrite").parquet(s"$root/centroids")
-    }
-    sq8ComposedRows(live0, spark.read.parquet(s"$root/centroids"))
-      .write.mode("overwrite").parquet(s"$root/gen0")
-  }
-
-  /** One arrival batch (ent, vec_id, embedding, del) merged into the
-    * packed store as generation `g`: live arrivals PACK per batch
-    * (idempotent per-row — bit-identical to a build-time pack), the
-    * entity anti-join retires every re-written entity's old row, and
-    * tombstoned entities simply do not re-enter (the q184 merge
-    * discipline on the packed row shape). The batch side broadcasts;
-    * the survivor scan is one map-side pass. */
-  private[llm] def sq8IngestBatch(spark: org.apache.spark.sql.SparkSession,
-                                  root: String, batch: DataFrame,
-                                  g: Long): Unit = {
-    val cents = spark.read.parquet(s"$root/centroids")
-    val prev = spark.read.parquet(s"$root/gen${g - 1}")
-    prev.join(broadcast(batch.select(col("ent")).distinct()),
-        Seq("ent"), "left_anti")
-      .unionByName(sq8ComposedRows(batch.filter(!col("del")), cents))
-      .write.mode("overwrite").parquet(s"$root/gen$g")
-  }
-
-  /** The next generation number under a lifecycle root (gen dirs are
-    * never reused — the lsmStorePaths discipline). */
-  private def sq8NextGen(root: String): Long = {
-    val gens = Option(new java.io.File(root).list()).getOrElse(Array.empty)
-      .filter(_.matches("gen\\d+")).map(_.drop(3).toLong)
-    require(gens.nonEmpty, s"SQ8 lifecycle store not seeded under $root")
-    gens.max + 1
-  }
+  /** Seeds the q225 store under `root`: frozen coarse centroids trained
+    * on the gen-0 live set, then `gen0`. */
+  private[graft] def sq8SeedTo(embeddings: DataFrame, root: String): Unit =
+    Sq8Gen.seedTo(root, Sq8Gen.band(embeddings))
 
   /** The q225 ingest leg under Structured Streaming (foreachBatch):
     * arrival micro-batches (ent, vec_id, embedding, del) merge into the
-    * CURRENT store state through the identical per-batch pack +
-    * anti-join — stream ≡ batch proved in StreamingSpec against the
-    * batch lifecycle's final generation. */
+    * CURRENT store state as its next generation, through the batch
+    * chain's own merge — stream ≡ batch (StreamingSpec). */
   def sq8IngestStreamBatch(root: String)(batch: DataFrame,
-                                         batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    sq8IngestBatch(spark, root, batch, sq8NextGen(root))
-  }
+                                         batchId: Long): Unit =
+    Sq8Gen.ingest(root, batch)
 
   /** The full q225 chain against `root`: seed + three arrival
     * generations. Shared by the audit query, the served leg's
     * ServedRoots build and the StreamingSpec batch reference. */
   private[graft] def sq8LifecycleTo(embeddings: DataFrame,
-                                  root: String): Unit = {
-    val spark = embeddings.sparkSession
-    sq8SeedTo(embeddings, root)
-    val band = sq8ArrivalBand(embeddings)
-    for (g <- 1 to 3)
-      sq8IngestBatch(spark, root,
-        band.filter(col("b") === g)
-          .select(col("ent"), col("vec_id"), col("embedding"), col("del")),
-        g.toLong)
-  }
+                                  root: String): Unit =
+    Sq8Gen.lifecycleTo(root, Sq8Gen.band(embeddings))
 
   /** q225: the SQ8-family INGEST LIFECYCLE audit — the q184 discipline
     * on the packed composed store (pack + frozen-coarse assignment per
@@ -2466,34 +2397,17 @@ object Similarity {
     *
     * 100 TB shape: per batch the work is batch-sized kernels (pack +
     * broadcast argmin) plus one map-side survivor pass; nothing
-    * re-trains, nothing shuffles the corpus. Honest caveat: like q184,
-    * each generation REWRITES the surviving index rows (O(N) bytes per
-    * batch, map-side) — right for daily-batch cadences; at high batch
-    * rates the q193 delta-segment pattern (append-only deltas +
-    * latest-wins reads + triggered compaction) is the drop-in
-    * alternative, already built for the flat and composed vector
-    * tiers. A drift-triggered re-pack would compose exactly like
-    * q188's retrain (the pack is deterministic given vectors:
-    * re-run [[sq8SeedTo]] over the live set). */
-  def sq8IndexLifecycle(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_sq8gen_").toString
-    try {
-      sq8LifecycleTo(embeddings, scratch)
-      (0 to 3).map { g =>
-        spark.read.parquet(s"$scratch/gen$g")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("ent")).as("n_ents"),
-            countDistinct(col("cluster")).as("n_cells"),
-            sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-              .as("checksum"),
-            sum(col("nsq")).as("nsq_sum"))
-          .select(lit(s"g$g").as("state"), col("n_rows"), col("n_ents"),
-            col("n_cells"), col("checksum"), col("nsq_sum"))
-      }.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+    * re-trains, nothing shuffles the corpus. Like q184, each generation
+    * REWRITES the surviving index rows (O(N) bytes per batch) — at high
+    * batch rates the delta-segment store (q232) is the alternative. A
+    * drift-triggered re-pack composes exactly like q188's retrain
+    * (q231). */
+  def sq8IndexLifecycle(embeddings: DataFrame): DataFrame =
+    Sq8Gen.inScratch { root =>
+      sq8LifecycleTo(embeddings, root)
+      Sq8Gen.audit(embeddings.sparkSession, root, GenStates,
+        cellAudit :+ sum(col("nsq")).as("nsq_sum"))
+    }
 
   /** q226: the SQ8 lifecycle's SERVE leg — the FINAL store state
     * (gen3) served through the composed scan: the registered probes
@@ -2514,7 +2428,7 @@ object Similarity {
       corpusKey(embeddings, "vec_id", s"sq8lc:$corpusTag", embSig),
       "graft_sq8lc_served_")(sq8LifecycleTo(embeddings, _))
     val cents = spark.read.parquet(s"$root/centroids")
-    val live0 = sq8ArrivalBand(embeddings)
+    val live0 = Sq8Gen.band(embeddings)
       .filter(col("b") === 0 && !col("del"))
       .select(col("vec_id"), col("embedding"))
     val pcells = broadcast(probeCellsFor(probesFrame(embeddings, nProbes),
@@ -2631,51 +2545,31 @@ object Similarity {
       |SELECT probe_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rnk
       |FROM r WHERE rnk <= 5 ORDER BY probe_id, rnk""".stripMargin
 
-  /** The q231 retrain chain's store row: the q225 packed composed row
-    * PLUS the frozen-coarse assignment distance — the drift audit term
-    * the production store drops (q184's `dist` discipline on the packed
-    * shape). Pack and argmin are the identical per-row kernels; only
-    * the projection differs. */
-  private def sq8ComposedRowsD(vecs: DataFrame,
-                               cents: DataFrame): DataFrame =
-    sq8Packed(vecs.select(col("vec_id"), col("embedding")))
-      .join(frozenAssignQ(
-        quantized(vecs.select(col("vec_id"), col("embedding")), 1000)
-          .join(vecs.select(col("ent"), col("vec_id")), "vec_id"),
-        cents), "vec_id")
-      .select(col("ent"), col("vec_id"), col("b8"), col("nsq"),
-        col("cluster"), col("dist"))
-
-  /** q231: the SQ8 lifecycle's DRIFT-TRIGGERED RETRAIN, exercised
-    * (VERDICT r16 missing #3 — q225 carries the frozen-coarse machinery
-    * a drift trigger would read, but until the firing branch runs once,
-    * "retrain" is a scaladoc, not a capability; q188 is the precedent).
-    * Same entity stream as q225, except the generation-3 arrivals
-    * DRIFT: +2.0 on every float coordinate, applied in the FLOAT domain
-    * (binary32 add — which is EXACTLY the oracle's double-add rounded
-    * to float: double carries ≥ 2·24+2 significand bits, so the double
-    * rounding is innocuous and both engines produce bit-identical
+  /** q231: the SQ8 lifecycle's DRIFT-TRIGGERED RETRAIN, exercised (q225
+    * carries the frozen-coarse machinery a drift trigger reads; until
+    * the firing branch runs once, "retrain" is not a capability; q188 is
+    * the precedent). Same entity stream as q225, except the generation-3
+    * arrivals DRIFT: +2.0 on every float coordinate, applied in the FLOAT
+    * domain (binary32 add — which is EXACTLY the oracle's double-add
+    * rounded to float: double carries ≥ 2·24+2 significand bits, so the
+    * double rounding is innocuous and both engines produce bit-identical
     * drifted vectors; the quantize and pack chains then read the same
     * floats). The frozen gen-0 coarse codebook misfits the drifted g3
-    * live set, the mean assignment distance blows past the 120%
+    * live set, the mean assignment distance blows past the
     * [[retrainTrigger]] threshold, and the operator RETRAINS: a fresh
-    * dynamic-⌈√N⌉ 4-round Lloyd codebook over the CURRENT (drifted)
-    * live set, then a full RE-PACK + reassignment stored as `g3r` —
-    * "a re-pack IS [[sq8SeedTo]] over the live set" (the q225 scaladoc's
-    * promise, now an exercised branch): the pack is per-row
-    * deterministic given vectors, so g3r's packed bytes equal g3's
-    * (the nsq_sum audit column pins exactly that) while every cluster
-    * re-assigns and mean_dist collapses back to baseline scale.
+    * dynamic-⌈√N⌉ 4-round Lloyd codebook over the CURRENT (drifted) live
+    * set, then a full RE-PACK + reassignment stored as `g3r`: the pack is
+    * per-row deterministic given vectors, so g3r's packed bytes equal
+    * g3's (the nsq_sum audit column pins exactly that) while every
+    * cluster re-assigns and mean_dist collapses back to baseline scale.
     *
     * Output: q225's audit schema over g0..g3 plus the post-retrain g3r
     * row, extended with the per-generation mean assignment distance
-    * (co-stored on the retrain chain's rows — [[sq8ComposedRowsD]])
-    * and the fired-trigger flag. The oracle recomputes every
-    * generation's live set, assignment, pack AND the retrain training
-    * rounds from scratch — a green hash proves the stored retrained
-    * packed index ≡ a from-scratch rebuild through the retrain
-    * boundary: the q188 contract extended to the SQ8 family, closing
-    * the last index family without an exercised retrain.
+    * (co-stored on this store's rows — [[sq8ComposedRows]]) and the
+    * fired-trigger flag. The oracle recomputes every generation's live
+    * set, assignment, pack AND the retrain training rounds from scratch
+    * — a green hash proves the stored retrained packed index ≡ a
+    * from-scratch rebuild through the retrain boundary.
     *
     * 100 TB shape: everything q225 does, plus one Lloyd training over
     * the live corpus at retrain time — the amortized cost the trigger
@@ -2683,84 +2577,10 @@ object Similarity {
     * rows (64 B/vector out), the trigger read is a 1-row aggregate per
     * generation over the stored audit term, and nothing else touches
     * the corpus. */
-  def sq8IndexRetrain(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_sq8rt_").toString
-    try {
-      // drifted fixture: q225's arrival band, +2.0f per coordinate on
-      // the b=3 arrivals (float-exact on both engines — see scaladoc)
-      val band = sq8ArrivalBand(embeddings)
-        .withColumn("embedding", when(col("b") === 3,
-          transform(col("embedding"), x => x + lit(2.0f)))
-          .otherwise(col("embedding")))
-      val live0 = band.filter(col("b") === 0 && !col("del"))
-      sweepAfter(spark) {
-        val (_, cents) =
-          trainLloyd(live0.select(col("vec_id"), col("embedding")))
-        cents.write.mode("overwrite").parquet(s"$scratch/centroids")
-      }
-      val frozen = spark.read.parquet(s"$scratch/centroids")
-      sq8ComposedRowsD(live0, frozen)
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = band.filter(col("b") === g)
-        prev.join(broadcast(batch.select(col("ent")).distinct()),
-            Seq("ent"), "left_anti")
-          .unionByName(sq8ComposedRowsD(batch.filter(!col("del")), frozen))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      def meanOf(gen: String): Long =
-        spark.read.parquet(s"$scratch/$gen")
-          .agg(floor(sum(col("dist")) / count(lit(1))).cast("long")).head()
-          .getLong(0)
-      val baseMean = meanOf("gen0")
-      require(retrainTrigger(meanOf("gen3"), baseMean),
-        "q231's drifted fixture must fire the retrain trigger — the " +
-          "undrifted path is q225's")
-      // THE RETRAIN LEG: fresh dynamic-⌈√N⌉ 4-round Lloyd over the
-      // drifted live set (the q188 trainer, mirrored by
-      // lloydRoundsCte("rt") in the oracle), then full re-pack +
-      // reassignment against the new centroids
-      val live3 = band
-        .join(spark.read.parquet(s"$scratch/gen3").select(col("vec_id")),
-          "vec_id")
-        .select(col("ent"), col("vec_id"), col("embedding"))
-      sweepAfter(spark) {
-        // checkpointed: the unrolled 4-round DAG re-reads it ~10 times
-        val lq = quantized(live3.select(col("vec_id"), col("embedding")),
-          1000).localCheckpoint()
-        lloydTrainCentsQ(lq, 0, 4, 64)
-          .write.mode("overwrite").parquet(s"$scratch/centroids_rt")
-      }
-      sq8ComposedRowsD(live3,
-          spark.read.parquet(s"$scratch/centroids_rt"))
-        .write.mode("overwrite").parquet(s"$scratch/gen3r")
-      def auditOf(tbl: DataFrame, state: String): DataFrame =
-        tbl.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("ent")).as("n_ents"),
-          countDistinct(col("cluster")).as("n_cells"),
-          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-            .as("checksum"),
-          sum(col("nsq")).as("nsq_sum"),
-          floor(sum(col("dist")) / count(lit(1))).cast("long")
-            .as("mean_dist"))
-          .select(lit(state).as("state"), col("n_rows"), col("n_ents"),
-            col("n_cells"), col("checksum"), col("nsq_sum"),
-            col("mean_dist"))
-      val audits = ((0 to 3).map(g =>
-        auditOf(spark.read.parquet(s"$scratch/gen$g"), s"g$g")) :+
-        auditOf(spark.read.parquet(s"$scratch/gen3r"), "g3r"))
-        .reduce(_ unionAll _)
-      audits
-        .withColumn("retrain",
-          when(col("mean_dist") * lit(100L) > lit(baseMean) * lit(120L),
-            1L).otherwise(0L))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+  def sq8IndexRetrain(embeddings: DataFrame): DataFrame =
+    coarseRetrain(Sq8RtGen, embeddings, transform(_, x => x + lit(2.0f)),
+      cellAudit ++ Seq(sum(col("nsq")).as("nsq_sum"),
+        floorMean("dist").as("mean_dist")), "q231", "q225")
 
   /** Oracle for [[sq8IndexRetrain]]: q225's from-scratch recompute over
     * the DRIFTED embedding view (float-exact drift on the b=3 rows),
@@ -2918,8 +2738,13 @@ object Similarity {
   private[llm] def trainPqCodebook(embeddings: DataFrame, m: Int = 16,
                                    kCw: Int = 256, iters: Int = 2,
                                    dim: Int = 64): DataFrame =
+    trainPqCodebookQ(quantized(embeddings, 1000), m, kCw, iters, dim)
+
+  /** [[trainPqCodebook]] over an ALREADY-quantized (vec_id, qe) frame. */
+  private def trainPqCodebookQ(q: DataFrame, m: Int = 16, kCw: Int = 256,
+                               iters: Int = 2, dim: Int = 64): DataFrame =
     pqTrainLoop(
-      pqSubRows(embeddings, m, dim, sampled = true)
+      pqSubRowsQ(q, m, dim, sampled = true)
         .localCheckpoint(), // consumed by every assign + recompute round
       m, kCw, iters, dim)
       .localCheckpoint()
@@ -3560,9 +3385,11 @@ object Similarity {
     * the Lloyd paths): exact integer distances, so assignment is
     * bit-identical across engines and partitionings. */
   private[llm] def quantized(embeddings: DataFrame, scale: Int): DataFrame =
-    embeddings.select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * scale).cast("long")).as("qe"))
+    embeddings.select(col("vec_id"), qeOf(col("embedding"), scale).as("qe"))
+
+  /** [[quantized]]'s kernel over one float-array column. */
+  private[llm] def qeOf(e: Column, scale: Int = 1000): Column =
+    transform(e, x => round(x.cast("double") * scale).cast("long"))
 
   /** One-round argmin assignment of a pre-quantized batch against a
     * FROZEN stored centroid table — the lifecycle families' shared
@@ -4027,39 +3854,21 @@ object Similarity {
   /** q190 under STRUCTURED STREAMING — the composed index's INGEST
     * half (the [[Corpus.fpIndexStreamBatch]] pattern carried to the
     * production ANN tier): entity arrivals land as micro-batches, and
-    * each batch is a read-modify-write over the stored root's newest
-    * generation — batch entities anti-join out their old rows,
-    * non-tombstone arrivals run [[composedIndexRows]] against the
-    * FROZEN stored quantizers, and the merge lands as gen(N+1). With
-    * [[ivfPqStreamBatch]] on the serve side, the composed index now
-    * both ingests and serves continuously. Batch schema: (ent, vec_id,
+    * each batch is merged into the stored root's newest generation
+    * against the FROZEN stored quantizers, landing as gen(N+1) — the
+    * batch chain's own merge ([[GenStore.merge]]). With
+    * [[ivfPqStreamBatch]] on the serve side, the composed index both
+    * ingests and serves continuously. Batch schema: (ent, vec_id,
     * embedding, del); the first-arrival-wins caveat of the fp stream
     * does not arise — entity merges are whole-batch anti-joins, so the
     * contract is per-batch latest-wins, identical to the batch
-    * lifecycle's. StreamingSpec proves streamed generations ≡ the
-    * batch lifecycle's chain bit-for-bit. */
+    * lifecycle's (StreamingSpec). */
   def ivfPqIngestStreamBatch(root: String)(batch: DataFrame,
-                                           batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val gens = Option(new java.io.File(root).list()).getOrElse(Array.empty)
-      .filter(_.startsWith("gen")).map(_.drop(3).toInt)
-    // fail fast with the precondition's name, not an `empty.max`
-    // (the ADVICE-r10 fpIndexStreamBatch lesson)
-    require(gens.nonEmpty,
-      s"ivfPqIngestStreamBatch: no genN directory under $root — the " +
-        "lifecycle build must seed gen0 before the stream starts")
-    val cur = gens.max
-    val stored = spark.read.parquet(s"$root/gen$cur")
-    val cents = spark.read.parquet(s"$root/centroids")
-    val cb = spark.read.parquet(s"$root/codebook")
-    val vecs = batch.filter(!col("del")).select(col("ent"), col("vec_id"))
-      .join(quantized(batch.select(col("vec_id"), col("embedding")), 1000),
-        "vec_id")
-    stored.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-      .unionByName(composedIndexRows(vecs, cents, cb))
-      .write.mode("overwrite").parquet(s"$root/gen${cur + 1}")
-    ()
-  }
+                                           batchId: Long): Unit =
+    IvfPqGen.ingest(root, batch)
+
+  /** The retrain threshold, in percent of the baseline mean. */
+  private[llm] final val RetrainPct = 120
 
   /** Drift/retrain decision for the vector-index lifecycle (q184): a
     * frozen codebook goes stale as the corpus drifts, and the measured
@@ -4071,29 +3880,51 @@ object Similarity {
     * oracle-mirrored. (Cell-size skew is the other standard trigger;
     * the audit's n_cells column carries the collapse signal for it.) */
   private[llm] def retrainTrigger(meanDist: Long, baseMeanDist: Long,
-                                  thresholdPct: Int = 120): Boolean =
+                                  thresholdPct: Int = RetrainPct): Boolean =
     meanDist * 100L > baseMeanDist * thresholdPct.toLong
 
-  /** q184: MULTI-GENERATION vector-index lifecycle (VERDICT r9 Next #4
-    * — q181's merge discipline composed with q174's stored tables). The
-    * fixture models an entity stream over the embedding corpus:
-    * ent = ⌊vec_id/4⌋ is the stable key, b = vec_id % 4 the arrival
-    * generation, vec_id % 7 == 0 a tombstone. The coarse codebook is
-    * trained ONCE on the generation-0 live corpus and FROZEN (the
-    * production posture: retraining per batch would re-cluster the
-    * whole corpus daily); every stored row is the one-round int64
-    * argmin of its vector against the stored centroids — including
-    * generation 0, whose training-time assignment is discarded so the
-    * invariant "row = assignment against the FINAL centroids" holds
-    * uniformly and incremental-append ≡ from-scratch-recompute by
-    * construction. Each later generation is a read-modify-write on the
-    * STORED previous generation: batch entities anti-join out their old
-    * rows, non-tombstone arrivals are encoded against the frozen
-    * centroids and appended — never a recompute from history.
+  /** [[retrainTrigger]] at [[RetrainPct]] as a 0/1 audit column. */
+  private def retrainFlag(mean: Column, base: Column): Column =
+    when(mean * lit(100L) > base * lit(RetrainPct.toLong), 1L).otherwise(0L)
+
+  /** The g0 audit row's `mean` as a broadcast 1-row baseline `as`. */
+  private def g0Base(a: DataFrame, mean: String, as: String): DataFrame =
+    broadcast(a.filter(col("state") === "g0").select(col(mean).as(as)))
+
+  /** q188/q231's retrain chain: the drifted lifecycle, the coarse trigger
+    * required to fire at g3 against gen0's mean assignment distance (a
+    * driver-side scalar, the one decision a lifecycle composite makes),
+    * the retrain leg, and the audits flagged against that baseline. */
+  private def coarseRetrain(store: GenStore, embeddings: DataFrame,
+                            shift: Column => Column, aggs: Seq[Column],
+                            query: String, undrifted: String): DataFrame =
+    store.inScratch { root =>
+      val spark = embeddings.sparkSession
+      val band = store.drifted(embeddings, shift)
+      store.lifecycleTo(root, band)
+      def meanDist(gen: String) =
+        floorMeanOf(spark.read.parquet(s"$root/$gen"), "dist")
+      val baseMean = meanDist("gen0")
+      require(retrainTrigger(meanDist("gen3"), baseMean),
+        s"$query's drifted fixture must fire the retrain trigger — the " +
+          s"undrifted path is $undrifted's")
+      store.retrainTo(root, band)
+      store.audit(spark, root, GenStates :+ "g3r", aggs,
+        _.withColumn("retrain", retrainFlag(col("mean_dist"), lit(baseMean))))
+    }
+
+  /** q184: MULTI-GENERATION vector-index lifecycle — q181's merge
+    * discipline composed with q174's stored tables, on [[IvfGen]]. The
+    * coarse codebook is trained ONCE on the generation-0 live corpus and
+    * FROZEN; every stored row is the one-round int64 argmin of its vector
+    * against the stored centroids — including generation 0, whose
+    * training-time assignment is discarded so the invariant "row =
+    * assignment against the FINAL centroids" holds uniformly and
+    * incremental-append ≡ from-scratch-recompute by construction.
     *
     * Output: one audit row per stored generation read back from parquet
     * (rows, entities, occupied cells, checksum, mean assignment
-    * distance) plus the [[retrainTrigger]] decision at 120% of gen-0's
+    * distance) plus the [[retrainTrigger]] decision against gen-0's
     * mean. The oracle recomputes every generation from scratch (frozen
     * centroids from the unrolled trained-Lloyd CTE over the gen-0 live
     * subset, latest-wins window, per-vector argmin), so a green hash
@@ -4104,71 +3935,20 @@ object Similarity {
     * longs only; the batch encode is a broadcast-centroid argmin over
     * the ARRIVALS alone (never the corpus), and the drift signal is a
     * 1-row aggregate per generation. */
-  def vectorIndexLifecycle(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_vecgen_").toString
-    try {
-      val base = embeddings.select(
-        floor(col("vec_id") / 4).cast("long").as("ent"),
-        col("vec_id"), (col("vec_id") % 4).as("b"),
-        col("embedding"), (col("vec_id") % 7 === 0).as("del"))
-      val live0 = base.filter(col("b") === 0 && !col("del"))
-        .select(col("vec_id"), col("embedding"))
-      sweepAfter(spark) {
-        val (_, cents) = trainLloyd(live0)
-        cents.write.mode("overwrite").parquet(s"$scratch/centroids")
-      }
-      val stored = spark.read.parquet(s"$scratch/centroids")
-      // one-round argmin against the frozen stored centroids — the
-      // lloydAssign kernel shape (broadcast centroids, codegen'd int64
-      // distance, partial-agg min-of-struct)
-      def assignAll(vecs: DataFrame): DataFrame =
-        quantized(vecs.select(col("vec_id"), col("embedding")), 1000)
-          .crossJoin(broadcast(stored))
-          .withColumn("d2", graft.functions.VectorFunctions.longSqDist(
-            col("qe"), col("ce")))
-          .groupBy(col("vec_id"))
-          .agg(min(struct(col("d2"), col("cluster"))).as("mm"))
-          .join(vecs.select(col("ent"), col("vec_id")), "vec_id")
-          .select(col("ent"), col("vec_id"),
-            col("mm.cluster").as("cluster"), col("mm.d2").as("dist"))
-      assignAll(base.filter(col("b") === 0 && !col("del")))
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(assignAll(batch.filter(!col("del"))))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      val audits = (0 to 3).map { g =>
-        spark.read.parquet(s"$scratch/gen$g")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("ent")).as("n_ents"),
-            countDistinct(col("cluster")).as("n_cells"),
-            sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-              .as("checksum"),
-            floor(sum(col("dist")) / count(lit(1))).cast("long")
-              .as("mean_dist"))
-          .select(lit(s"g$g").as("state"), col("n_rows"), col("n_ents"),
-            col("n_cells"), col("checksum"), col("mean_dist"))
-      }
-      // checkpoint before the double consumption (union + the gen-0
-      // baseline row the trigger compares against)
-      val a = audits.reduce(_ unionAll _).localCheckpoint()
-      val baseMean = broadcast(a.filter(col("state") === "g0")
-        .select(col("mean_dist").as("base_mean")))
-      a.crossJoin(baseMean)
-        .withColumn("retrain",
-          when(col("mean_dist") * lit(100L) > col("base_mean") * lit(120L),
-            1L).otherwise(0L))
-        .select(col("state"), col("n_rows"), col("n_ents"), col("n_cells"),
-          col("checksum"), col("mean_dist"), col("retrain"))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+  def vectorIndexLifecycle(embeddings: DataFrame): DataFrame =
+    IvfGen.inScratch { root =>
+      IvfGen.lifecycleTo(root, IvfGen.band(embeddings))
+      IvfGen.audit(embeddings.sparkSession, root, GenStates,
+        cellAudit :+ floorMean("dist").as("mean_dist"), a => {
+          // checkpointed before the double consumption (the rows + the
+          // gen-0 baseline row the trigger compares against)
+          val c = a.localCheckpoint()
+          c.crossJoin(g0Base(c, "mean_dist", "base_mean"))
+            .withColumn("retrain",
+              retrainFlag(col("mean_dist"), col("base_mean")))
+            .drop("base_mean")
+        })
+    }
 
   /** Oracle: frozen centroids from the unrolled trained-Lloyd CTE over
     * the gen-0 live subset, then every generation's live set from one
@@ -4205,16 +3985,15 @@ object Similarity {
       |       THEN 1 ELSE 0 END AS BIGINT) AS retrain
       |FROM ag ORDER BY state""".stripMargin
 
-  /** q188: the q184 lifecycle's RETRAIN PATH, exercised (VERDICT r10
-    * #3 — until this leg runs once, "drift-triggered retrain" is a
-    * boolean, not a capability). Same entity stream as q184, except the
-    * generation-3 arrivals DRIFT: +2000 milli-units on every
-    * coordinate, applied in the integer domain after quantization
-    * (deterministic and oracle-exact — no float rounding seam). The
-    * frozen gen-0 codebook then misfits the g3 live set, the mean
-    * assignment distance blows past the 120% [[retrainTrigger]]
-    * threshold, and — THE NEW LEG — the operator reads the fired
-    * trigger and RETRAINS: a fresh dynamic-k 4-round Lloyd codebook
+  /** q188: the q184 lifecycle's RETRAIN PATH, exercised (until this leg
+    * runs once, "drift-triggered retrain" is a boolean, not a
+    * capability). Same entity stream as q184, except the generation-3
+    * arrivals DRIFT: +2000 milli-units on every coordinate, applied in
+    * the integer domain after quantization (deterministic and
+    * oracle-exact — no float rounding seam). The frozen gen-0 codebook
+    * then misfits the g3 live set, the mean assignment distance blows
+    * past the [[retrainTrigger]] threshold, and the operator reads the
+    * fired trigger and RETRAINS: a fresh dynamic-k 4-round Lloyd codebook
     * over the CURRENT (drifted) live set, full reassignment against the
     * new centroids, stored as generation `g3r`. Output is q184's audit
     * schema over g0..g3 plus the post-retrain g3r row, whose mean_dist
@@ -4223,101 +4002,21 @@ object Similarity {
     * the geometry's location, not its spread).
     *
     * Oracle: the frozen chain over gen-0 live (q184's), the drifted
-    * latest-wins generations from scratch, AND the retrain chain
-    * re-run from scratch over the g3 live set ([[lloydRoundsCte]]
-    * prefixed `rt`) — a green hash proves the stored retrained index ≡
-    * a from-scratch rebuild: the q181/q184 contract extended through
-    * the retrain boundary.
+    * latest-wins generations from scratch, AND the retrain chain re-run
+    * from scratch over the g3 live set ([[lloydRoundsCte]] prefixed
+    * `rt`) — a green hash proves the stored retrained index ≡ a
+    * from-scratch rebuild: the q181/q184 contract extended through the
+    * retrain boundary.
     *
     * 100 TB shape: everything q184 does, plus one Lloyd training over
     * the live corpus at retrain time — the standard amortized cost the
     * trigger exists to schedule (retraining per batch would pay it
     * daily; the trigger pays it only when the codebook is measurably
     * stale). The trigger read is a 2-row scalar aggregate over the
-    * stored audit tables — the one driver-side decision a lifecycle
-    * composite is allowed. */
-  def vectorIndexRetrain(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_vecrt_").toString
-    // scoped sweeps (q184's discipline): training-leg checkpoints are
-    // released as soon as their stored tables land — but NEVER the
-    // returned audit frame's own checkpoint
-    try {
-      // drifted fixture: q184's stream, +2000 milli/coord on b=3 arrivals
-      val base = embeddings.select(
-          floor(col("vec_id") / 4).cast("long").as("ent"),
-          col("vec_id"), (col("vec_id") % 4).as("b"),
-          (col("vec_id") % 7 === 0).as("del"))
-        .join(quantized(embeddings, 1000), "vec_id")
-        .withColumn("qe", when(col("b") === 3,
-          transform(col("qe"), x => x + lit(2000L))).otherwise(col("qe")))
-      val live0 = embeddings
-        .filter(col("vec_id") % 4 === 0 && col("vec_id") % 7 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      sweepAfter(spark) {
-        val (_, cents0) = trainLloyd(live0)
-        cents0.write.mode("overwrite").parquet(s"$scratch/centroids")
-      }
-      val frozen = spark.read.parquet(s"$scratch/centroids")
-      frozenAssignQ(base.filter(col("b") === 0 && !col("del")), frozen)
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(frozenAssignQ(batch.filter(!col("del")), frozen))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      def auditOf(tbl: DataFrame, state: String): DataFrame =
-        tbl.agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("ent")).as("n_ents"),
-          countDistinct(col("cluster")).as("n_cells"),
-          sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
-            .as("checksum"),
-          floor(sum(col("dist")) / count(lit(1))).cast("long")
-            .as("mean_dist"))
-          .select(lit(state).as("state"), col("n_rows"), col("n_ents"),
-            col("n_cells"), col("checksum"), col("mean_dist"))
-      def meanOf(gen: String): Long =
-        spark.read.parquet(s"$scratch/$gen")
-          .agg(floor(sum(col("dist")) / count(lit(1))).cast("long")).head()
-          .getLong(0)
-      val baseMean = meanOf("gen0")
-      val fired = retrainTrigger(meanOf("gen3"), baseMean)
-      require(fired, "q188's drifted fixture must fire the retrain " +
-        "trigger — the undrifted path is q184's")
-      // THE RETRAIN LEG: fresh dynamic-⌈√N⌉ 4-round Lloyd over the
-      // current live set (pre-quantized, drift included), then full
-      // reassignment against the new centroids — the stored row
-      // invariant (row = argmin vs FINAL centroids) held uniformly
-      val live3 = base
-        .join(spark.read.parquet(s"$scratch/gen3").select(col("vec_id")),
-          "vec_id")
-        .select(col("ent"), col("vec_id"), col("qe"))
-      sweepAfter(spark) {
-        // checkpointed: the unrolled 4-round DAG re-reads it ~10 times.
-        // Shared capped trainer (sampled rounds; the full reassignment
-        // below is the frozenAssignQ call) — the same discipline as
-        // trainLloyd, mirrored by lloydRoundsCte("rt") in the oracle.
-        val lq = live3.select(col("vec_id"), col("qe")).localCheckpoint()
-        lloydTrainCentsQ(lq, 0, 4, 64)
-          .write.mode("overwrite").parquet(s"$scratch/centroids_rt")
-      }
-      frozenAssignQ(live3, spark.read.parquet(s"$scratch/centroids_rt"))
-        .write.mode("overwrite").parquet(s"$scratch/gen3r")
-      val audits = ((0 to 3).map(g =>
-        auditOf(spark.read.parquet(s"$scratch/gen$g"), s"g$g")) :+
-        auditOf(spark.read.parquet(s"$scratch/gen3r"), "g3r"))
-        .reduce(_ unionAll _)
-      audits
-        .withColumn("retrain",
-          when(col("mean_dist") * lit(100L) > lit(baseMean) * lit(120L),
-            1L).otherwise(0L))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+    * stored generations. */
+  def vectorIndexRetrain(embeddings: DataFrame): DataFrame =
+    coarseRetrain(IvfGen, embeddings, transform(_, x => x + lit(2000L)),
+      cellAudit :+ floorMean("dist").as("mean_dist"), "q188", "q184")
 
   /** Oracle: q184's from-scratch recompute (frozen chain over gen-0
     * live, drifted latest-wins generations, per-vector argmin), plus
@@ -4370,108 +4069,44 @@ object Similarity {
       |       THEN 1 ELSE 0 END AS BIGINT) AS retrain
       |FROM ag ORDER BY state""".stripMargin
 
-  /** q189: MULTI-GENERATION lifecycle for the PQ ENCODINGS table
-    * (VERDICT r10 Next #5 — q184's merge discipline composed with the
-    * PQ index): the per-subspace codebook is trained ONCE — on the
-    * even-entity HALF of the generation-0 live corpus — and FROZEN
-    * (re-training would re-encode the whole corpus; the codebook is
-    * the contract that makes old and new encodings comparable). The
-    * odd-entity half is the held-out validation set whose
-    * reconstruction error is the drift BASELINE: in-sample error is
-    * biased toward 0 whenever the training set is small relative to
-    * k=256 (the codebook memorizes it), so a baseline that includes
-    * the training rows reads ANY fresh arrival as drift; held-out
-    * gen-0 rows come from the same distribution as future arrivals —
-    * exactly what "no drift" must compare against. Every stored row
-    * is an arrival's
-    * 16 per-subspace codeword ids — encoded against the frozen
-    * codebook via the same codegen'd [[graft.functions.PqArgminCodeword]]
-    * kernel as the batch encode, over the ARRIVALS alone. Generations
-    * merge by entity anti-join with tombstones (q184's read-modify-
-    * write), and each audit row carries the PQ DRIFT SIGNAL: the mean
-    * int64 reconstruction error per (vector, subspace) row — rising
-    * error means arrivals no longer resemble the corpus the codebook
-    * was trained on — compared against the HELD-OUT gen-0 baseline at
-    * the 120% [[retrainTrigger]] threshold (the q188 retrain path is
-    * what runs when it fires; this near-isotropic fixture correctly
+  /** q189: MULTI-GENERATION lifecycle for the PQ ENCODINGS table —
+    * q184's merge discipline composed with the PQ index, on [[PqGen]]:
+    * the per-subspace codebook is trained ONCE — on the even-entity HALF
+    * of the generation-0 live corpus — and FROZEN (re-training would
+    * re-encode the whole corpus; the codebook is the contract that makes
+    * old and new encodings comparable). The odd-entity half is the
+    * held-out validation set whose reconstruction error is the drift
+    * BASELINE ([[genCodebook]] gives the reason). Every stored row is
+    * an arrival's 16 per-subspace codeword ids, encoded against the
+    * frozen codebook via the codegen'd [[graft.functions.PqArgminCodeword]]
+    * kernel over the ARRIVALS alone. Each audit row carries the PQ DRIFT
+    * SIGNAL: the mean int64 reconstruction error per (vector, subspace)
+    * row — rising error means arrivals no longer resemble the corpus
+    * the codebook was trained on — compared against the HELD-OUT gen-0
+    * baseline at the [[retrainTrigger]] threshold (the q191 retrain path
+    * is what runs when it fires; this near-isotropic fixture correctly
     * never drifts).
     *
     * Oracle: frozen codebook re-trained from scratch on the gen-0
-    * training half ([[pqCbTrainCte]]), every generation's live set re-encoded
-    * from scratch, same audits — a green hash proves gen-N stored
-    * encodings ≡ a from-scratch encode at every generation.
+    * training half ([[pqCbTrainCte]]), every generation's live set
+    * re-encoded from scratch, same audits — a green hash proves gen-N
+    * stored encodings ≡ a from-scratch encode at every generation.
     *
     * 100 TB shape: per generation the encode is batch-sized (arrivals ×
     * m rows through a ~256 KB broadcast codebook, no shuffle wider than
     * (vec_id, m, cw, d2) longs), the merge is an entity anti-join on
     * narrow keys, and the drift signal is a 1-row aggregate per
     * generation. */
-  def pqIndexLifecycle(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_pqgen_").toString
-    try {
-      val base = embeddings.select(
-          floor(col("vec_id") / 4).cast("long").as("ent"),
-          col("vec_id"), (col("vec_id") % 4).as("b"),
-          (col("vec_id") % 7 === 0).as("del"))
-        .join(quantized(embeddings, 1000), "vec_id")
-      sweepAfter(spark) {
-        // train on the EVEN-entity half of the gen-0 live corpus only:
-        // the ODD-entity half is the held-out validation set whose
-        // reconstruction error is the drift BASELINE. In-sample error
-        // is the wrong baseline — whenever the training set is small
-        // relative to k=256 the codebook memorizes it (per-codeword
-        // singleton centroids, d2 = 0), so an in-sample baseline makes
-        // ANY fresh arrival read as infinite drift; held-out gen-0
-        // rows come from the same distribution as future arrivals,
-        // which is exactly what "no drift" must compare against
-        val train0 = embeddings
-          .filter(col("vec_id") % 8 === 0 && col("vec_id") % 7 =!= 0)
-          .select(col("vec_id"), col("embedding"))
-        trainPqCodebook(train0)
-          .write.mode("overwrite").parquet(s"$scratch/codebook")
-      }
-      val cb = spark.read.parquet(s"$scratch/codebook")
-      frozenEncodeQ(base.filter(col("b") === 0 && !col("del")), cb)
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(frozenEncodeQ(batch.filter(!col("del")), cb))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      val audits = (0 to 3).map { g =>
-        spark.read.parquet(s"$scratch/gen$g")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("vec_id")).as("n_vecs"),
-            countDistinct(col("ent")).as("n_ents"),
-            sum(col("vec_id") * 100000L + col("m") * 256L + col("cw"))
-              .as("checksum"),
-            floor(sum(col("d2")) / count(lit(1))).cast("long")
-              .as("mean_err"))
-          .select(lit(s"g$g").as("state"), col("n_rows"), col("n_vecs"),
-            col("n_ents"), col("checksum"), col("mean_err"))
-      }
-      val a = audits.reduce(_ unionAll _).localCheckpoint()
-      // drift baseline: mean reconstruction error over the HELD-OUT
-      // (odd-entity) rows of stored gen-0 — the training half's
-      // in-sample error is biased toward 0 (see the training comment)
-      val baseMean = broadcast(spark.read.parquet(s"$scratch/gen0")
-        .filter(col("ent") % 2 === 1)
-        .agg(floor(sum(col("d2")) / count(lit(1))).cast("long")
-          .as("base_mean")))
-      a.crossJoin(baseMean)
-        .withColumn("retrain",
-          when(col("mean_err") * lit(100L) > col("base_mean") * lit(120L),
-            1L).otherwise(0L))
-        .select(col("state"), col("n_rows"), col("n_vecs"), col("n_ents"),
-          col("checksum"), col("mean_err"), col("retrain"))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+  def pqIndexLifecycle(embeddings: DataFrame): DataFrame =
+    PqGen.inScratch { root =>
+      val spark = embeddings.sparkSession
+      PqGen.lifecycleTo(root, PqGen.band(embeddings))
+      PqGen.audit(spark, root, GenStates, pqAudit, a => a.localCheckpoint()
+        .crossJoin(broadcast(heldOut(spark.read.parquet(s"$root/gen0"))
+          .agg(floorMean("d2").as("base_mean"))))
+        .withColumn("retrain", retrainFlag(col("mean_err"), col("base_mean")))
+        .drop("base_mean"))
+    }
 
   /** Oracle: frozen codebook from scratch over the gen-0 live subset,
     * every generation's live set from the latest-wins window, each
@@ -4517,26 +4152,26 @@ object Similarity {
       |FROM ag ORDER BY state""".stripMargin
 
   /** q190: MULTI-GENERATION lifecycle for the COMPOSED IVF-PQ index —
-    * the q186/q187 serving tier's ingest story. q184 gave the coarse
-    * assignment table a generation lifecycle and q189 gave the PQ
-    * encodings one; the production store ([[writeIvfPqIndex]]) is their
-    * JOIN — cell-labeled encodings, one row per (vector, subspace) with
-    * its inverted-list cell — so its lifecycle is the two merge
-    * disciplines composed over ONE stored table. Both quantizers are
-    * trained on generation 0 and FROZEN (the coarse centroids on the
-    * full gen-0 live set, q184's discipline; the PQ codebook on its
-    * even-entity half with the odd half held out as the error baseline,
-    * q189's); each generation is a read-modify-write: batch entities
-    * anti-join out their old rows, non-tombstone arrivals run the
-    * shared [[frozenAssignQ]] ⋈ [[frozenEncodeQ]] kernels — coarse cell
-    * + 16 codewords per vector, batch-sized work, never the corpus.
+    * the q186/q187 serving tier's ingest story, on [[IvfPqGen]]. q184
+    * gave the coarse assignment table a generation lifecycle and q189
+    * gave the PQ encodings one; the production store
+    * ([[writeIvfPqIndex]]) is their JOIN — cell-labeled encodings, one
+    * row per (vector, subspace) with its inverted-list cell — so its
+    * lifecycle is the two merge disciplines composed over ONE stored
+    * table. Both quantizers are trained on generation 0 and FROZEN (the
+    * coarse centroids on the full gen-0 live set, q184's discipline; the
+    * PQ codebook on its even-entity half with the odd half held out as
+    * the error baseline, q189's); each generation's non-tombstone
+    * arrivals run the shared [[frozenAssignQ]] ⋈ [[frozenEncodeQ]]
+    * kernels — coarse cell + 16 codewords per vector, batch-sized work,
+    * never the corpus.
     *
-    * Each audit row carries BOTH drift signals the composed index
-    * owns: mean assignment distance vs gen-0's (the coarse trigger,
-    * q184/q188) and mean reconstruction error vs the held-out gen-0
-    * baseline (the PQ trigger, q189/q191), each at the 120%
-    * [[retrainTrigger]] threshold. On this fixture neither fires —
-    * the exercised retrain paths are q188 (coarse) and q191 (PQ).
+    * Each audit row carries BOTH drift signals the composed index owns:
+    * mean assignment distance vs gen-0's (the coarse trigger, q184/q188)
+    * and mean reconstruction error vs the held-out gen-0 baseline (the
+    * PQ trigger, q189/q191), each at the [[retrainTrigger]] threshold.
+    * On this fixture neither fires — the exercised retrain paths are
+    * q188 (coarse) and q191 (PQ).
     *
     * Oracle: both frozen quantizers re-trained from scratch (the
     * trained-Lloyd CTE over gen-0 live; [[pqCbTrainCte]] over its
@@ -4552,18 +4187,14 @@ object Similarity {
     * serving tier's inverted-list row shape, so a generation can be
     * promoted to the q187 store by a partitionBy(cluster) rewrite —
     * no recompute. */
-  def ivfPqIndexLifecycle(embeddings: DataFrame): DataFrame = {
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_ivfpqgen_").toString
-    try ivfPqLifecycleTo(embeddings, scratch)
-    finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
-  }
+  def ivfPqIndexLifecycle(embeddings: DataFrame): DataFrame =
+    IvfPqGen.inScratch(ivfPqLifecycleTo(embeddings, _))
 
   /** One inverted-list row per (vector, subspace) of a pre-quantized
     * batch against BOTH frozen quantizers — the composed lifecycle's
-    * arrivals kernel (q190 and its streaming ingest leg): the coarse
-    * cell label join carries (cluster, dist) onto each encode row, so
-    * the output IS the q187 serving row shape. */
+    * encoder ([[IvfPqGen]]): the coarse cell label join carries
+    * (cluster, dist) onto each encode row, so the output IS the q187
+    * serving row shape. */
   private[llm] def composedIndexRows(vecs: DataFrame, cents: DataFrame,
                                      cb: DataFrame): DataFrame =
     frozenAssignQ(vecs, cents)
@@ -4579,75 +4210,28 @@ object Similarity {
   private[graft] def ivfPqLifecycleTo(embeddings: DataFrame,
                                     scratch: String): DataFrame = {
     val spark = embeddings.sparkSession
-    locally {
-      val base = embeddings.select(
-          floor(col("vec_id") / 4).cast("long").as("ent"),
-          col("vec_id"), (col("vec_id") % 4).as("b"),
-          (col("vec_id") % 7 === 0).as("del"))
-        .join(quantized(embeddings, 1000), "vec_id")
-      sweepAfter(spark) {
-        val live0 = embeddings
-          .filter(col("vec_id") % 4 === 0 && col("vec_id") % 7 =!= 0)
-          .select(col("vec_id"), col("embedding"))
-        val (_, cents0) = trainLloyd(live0)
-        cents0.write.mode("overwrite").parquet(s"$scratch/centroids")
-        val train0 = embeddings
-          .filter(col("vec_id") % 8 === 0 && col("vec_id") % 7 =!= 0)
-          .select(col("vec_id"), col("embedding"))
-        trainPqCodebook(train0)
-          .write.mode("overwrite").parquet(s"$scratch/codebook")
-      }
-      val cents = spark.read.parquet(s"$scratch/centroids")
-      val cb = spark.read.parquet(s"$scratch/codebook")
-      composedIndexRows(base.filter(col("b") === 0 && !col("del")),
-          cents, cb)
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(composedIndexRows(batch.filter(!col("del")),
-            cents, cb))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      val audits = (0 to 3).map { g =>
-        spark.read.parquet(s"$scratch/gen$g")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("vec_id")).as("n_vecs"),
-            countDistinct(col("ent")).as("n_ents"),
-            countDistinct(col("cluster")).as("n_cells"),
-            sum(col("vec_id") * 1000000L + col("cluster") * 4096L +
-              col("m") * 256L + col("cw")).as("checksum"),
-            // dist repeats on each of a vector's 16 rows, so the row
-            // mean equals the per-vector mean exactly
-            floor(sum(col("dist")) / count(lit(1))).cast("long")
-              .as("mean_dist"),
-            floor(sum(col("d2")) / count(lit(1))).cast("long")
-              .as("mean_err"))
-          .select(lit(s"g$g").as("state"), col("n_rows"), col("n_vecs"),
-            col("n_ents"), col("n_cells"), col("checksum"),
-            col("mean_dist"), col("mean_err"))
-      }
-      val a = audits.reduce(_ unionAll _).localCheckpoint()
-      val ivfBase = broadcast(a.filter(col("state") === "g0")
-        .select(col("mean_dist").as("base_dist")))
-      val pqBase = broadcast(spark.read.parquet(s"$scratch/gen0")
-        .filter(col("ent") % 2 === 1)
-        .agg(floor(sum(col("d2")) / count(lit(1))).cast("long")
-          .as("base_err")))
-      a.crossJoin(ivfBase).crossJoin(pqBase)
-        .withColumn("retrain_ivf",
-          when(col("mean_dist") * lit(100L) > col("base_dist") * lit(120L),
-            1L).otherwise(0L))
-        .withColumn("retrain_pq",
-          when(col("mean_err") * lit(100L) > col("base_err") * lit(120L),
-            1L).otherwise(0L))
-        .select(col("state"), col("n_rows"), col("n_vecs"), col("n_ents"),
-          col("n_cells"), col("checksum"), col("mean_dist"),
-          col("mean_err"), col("retrain_ivf"), col("retrain_pq"))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    }
+    IvfPqGen.lifecycleTo(scratch, IvfPqGen.band(embeddings))
+    IvfPqGen.audit(spark, scratch, GenStates, Seq(
+      count(lit(1)).as("n_rows"),
+      countDistinct(col("vec_id")).as("n_vecs"),
+      countDistinct(col("ent")).as("n_ents"),
+      countDistinct(col("cluster")).as("n_cells"),
+      sum(col("vec_id") * 1000000L + col("cluster") * 4096L +
+        col("m") * 256L + col("cw")).as("checksum"),
+      // dist repeats on each of a vector's 16 rows, so the row mean
+      // equals the per-vector mean exactly
+      floorMean("dist").as("mean_dist"),
+      floorMean("d2").as("mean_err")), a => {
+        val c = a.localCheckpoint()
+        c.crossJoin(g0Base(c, "mean_dist", "base_dist"))
+          .crossJoin(broadcast(heldOut(spark.read.parquet(s"$scratch/gen0"))
+            .agg(floorMean("d2").as("base_err"))))
+          .withColumn("retrain_ivf",
+            retrainFlag(col("mean_dist"), col("base_dist")))
+          .withColumn("retrain_pq",
+            retrainFlag(col("mean_err"), col("base_err")))
+          .drop("base_dist", "base_err")
+      })
   }
 
   /** Oracle: both frozen quantizers from scratch (trained-Lloyd over
@@ -4717,17 +4301,13 @@ object Similarity {
     * integer domain after quantization (q188's exact drift, now seen
     * through the PQ error signal): the frozen codebook's codewords
     * live where gen-0 lived, so the drifted arrivals' reconstruction
-    * error blows past 120% of the HELD-OUT gen-0 baseline, the trigger
-    * fires at g3 (and nowhere else), and — the new leg — the operator
-    * RETRAINS: a fresh 2-round k=256 codebook over an ENTITY-keyed
-    * 512-cap sample of the even-entity half of the CURRENT (drifted)
-    * live set via [[pqSubRowsQ]] (the drift lives in the integer
-    * domain, so training re-quantizes nothing; the sample keys on ent
-    * because the latest-wins set's vec_ids share a residue class —
-    * see the in-body comment), then re-encodes the whole g3 live set
-    * against it as `g3r`. The holdout discipline carries over: g3r's retrain flag
-    * compares against ITS own odd-entity held-out baseline, and on a
-    * codebook that has seen both populations it goes quiet.
+    * error blows past the threshold against the HELD-OUT gen-0
+    * baseline, the trigger fires at g3 (and nowhere else), and the
+    * operator RETRAINS ([[pqRetrainTables]]), then re-encodes the whole
+    * g3 live set against the new codebook as `g3r`. The holdout
+    * discipline carries over: g3r's retrain flag compares against ITS
+    * own odd-entity held-out baseline, and on a codebook that has seen
+    * both populations it goes quiet.
     *
     * Oracle: q189's frozen chain with the drifted latest-wins
     * generations, plus the retrain chain re-run from scratch
@@ -4737,100 +4317,47 @@ object Similarity {
     *
     * 100 TB shape: q189's per-generation costs, plus one codebook
     * training over the live corpus at retrain time — sample-capped at
-    * 512 vectors ([[pqSubRowsQ]]), so the retrain itself is O(1) in N;
-    * the full re-encode is the one corpus-sized pass, which is exactly
-    * what "re-encode against a new codebook" must pay and why the
-    * trigger, not the calendar, schedules it. */
-  def pqIndexRetrain(embeddings: DataFrame): DataFrame = {
-    val spark = embeddings.sparkSession
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_pqrt_").toString
-    try {
-      val base = embeddings.select(
-          floor(col("vec_id") / 4).cast("long").as("ent"),
-          col("vec_id"), (col("vec_id") % 4).as("b"),
-          (col("vec_id") % 7 === 0).as("del"))
-        .join(quantized(embeddings, 1000), "vec_id")
-        .withColumn("qe", when(col("b") === 3,
-          transform(col("qe"), x => x + lit(2000L))).otherwise(col("qe")))
-      sweepAfter(spark) {
-        val train0 = embeddings
-          .filter(col("vec_id") % 8 === 0 && col("vec_id") % 7 =!= 0)
-          .select(col("vec_id"), col("embedding"))
-        trainPqCodebook(train0)
-          .write.mode("overwrite").parquet(s"$scratch/codebook")
-      }
-      val cb = spark.read.parquet(s"$scratch/codebook")
-      frozenEncodeQ(base.filter(col("b") === 0 && !col("del")), cb)
-        .write.mode("overwrite").parquet(s"$scratch/gen0")
-      for (g <- 1 to 3) {
-        val prev = spark.read.parquet(s"$scratch/gen${g - 1}")
-        val batch = base.filter(col("b") === g)
-        prev.join(batch.select(col("ent")), Seq("ent"), "left_anti")
-          .unionByName(frozenEncodeQ(batch.filter(!col("del")), cb))
-          .write.mode("overwrite").parquet(s"$scratch/gen$g")
-      }
-      def heldOutMean(dir: String): Long =
-        spark.read.parquet(s"$scratch/$dir").filter(col("ent") % 2 === 1)
-          .agg(floor(sum(col("d2")) / count(lit(1))).cast("long")).head()
-          .getLong(0)
-      def rowMean(dir: String): Long =
-        spark.read.parquet(s"$scratch/$dir")
-          .agg(floor(sum(col("d2")) / count(lit(1))).cast("long")).head()
-          .getLong(0)
-      val baseErr = heldOutMean("gen0")
-      val fired = retrainTrigger(rowMean("gen3"), baseErr)
-      require(fired, "q191's drifted fixture must fire the PQ retrain " +
-        "trigger — the undrifted path is q189's")
-      // THE RETRAIN LEG: fresh 2-round k=256 codebook over the
-      // even-entity half of the current live set (drift included, via
-      // the pre-quantized seam), then re-encode ALL live rows
-      val live3 = base
-        .join(spark.read.parquet(s"$scratch/gen3")
-          .select(col("vec_id")).distinct(), "vec_id")
-        .select(col("ent"), col("vec_id"), col("qe"))
-      sweepAfter(spark) {
-        // the 512-cap sample must key on the ENTITY, not vec_id: the
-        // latest-wins live set's vec_ids are all ≡ 3 (mod 4), so a
-        // vec_id modulo whose samp divides 4 keeps zero rows (measured
-        // at sf1x: samp = 4 → empty training set → empty codebook);
-        // ents are dense, so ent % samp is never degenerate (at worst
-        // 2× the 512 target when samp is even — ents here are the
-        // even half)
-        val t3all = live3.filter(col("ent") % 2 === 0)
-        val ss = broadcast(t3all.agg(greatest(lit(1L),
-          floor(count(lit(1)) / lit(512)).cast("long")).as("samp")))
-        val t3 = t3all.crossJoin(ss)
-          .filter(pmod(col("ent"), col("samp")) === 0)
-          .select(col("vec_id"), col("qe"))
-        val sub = pqSubRowsQ(t3, 16, 64, sampled = false).localCheckpoint()
-        pqTrainLoop(sub, 16, 256, 2, 64)
-          .write.mode("overwrite").parquet(s"$scratch/codebook_rt")
-      }
-      frozenEncodeQ(live3, spark.read.parquet(s"$scratch/codebook_rt"))
-        .write.mode("overwrite").parquet(s"$scratch/gen3r")
-      def auditOf(dir: String, state: String): DataFrame =
-        spark.read.parquet(s"$scratch/$dir")
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("vec_id")).as("n_vecs"),
-            countDistinct(col("ent")).as("n_ents"),
-            sum(col("vec_id") * 100000L + col("m") * 256L + col("cw"))
-              .as("checksum"),
-            floor(sum(col("d2")) / count(lit(1))).cast("long")
-              .as("mean_err"))
-          .select(lit(state).as("state"), col("n_rows"), col("n_vecs"),
-            col("n_ents"), col("checksum"), col("mean_err"))
-      val audits = ((0 to 3).map(g => auditOf(s"gen$g", s"g$g")) :+
-        auditOf("gen3r", "g3r")).reduce(_ unionAll _)
-      val rtBase = heldOutMean("gen3r")
-      audits
-        .withColumn("retrain",
-          when(col("mean_err") * lit(100L) >
-            when(col("state") === "g3r", lit(rtBase)).otherwise(lit(baseErr))
-              * lit(120L), 1L).otherwise(0L))
-        .orderBy(col("state"))
-        .localCheckpoint()
-    } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
+    * 512 vectors, so the retrain itself is O(1) in N; the full re-encode
+    * is the one corpus-sized pass, which is exactly what "re-encode
+    * against a new codebook" must pay and why the trigger, not the
+    * calendar, schedules it. */
+  def pqIndexRetrain(embeddings: DataFrame): DataFrame =
+    PqGen.inScratch { root =>
+      val spark = embeddings.sparkSession
+      def heldOutErr(gen: String) =
+        floorMeanOf(heldOut(spark.read.parquet(s"$root/$gen")), "d2")
+      val band = PqGen.drifted(embeddings, transform(_, x => x + lit(2000L)))
+      PqGen.lifecycleTo(root, band)
+      val baseErr = heldOutErr("gen0")
+      require(retrainTrigger(
+          floorMeanOf(spark.read.parquet(s"$root/gen3"), "d2"), baseErr),
+        "q191's drifted fixture must fire the PQ retrain trigger — the " +
+          "undrifted path is q189's")
+      PqGen.retrainTo(root, band, pqRetrainTables)
+      val rtBase = heldOutErr("gen3r")
+      PqGen.audit(spark, root, GenStates :+ "g3r", pqAudit,
+        _.withColumn("retrain", retrainFlag(col("mean_err"),
+          when(col("state") === "g3r", lit(rtBase)).otherwise(lit(baseErr)))))
+    }
+
+  /** q191's retrain codebook: a fresh 2-round k = 256 codebook over an
+    * ENTITY-keyed 512-cap sample of the live set's even-entity half (the
+    * drift lives in the integer domain, so training re-quantizes
+    * nothing). The sample must key on the entity, not vec_id: the
+    * latest-wins live set's vec_ids are all ≡ 3 (mod 4), so a vec_id
+    * modulo whose samp divides 4 keeps zero rows (measured at sf1x:
+    * samp = 4 → empty training set → empty codebook); ents are dense, so
+    * ent % samp is never degenerate (at worst 2× the 512 target when
+    * samp is even — ents here are the even half). */
+  private def pqRetrainTables(live: DataFrame): Seq[(String, DataFrame)] = {
+    val even = live.filter(col("ent") % 2 === 0)
+    val ss = broadcast(even.agg(greatest(lit(1L),
+      floor(count(lit(1)) / lit(512)).cast("long")).as("samp")))
+    val t = even.crossJoin(ss)
+      .filter(pmod(col("ent"), col("samp")) === 0)
+      .select(col("vec_id"), col("qe"))
+    Seq("codebook" -> pqTrainLoop(
+      pqSubRowsQ(t, 16, 64, sampled = false).localCheckpoint(), 16, 256, 2, 64))
   }
 
   /** Oracle: q189's frozen chain with the drifted generations, the
@@ -5057,7 +4584,7 @@ object Similarity {
 
   /** Reads a quantizer table (`centroids`, `codebook`) stored under an
     * LSM root by name. */
-  private[llm] type LsmTables = String => DataFrame
+  private[graft] type LsmTables = String => DataFrame
 
   /** An [[LsmTables]] that reads each table at most once: a parquet read
     * infers its schema with a Spark job, so the batch lifecycle and the
@@ -5312,6 +4839,256 @@ object Similarity {
       serve(root, probes).write.mode("append").parquet(outDir)
     }
   }
+
+  /** One generation-store tier's encoder: everything that differs between
+    * the per-generation rewrite stores of q181 (fingerprints), q184/q188
+    * (IVF), q189/q191 (PQ), q190 (IVF-PQ) and q225/q226/q231 (SQ8). The
+    * store mechanism itself is [[GenStore]], written once.
+    *  - `id`: the source's row id (`vec_id`, `doc_id`);
+    *  - `domain`, `arrival`: the arrival-domain column and its expression
+    *    over a source row — the column a per-query drift shifts;
+    *  - `train`: the frozen quantizer tables, by name, trained from a
+    *    live set of band rows;
+    *  - `encode`: store rows for live band rows against the stored
+    *    tables. */
+  private[graft] final case class GenEncoder(
+      id: String,
+      domain: String,
+      arrival: Column,
+      train: DataFrame => Seq[(String, DataFrame)],
+      encode: (DataFrame, LsmTables) => DataFrame)
+
+  /** The generation store: each arrival batch rewrites the store as the
+    * next generation, `genN = gen(N−1)` anti-joined on the batch's
+    * entities plus the batch's encoded live arrivals (the delta-segment
+    * alternative for high batch rates is [[LsmStore]]). ONE
+    * implementation for every tier, parameterised by the tier's
+    * [[GenEncoder]].
+    *
+    * The fixture ([[band]]) is an entity stream over the source: ent =
+    * ⌊id/4⌋ is the stable key, b = id % 4 the arrival batch, id % 7 = 0 a
+    * tombstone. The quantizer tables are trained ONCE on the gen-0 live
+    * set and FROZEN (retraining per batch would re-cluster the whole
+    * corpus); every later batch encodes its arrivals alone against them,
+    * so incremental merge ≡ from-scratch recompute at every generation —
+    * the contract each tier's oracle checks. Per batch the work is the
+    * batch-sized encode plus one map-side pass over the previous
+    * generation: each generation REWRITES the surviving rows, right for
+    * daily-batch cadences.
+    *
+    * On-disk layout under a root — a contract, because readers outside
+    * this class parse it: StreamingSpec (streamed vs batch generations),
+    * SimilaritySpec's promotion test (`centroids`, `codebook`, `gen3`)
+    * and q226's served root (`centroids`, `gen3`):
+    *  - `centroids`, `codebook`: the frozen tables the encoder trains,
+    *    written once by [[seedTo]];
+    *  - `genN`: the store after batch N (`gen0`: the encoded b = 0 live
+    *    set), never rewritten; the stream legs write [[nextGen]];
+    *  - `centroids_rt`, `codebook_rt`, `gen3r`: the retrain leg's tables
+    *    over gen3's live set and that set re-encoded ([[retrainTo]]).
+    * The batch chain ([[lifecycleTo]]) and the stream legs ([[ingest]])
+    * run the same [[merge]], so stream ≡ batch by construction. */
+  private[graft] final class GenStore(val enc: GenEncoder) {
+    /** The entity arrival band of a source frame: (ent, id, b, del,
+      * domain). */
+    def band(source: DataFrame): DataFrame = {
+      val id = col(enc.id)
+      source.select(floor(id / 4).cast("long").as("ent"), id,
+        (id % 4).as("b"), (id % 7 === 0).as("del"),
+        enc.arrival.as(enc.domain))
+    }
+
+    /** The band with a per-query drift `shift` applied to the b = 3
+      * arrivals' domain column. */
+    def drifted(source: DataFrame, shift: Column => Column): DataFrame =
+      band(source).withColumn(enc.domain, when(col("b") === 3,
+        shift(col(enc.domain))).otherwise(col(enc.domain)))
+
+    /** Writes `train`'s tables over a live set as `<name><suffix>`; the
+      * trainers' checkpoints are swept once the tables land. */
+    private def trainTo(root: String, live: DataFrame, suffix: String,
+                        train: DataFrame => Seq[(String, DataFrame)]): Unit =
+      sweepAfter(live.sparkSession) {
+        train(live).foreach { case (name, t) =>
+          t.write.mode("overwrite").parquet(s"$root/$name$suffix")
+        }
+      }
+
+    /** Trains the frozen tables on the gen-0 live set and writes `gen0`. */
+    def seedTo(root: String, band: DataFrame, tables: LsmTables): Unit = {
+      val live0 = band.filter(col("b") === 0 && !col("del"))
+      trainTo(root, live0, "", enc.train)
+      enc.encode(live0, tables).write.mode("overwrite").parquet(s"$root/gen0")
+    }
+
+    def seedTo(root: String, band: DataFrame): Unit =
+      seedTo(root, band, lsmTables(band.sparkSession, root))
+
+    /** Merges one arrival batch as generation `g`: gen(g−1) anti-joined
+      * on the batch's entities (the batch side broadcasts), union the
+      * encoded live arrivals — a re-written entity's old row retires and
+      * a tombstoned entity does not re-enter. */
+    def merge(root: String, g: Int, batch: DataFrame,
+              tables: LsmTables): Unit =
+      batch.sparkSession.read.parquet(s"$root/gen${g - 1}")
+        .join(broadcast(batch.select(col("ent"))), Seq("ent"), "left_anti")
+        .unionByName(enc.encode(batch.filter(!col("del")), tables))
+        .write.mode("overwrite").parquet(s"$root/gen$g")
+
+    /** The batch chain: `gen0`, then batches b = 1..3 as gen1..gen3. The
+      * quantizer tables are read once for the whole chain. */
+    def lifecycleTo(root: String, band: DataFrame): Unit = {
+      val tables = lsmTables(band.sparkSession, root)
+      seedTo(root, band, tables)
+      for (g <- 1 to 3) merge(root, g, band.filter(col("b") === g), tables)
+    }
+
+    /** The stream legs' micro-batch body: band rows (ent, id, del,
+      * domain) merged as the root's next generation. */
+    def ingest(root: String, batch: DataFrame): Unit =
+      merge(root, nextGen(root), batch, lsmTables(batch.sparkSession, root))
+
+    /** The retrain leg: `train` over gen3's live set, stored as
+      * `<name>_rt`, and that live set re-encoded against the new tables
+      * as `gen3r` — a re-index, not a re-ingest. */
+    def retrainTo(root: String, band: DataFrame,
+                  train: DataFrame => Seq[(String, DataFrame)] = enc.train)
+        : Unit = {
+      val spark = band.sparkSession
+      val live = band.join(spark.read.parquet(s"$root/gen3")
+        .select(col(enc.id)), Seq(enc.id), "left_semi")
+      trainTo(root, live, "_rt", train)
+      enc.encode(live, name => spark.read.parquet(s"$root/${name}_rt"))
+        .write.mode("overwrite").parquet(s"$root/gen3r")
+    }
+
+    /** One audit row per state (`g0`…`g3`, `g3r`): `aggs` over that
+      * generation read back from parquet, then the tier's `trigger`
+      * columns, ordered by state and checkpointed. */
+    def audit(spark: org.apache.spark.sql.SparkSession, root: String,
+              states: Seq[String], aggs: Seq[Column],
+              trigger: DataFrame => DataFrame = identity): DataFrame =
+      trigger(states.map { s =>
+          spark.read.parquet(s"$root/gen${s.drop(1)}")
+            .agg(aggs.head, aggs.tail: _*)
+            .select(lit(s).as("state"), col("*"))
+        }.reduce(_ unionAll _))
+        .orderBy(col("state"))
+        .localCheckpoint()
+
+    /** Runs `body` over a fresh scratch root, deleted afterwards. */
+    def inScratch[A](body: String => A): A = {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_gen_").toString
+      try body(root)
+      finally graft.FsUtil.deleteRecursively(new java.io.File(root))
+    }
+  }
+
+  /** The batch chain's audit states. */
+  private[graft] val GenStates: Seq[String] = (0 to 3).map(g => s"g$g")
+
+  private val GenDir = "gen(\\d+)".r
+
+  /** The next generation number under a generation-store root: one past
+    * the newest `genN` (generations are never reused). Fails fast,
+    * naming the root, when nothing seeded `gen0`. */
+  private[llm] def nextGen(root: String): Int = {
+    val gens = Option(new java.io.File(root).list()).getOrElse(Array.empty)
+      .collect { case GenDir(n) => n.toInt }
+    require(gens.nonEmpty, s"no genN directory under $root — the " +
+      "lifecycle build must seed gen0 before the stream starts")
+    gens.max + 1
+  }
+
+  /** floor(sum/count) of a column: the integer mean every lifecycle audit
+    * and drift trigger compares, exact on both engines. */
+  private def floorMean(c: String): Column =
+    floor(sum(col(c)) / count(lit(1))).cast("long")
+
+  private def floorMeanOf(t: DataFrame, c: String): Long =
+    t.agg(floorMean(c)).head().getLong(0)
+
+  /** The odd-entity half of a stored PQ generation: held out of codebook
+    * training, so its reconstruction error is the drift baseline. */
+  private def heldOut(t: DataFrame): DataFrame = t.filter(col("ent") % 2 === 1)
+
+  /** The audit core of the coarse-assigned stores: rows, entities,
+    * occupied cells and an assignment-sensitive checksum. */
+  private def cellAudit: Seq[Column] = Seq(count(lit(1)).as("n_rows"),
+    countDistinct(col("ent")).as("n_ents"),
+    countDistinct(col("cluster")).as("n_cells"),
+    sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
+      .as("checksum"))
+
+  /** The PQ encodings' audit: rows, vectors, entities, a codeword
+    * checksum and the mean reconstruction error (the PQ drift signal). */
+  private def pqAudit: Seq[Column] = Seq(count(lit(1)).as("n_rows"),
+    countDistinct(col("vec_id")).as("n_vecs"),
+    countDistinct(col("ent")).as("n_ents"),
+    sum(col("vec_id") * 100000L + col("m") * 256L + col("cw"))
+      .as("checksum"),
+    floorMean("d2").as("mean_err"))
+
+  /** A live set's vectors (ent, vec_id, embedding) in the ×1000 integer
+    * domain: (ent, vec_id, qe). */
+  private def qeRows(v: DataFrame): DataFrame =
+    v.select(col("ent"), col("vec_id"), qeOf(col("embedding")).as("qe"))
+
+  /** The frozen coarse table: dynamic-⌈√N⌉ 4-round Lloyd over a live
+    * set's quantized vectors, checkpointed because the unrolled rounds
+    * re-read it ~10 times. */
+  private def genCentroids(q: DataFrame): (String, DataFrame) =
+    "centroids" -> lloydTrainCentsQ(
+      q.select(col("vec_id"), col("qe")).localCheckpoint(), 0, 4, 64)
+
+  /** The frozen PQ codebook, trained on the EVEN-entity half of a live
+    * set only. In-sample error is the wrong drift baseline: whenever the
+    * training set is small relative to k = 256 the codebook memorizes it
+    * (singleton codewords, d2 = 0), so any fresh arrival would read as
+    * drift. The odd half ([[heldOut]]) comes from the same distribution
+    * as future arrivals — exactly what "no drift" must compare against. */
+  private def genCodebook(q: DataFrame): (String, DataFrame) =
+    "codebook" -> trainPqCodebookQ(
+      q.filter(col("ent") % 2 === 0).select(col("vec_id"), col("qe")))
+
+  /** q184/q188: rows are the frozen-coarse argmin (cluster, dist) of the
+    * quantized arrival. */
+  private[graft] val IvfGen: GenStore = new GenStore(GenEncoder(
+    id = "vec_id", domain = "qe", arrival = qeOf(col("embedding")),
+    train = live => Seq(genCentroids(live)),
+    encode = (v, t) => frozenAssignQ(v, t("centroids"))))
+
+  /** q189/q191: rows are the 16 per-subspace codewords (m, cw, d2) of the
+    * quantized arrival against the frozen codebook. */
+  private[graft] val PqGen: GenStore = new GenStore(GenEncoder(
+    id = "vec_id", domain = "qe", arrival = qeOf(col("embedding")),
+    train = live => Seq(genCodebook(live)),
+    encode = (v, t) => frozenEncodeQ(v, t("codebook"))))
+
+  /** q190: rows are the serving tier's cell-labeled encodings
+    * ([[composedIndexRows]]) against both frozen quantizers; arrivals
+    * come as float vectors, the stream leg's batch schema. */
+  private[graft] val IvfPqGen: GenStore = new GenStore(GenEncoder(
+    id = "vec_id", domain = "embedding", arrival = col("embedding"),
+    train = live => {
+      val q = qeRows(live)
+      Seq(genCentroids(q), genCodebook(q))
+    },
+    encode = (v, t) =>
+      composedIndexRows(qeRows(v), t("centroids"), t("codebook"))))
+
+  /** q231: rows are [[sq8ComposedRows]] — the per-row pack plus the
+    * frozen-coarse assignment and its distance, the drift-audit term. */
+  private[graft] val Sq8RtGen: GenStore = new GenStore(GenEncoder(
+    id = "vec_id", domain = "embedding", arrival = col("embedding"),
+    train = live => Seq(genCentroids(qeRows(live))),
+    encode = (v, t) => sq8ComposedRows(v, t("centroids"))))
+
+  /** q225/q226: the q231 rows with `dist` projected away — the served
+    * store's 5-column layout (ent, vec_id, b8, nsq, cluster). */
+  private[graft] val Sq8Gen: GenStore = new GenStore(Sq8RtGen.enc.copy(
+    encode = (v, t) => sq8ComposedRows(v, t("centroids")).drop("dist")))
 
   /** Trains the frozen coarse centroids on the whole corpus and stores
     * them as the root's `centroids` table. */
@@ -5854,7 +5631,7 @@ object Similarity {
   // the O(N)/batch pattern is a cadence choice, not the only option).
   // -------------------------------------------------------------------
 
-  /** The packed SQ8 tier: per-row packed composed rows ([[sq8ComposedRowsD]]
+  /** The packed SQ8 tier: per-row packed composed rows ([[sq8ComposedRows]]
     * — 64 B/vector plus the frozen-assignment dist, the q231 drift-audit
     * term, co-stored so a production trigger reads the store, not the
     * corpus) with the co-stored label. Arrivals drift +0.5·d per
@@ -5872,7 +5649,7 @@ object Similarity {
     seed = (embeddings, root, tables) => {
       lsmTrainTo(embeddings, root)
       lsmWriteBase(
-        sq8ComposedRowsD(embeddings.select(col("vec_id").as("ent"),
+        sq8ComposedRows(embeddings.select(col("vec_id").as("ent"),
             col("vec_id"), col("embedding")), tables("centroids"))
           .join(embeddings.select(col("vec_id"), col("label")), "vec_id"),
         root, s"$root/base")
@@ -5882,7 +5659,7 @@ object Similarity {
         transform(col("embedding"), x => x + lit(0.5f * d)).as("embedding"),
         col("label")),
     deltaOf = (arr, tables) =>
-      sq8ComposedRowsD(arr.filter(!col("del")), tables("centroids"))
+      sq8ComposedRows(arr.filter(!col("del")), tables("centroids"))
         .join(arr.select(col("vec_id"), col("label")), "vec_id")
         .withColumn("del", lit(false))
         .unionByName(

@@ -258,8 +258,67 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("vector-index lifecycle (q184): audits all four generations; the " +
-    "drift trigger fires on integer mean-distance growth only") {
+  // the generation store's shared contract, once per encoder; the q184,
+  // q189 and q190 tests below keep only their tier's own assertions
+  for ((tag, store) <- Seq("fp" -> Corpus.FpGen, "ivf" -> Similarity.IvfGen,
+      "pq" -> Similarity.PqGen, "ivfpq" -> Similarity.IvfPqGen,
+      "sq8" -> Similarity.Sq8Gen))
+    test(s"generation store ($tag encoder): states g0..g3; gen0 is the " +
+      "b=0 live set; entities unique and no tombstoned entity live at " +
+      "any generation") {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      val id = store.enc.id
+      val source =
+        if (id == "doc_id") Tables.documents(spark, sf)
+        else Tables.embeddings(spark, sf)
+      val band = store.band(source)
+      // (ent, id, b, del) per arrival, on the driver
+      val arrivals = band.select(col("ent"), col(id), col("b"), col("del"))
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue,
+            r.getBoolean(3)))
+      val root = Files.createTempDirectory(s"graft-genstore-$tag").toString
+      try {
+        store.lifecycleTo(root, band)
+        assert(Similarity.nextGen(root) === 4)
+        val states = store.audit(spark, root, Similarity.GenStates,
+          Seq(count(lit(1)).as("n_rows"))).collect().map(_.getString(0))
+        assert(states.toSeq === Seq("g0", "g1", "g2", "g3"))
+        def stored(g: Int): Set[(Long, Long)] =
+          spark.read.parquet(s"$root/gen$g").select(col("ent"), col(id))
+            .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(stored(0) === arrivals.collect {
+          case (e, i, 0, false) => (e, i)
+        }.toSet, "gen0 must hold exactly the b=0 live set")
+        for (g <- 0 to 3) {
+          val rows = stored(g)
+          assert(rows.map(_._1).size === rows.size,
+            s"gen$g: an entity holds more than one vector")
+          // an entity whose newest arrival at or before batch g is a
+          // tombstone must be gone from generation g
+          val tombstoned = arrivals.filter(_._3 <= g).groupBy(_._1)
+            .collect { case (e, as) if as.maxBy(_._3)._4 => e }.toSet
+          val live = rows.map(_._1) intersect tombstoned
+          assert(live.isEmpty,
+            s"gen$g: tombstoned entities live: ${live.take(5)}")
+        }
+      } finally graft.FsUtil.deleteRecursively(new java.io.File(root))
+    }
+
+  test("generation store: nextGen fails fast, naming the root, when no " +
+    "genN was seeded; gen3r is not a generation") {
+    val root = Files.createTempDirectory("graft-nextgen").toString
+    try {
+      val e = intercept[IllegalArgumentException](Similarity.nextGen(root))
+      assert(e.getMessage.contains(root))
+      Seq("gen0", "gen1", "gen3r", "centroids_rt").foreach(d =>
+        new java.io.File(s"$root/$d").mkdir())
+      assert(Similarity.nextGen(root) === 2)
+    } finally graft.FsUtil.deleteRecursively(new java.io.File(root))
+  }
+
+  test("vector-index lifecycle (q184): the drift trigger fires on integer " +
+    "mean-distance growth only") {
     // the trigger itself: pure integer compare at the 120% default
     assert(!Similarity.retrainTrigger(100L, 100L))
     assert(!Similarity.retrainTrigger(120L, 100L)) // exactly 120% — hold
@@ -267,15 +326,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.retrainTrigger(1L, 0L)) // degenerate zero baseline
     val emb = Tables.embeddings(spark, sf)
     val out = Similarity.vectorIndexLifecycle(emb).collect()
-    assert(out.map(_.getString(0)).toSeq === Seq("g0", "g1", "g2", "g3"))
-    // gen0 audits exactly the batch-0 live set
-    val live0 = emb.filter(org.apache.spark.sql.functions.expr(
-      "vec_id % 4 = 0 AND vec_id % 7 != 0")).count()
-    assert(out(0).getLong(1) === live0)
     out.foreach { r =>
-      // every stored row is one entity; cells never exceed the codebook
-      assert(r.getLong(2) === r.getLong(1),
-        s"${r.getString(0)}: duplicate entities survived the merge")
       // the near-isotropic fixture does not drift: the g0-mean baseline
       // must hold within 20% at every generation
       assert(r.getLong(6) === 0L, s"${r.getString(0)}: spurious retrain")
@@ -409,20 +460,14 @@ class SimilaritySpec extends SparkSpec {
     } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
   }
 
-  test("PQ-index lifecycle (q189): four generations audited; entities " +
-    "unique; the isotropic fixture never fires the PQ drift signal") {
+  test("PQ-index lifecycle (q189): 16 encoding rows per vector; the " +
+    "isotropic fixture never fires the PQ drift signal") {
     val emb = Tables.embeddings(spark, sf)
     val out = Similarity.pqIndexLifecycle(emb).collect()
-    assert(out.map(_.getString(0)).toSeq === Seq("g0", "g1", "g2", "g3"))
-    val live0 = emb.filter(org.apache.spark.sql.functions.expr(
-      "vec_id % 4 = 0 AND vec_id % 7 != 0")).count()
-    assert(out(0).getLong(2) === live0, "gen0 must audit the b=0 live set")
     out.foreach { r =>
-      // 16 encoding rows per live vector; one vector per entity
+      // 16 encoding rows per live vector
       assert(r.getLong(1) === 16L * r.getLong(2),
         s"${r.getString(0)}: rows != 16 x vecs")
-      assert(r.getLong(3) === r.getLong(2),
-        s"${r.getString(0)}: duplicate entities survived the merge")
       // no drift on this fixture: arrivals come from the same
       // distribution the frozen codebook was trained on
       assert(r.getLong(6) === 0L, s"${r.getString(0)}: spurious PQ retrain")
@@ -434,18 +479,14 @@ class SimilaritySpec extends SparkSpec {
     "fixture") {
     val emb = Tables.embeddings(spark, sf)
     val out = Similarity.ivfPqIndexLifecycle(emb).collect()
-    assert(out.map(_.getString(0)).toSeq === Seq("g0", "g1", "g2", "g3"))
     val live0 = emb.filter(org.apache.spark.sql.functions.expr(
       "vec_id % 4 = 0 AND vec_id % 7 != 0")).count()
-    assert(out(0).getLong(2) === live0, "gen0 must audit the b=0 live set")
     val kCells = math.ceil(math.sqrt(live0.toDouble)).toLong
     out.foreach { r =>
       // the serving tier's row shape: 16 cell-labeled encode rows per
-      // vector, one vector per entity, cells within the trained budget
+      // vector, cells within the trained budget
       assert(r.getLong(1) === 16L * r.getLong(2),
         s"${r.getString(0)}: rows != 16 x vecs")
-      assert(r.getLong(3) === r.getLong(2),
-        s"${r.getString(0)}: duplicate entities survived the merge")
       assert(r.getLong(4) <= kCells,
         s"${r.getString(0)}: more occupied cells than the frozen codebook")
       assert(r.getLong(8) === 0L, s"${r.getString(0)}: spurious IVF retrain")

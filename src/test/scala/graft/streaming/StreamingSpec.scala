@@ -336,53 +336,58 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
 
-  test("composed-index INGEST stream (q190 online): generations merged " +
-    "from arrival micro-batches equal the batch lifecycle's chain") {
-    import org.apache.spark.sql.functions.{col, floor}
-    import org.apache.spark.sql.types._
-    val emb = graft.Tables.embeddings(spark, sf)
-    // batch reference: the full lifecycle chain (deterministic kernels,
-    // so a second run over the same corpus rebuilds it bit-for-bit)
-    val rootB = Files.createTempDirectory("graft-ivfpq-ingb").toString
-    val rootS = Files.createTempDirectory("graft-ivfpq-ings").toString
-    val dir = Files.createTempDirectory("graft-ivfpq-arr").toString + "/arr"
-    try {
-      graft.llm.Similarity.ivfPqLifecycleTo(emb, rootB)
-      // streamed side: same frozen tables + gen0 seed, generations
-      // 1 and 2 arrive as micro-batches instead
-      graft.llm.Similarity.ivfPqLifecycleTo(emb, rootS)
-      for (g <- 1 to 3)
-        graft.FsUtil.deleteRecursively(new java.io.File(s"$rootS/gen$g"))
-      def arrivals(g: Int) = emb
-        .filter(col("vec_id") % 4 === g)
-        .select(floor(col("vec_id") / 4).cast("long").as("ent"),
-          col("vec_id"), col("embedding"),
-          (col("vec_id") % 7 === 0).as("del"))
-      arrivals(1).write.parquet(dir)
-      val schema = StructType(Seq(
-        StructField("ent", LongType), StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("del", BooleanType)))
-      val q = spark.readStream.schema(schema).parquet(dir)
-        .writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.llm.Similarity.ivfPqIngestStreamBatch(rootS)(b, id))
-        .start()
+  // one body per streamed generation-store encoder: the batch chain on
+  // one root; on another the same seed, then the b = 1..3 bands as
+  // ORDERED micro-batches through the tier's public foreachBatch leg
+  for ((tag, store, ingest) <- Seq(
+      ("ivfpq", graft.llm.Similarity.IvfPqGen,
+        graft.llm.Similarity.ivfPqIngestStreamBatch _),
+      ("sq8", graft.llm.Similarity.Sq8Gen,
+        graft.llm.Similarity.sq8IngestStreamBatch _)))
+    test(s"generation-store INGEST stream ($tag encoder): every streamed " +
+      "generation equals the batch chain's bit-for-bit (q190/q225 online)") {
+      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.types._
+      val emb = graft.Tables.embeddings(spark, sf)
+      val band = store.band(emb)
+      val rootB = Files.createTempDirectory(s"graft-$tag-ingb").toString
+      val rootS = Files.createTempDirectory(s"graft-$tag-ings").toString
+      val src = Files.createTempDirectory(s"graft-$tag-arr").toString
+      val dir = src + "/arr"
       try {
-        q.processAllAvailable()
-        arrivals(2).write.mode("append").parquet(dir)
-        q.processAllAvailable()
-      } finally q.stop()
-      for (g <- 1 to 2) {
-        val b = spark.read.parquet(s"$rootB/gen$g")
-        val s = spark.read.parquet(s"$rootS/gen$g")
-        assert(s.count() === b.count(), s"gen$g row count diverged")
-        assert(s.except(b).isEmpty && b.except(s).isEmpty,
-          s"gen$g streamed != batch")
-      }
-    } finally Seq(rootB, rootS).foreach(r =>
-      graft.FsUtil.deleteRecursively(new java.io.File(r)))
-  }
+        store.lifecycleTo(rootB, band)
+        store.seedTo(rootS, band)
+        def arrivals(g: Int) = band.filter(col("b") === g)
+          .select("ent", "vec_id", "embedding", "del")
+        arrivals(1).write.parquet(dir)
+        val schema = StructType(Seq(
+          StructField("ent", LongType), StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(FloatType)),
+          StructField("del", BooleanType)))
+        val q = spark.readStream.schema(schema).parquet(dir)
+          .writeStream
+          .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+            ingest(rootS)(b, id))
+          .start()
+        try {
+          q.processAllAvailable()
+          for (g <- 2 to 3) {
+            arrivals(g).write.mode("append").parquet(dir)
+            q.processAllAvailable()
+          }
+        } finally q.stop()
+        for (g <- 1 to 3) {
+          val b = spark.read.parquet(s"$rootB/gen$g")
+          val s = spark.read.parquet(s"$rootS/gen$g")
+          assert(s.count() === b.count(), s"gen$g row count diverged")
+          assert(s.except(b).isEmpty && b.except(s).isEmpty,
+            s"gen$g streamed != batch")
+        }
+        assert(!new java.io.File(s"$rootS/gen4").exists(),
+          "the stream wrote more generations than it received batches")
+      } finally Seq(rootB, rootS, src).foreach(r =>
+        graft.FsUtil.deleteRecursively(new java.io.File(r)))
+    }
 
   test("COMPOSED LSM view serve on a probe STREAM equals the batch serve " +
     "(q198 online)") {
@@ -854,55 +859,6 @@ class StreamingSpec extends SparkSpec {
     val batch = graft.llm.Similarity.lsmFilteredServed(emb, tag)
     assert(streamed.count() === batch.count())
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
-  }
-
-  test("SQ8-lifecycle ingest on an arrival STREAM equals the batch " +
-    "lifecycle's final store state bit-for-bit (q225 online)") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
-    val emb = graft.Tables.embeddings(spark, sf)
-    val rootB = Files.createTempDirectory("graft-sq8lcb").toString
-    val rootS = Files.createTempDirectory("graft-sq8lcs").toString
-    val dir = Files.createTempDirectory("graft-sq8arr").toString + "/arr"
-    try {
-      // batch reference: the full q225 chain
-      graft.llm.Similarity.sq8LifecycleTo(emb, rootB)
-      // streamed: same seed, then the three arrival bands as ORDERED
-      // micro-batches through the foreachBatch ingest
-      graft.llm.Similarity.sq8SeedTo(emb, rootS)
-      val band = emb.select(
-        org.apache.spark.sql.functions.floor(col("vec_id") / 4)
-          .cast("long").as("ent"),
-        col("vec_id"), (col("vec_id") % 4).as("b"),
-        col("embedding"), (col("vec_id") % 7 === 0).as("del"))
-      band.filter(col("b") === 1)
-        .select("ent", "vec_id", "embedding", "del").write.parquet(dir)
-      val schema = StructType(Seq(
-        StructField("ent", LongType), StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("del", BooleanType)))
-      val q = spark.readStream.schema(schema).parquet(dir)
-        .writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.llm.Similarity.sq8IngestStreamBatch(rootS)(b, id))
-        .start()
-      try {
-        q.processAllAvailable()
-        for (g <- 2 to 3) {
-          band.filter(col("b") === g)
-            .select("ent", "vec_id", "embedding", "del")
-            .write.mode("append").parquet(dir)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      val fin = spark.read.parquet(s"$rootB/gen3")
-      val finS = spark.read.parquet(s"$rootS/gen3")
-      assert(finS.count() === fin.count())
-      assert(finS.except(fin).isEmpty && fin.except(finS).isEmpty)
-    } finally {
-      graft.FsUtil.deleteRecursively(new java.io.File(rootB))
-      graft.FsUtil.deleteRecursively(new java.io.File(rootS))
-    }
   }
 
   test("binary-tier serve on a probe STREAM equals the batch serve " +
