@@ -3,10 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
 /** Native Catalyst expression for vector dot products over
   * array<float> / array<double> / array<bigint> columns (bigint elements
@@ -177,27 +177,26 @@ case class LongVectorSqDist(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** PQ encode kernel (r10, VERDICT r9 Next #1): nearest-codeword argmin
-  * of a subspace slice against a FLATTENED codebook, inside one
-  * codegen'd expression per (vector, subspace) row.
+/** The flattened-matrix argmin loop of the two per-row nearest-row
+  * kernels, [[PqArgminCodeword]] and [[ArgminCentroid]]: one
+  * codegen'd expression per row, scanning every candidate of a
+  * FLATTENED matrix.
   *
-  *  - `first`: the subspace slice, array<bigint> of length sd;
-  *  - `second`: the codebook matrix, array<bigint> of length nc·sd —
-  *    nc codewords flattened in ASCENDING-cw order (the caller builds it
-  *    with sort_array, which is what makes the tie rule below hold);
-  *  - `third`: the nc codeword ids, array<bigint>, same order.
+  *  - `first`: the row's vector, array<bigint> of length sd;
+  *  - `second`: the candidate matrix, array<bigint> of length nc·sd —
+  *    nc rows flattened in ASCENDING-id order (the callers build it
+  *    sorted, which is what makes the tie rule below hold);
+  *  - `third`: the nc candidate ids, array<bigint>, same order.
   *
-  * Returns the cw id of the minimum int64 squared-L2 distance; ties keep
-  * the FIRST (= smallest cw) — bit-identical to the r9
-  * `min(struct(d2, cw))` aggregate and the oracle's
-  * `row_number() OVER (ORDER BY d2, cw)`. The r9 plan reached the same
-  * argmin by fanning every row out ×kCw through a broadcast join and
-  * shuffling a partial-agg min — a 4096× row amplification whose
-  * measured sf1x encode slope was ~7×; this kernel does the same int64
-  * arithmetic in a tight primitive loop with NO fan-out, NO aggregate,
-  * NO shuffle. NULL on empty/misshapen codebooks or null elements. */
-case class PqArgminCodeword(first: Expression, second: Expression,
-                            third: Expression) extends TernaryExpression {
+  * Picks the minimum int64 squared-L2 distance; ties keep the FIRST
+  * (= smallest id) — bit-identical to a `min(struct(d2, id))`
+  * aggregate over the fanned-out pairs and to the oracle's
+  * `row_number() OVER (ORDER BY d2, id)`. The kernel does the same
+  * int64 arithmetic as that fan-out in a tight primitive loop with NO
+  * fan-out, NO aggregate, NO shuffle. NULL on an empty/misshapen
+  * matrix or null elements. Each subclass maps the winning (id, d2)
+  * pair to its result. */
+abstract class FlatArgmin extends TernaryExpression {
 
   override def nullable: Boolean = true
 
@@ -213,8 +212,11 @@ case class PqArgminCodeword(first: Expression, second: Expression,
       s"$prettyName requires array<bigint> arguments, got " +
         s"${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql}")
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pq_argmin_codeword"
+  /** The result of the winning id and its squared distance. */
+  protected def result(id: Long, d2: Long): Any
+
+  /** [[result]] as a Java expression over the two long variables. */
+  protected def genResult(id: String, d2: String): String
 
   override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
     val sq = a.asInstanceOf[ArrayData]
@@ -242,7 +244,7 @@ case class PqArgminCodeword(first: Expression, second: Expression,
       if (s < best) { best = s; bestCw = cw.getLong(j) }
       j += 1
     }
-    bestCw
+    result(bestCw, best)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -278,15 +280,59 @@ case class PqArgminCodeword(first: Expression, second: Expression,
          |    }
          |    if (!${ev.isNull} && $s < $best) { $best = $s; $bestCw = $c.getLong($j); }
          |  }
-         |  if (!${ev.isNull}) ${ev.value} = $bestCw;
+         |  if (!${ev.isNull}) ${ev.value} = ${genResult(bestCw, best)};
          |}
        """.stripMargin
     })
+}
+
+/** PQ encode kernel (r10, VERDICT r9 Next #1): the nearest-codeword id
+  * of a subspace slice against a flattened cw-ascending codebook. The
+  * r9 plan reached the same argmin by fanning every row out ×kCw
+  * through a broadcast join and shuffling a partial-agg min — a 4096×
+  * row amplification whose measured sf1x encode slope was ~7×. */
+case class PqArgminCodeword(first: Expression, second: Expression,
+                            third: Expression) extends FlatArgmin {
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "pq_argmin_codeword"
+
+  override protected def result(id: Long, d2: Long): Any = id
+  override protected def genResult(id: String, d2: String): String = id
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+/** IVF coarse-assignment kernel: the nearest centroid of a quantized
+  * vector against the flattened id-ascending centroid matrix, as
+  * struct(cluster, dist) — the cell and its int64 squared distance.
+  * Serves every coarse assignment: the Lloyd rounds, the full-corpus
+  * and the frozen-table assignments. */
+case class ArgminCentroid(first: Expression, second: Expression,
+                          third: Expression) extends FlatArgmin {
+
+  override def dataType: DataType = ArgminCentroid.Result
+  override def prettyName: String = "argmin_centroid"
+
+  override protected def result(id: Long, d2: Long): Any =
+    new GenericInternalRow(Array[Any](id, d2))
+  override protected def genResult(id: String, d2: String): String =
+    s"new ${classOf[GenericInternalRow].getName}(" +
+      s"new Object[]{Long.valueOf($id), Long.valueOf($d2)})"
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object ArgminCentroid {
+  val Result: StructType = StructType(Seq(
+    StructField("cluster", LongType, nullable = false),
+    StructField("dist", LongType, nullable = false)))
 }
 
 /** Symmetric int8 PACK of an array<float> embedding to a binary column
@@ -426,6 +472,13 @@ object VectorFunctions {
   def pqArgmin(sq: Column, cvFlat: Column, cwIds: Column): Column =
     GraftShims.column(PqArgminCodeword(GraftShims.expression(sq),
       GraftShims.expression(cvFlat), GraftShims.expression(cwIds)))
+
+  /** Nearest centroid of a quantized vector `qe` against the flattened
+    * id-ascending centroid matrix (`cFlat`, stride = qe length; `cIds`),
+    * as struct(cluster, dist). */
+  def argminCentroid(qe: Column, cFlat: Column, cIds: Column): Column =
+    GraftShims.column(ArgminCentroid(GraftShims.expression(qe),
+      GraftShims.expression(cFlat), GraftShims.expression(cIds)))
 
   /** SQ8 pack of an array<float|double> column into a binary column. */
   def int8Pack(a: Column): Column =

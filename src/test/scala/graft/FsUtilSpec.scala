@@ -34,6 +34,36 @@ class FsUtilSpec extends SparkSpec {
     } finally FsUtil.deleteRecursively(new java.io.File(dir))
   }
 
+  test("parquetSchema equals the inferred schema: flat store, and the " +
+    "CellStore layout once its int bucket column is added") {
+    import org.apache.spark.sql.functions._
+    val flat = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
+    val bucketed = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
+    try {
+      val rows = spark.range(0, 300).toDF("vec_id")
+        .select(col("vec_id"), (col("vec_id") % 23).as("cluster"),
+          array(col("vec_id"), lit(1L)).as("qe"), lit("x").as("label"))
+      // compared as READ: a file source reads every column nullable,
+      // given or inferred, while the footer keeps the writer's flags
+      def readWith(path: String, s: org.apache.spark.sql.types.StructType) =
+        spark.read.schema(s).parquet(path)
+      rows.write.mode("overwrite").parquet(flat)
+      val fs = FsUtil.parquetSchema(spark, flat)
+      assert(fs.map(readWith(flat, _).schema) ===
+        Some(spark.read.parquet(flat).schema))
+      graft.llm.CellStore.write(rows, nBuckets = 5, bucketed)
+      val bs = FsUtil.parquetSchema(spark, bucketed)
+        .map(_.add("bucket", org.apache.spark.sql.types.IntegerType))
+      assert(bs.map(readWith(bucketed, _).schema) ===
+        Some(spark.read.parquet(bucketed).schema))
+      assert(readWith(bucketed, bs.get)
+        .except(spark.read.parquet(bucketed)).isEmpty)
+    } finally {
+      FsUtil.deleteRecursively(new java.io.File(flat))
+      FsUtil.deleteRecursively(new java.io.File(bucketed))
+    }
+  }
+
   test("parquetRowCount counts an empty store as 0") {
     val dir = java.nio.file.Files.createTempDirectory("graft_frc_").toString
     try {

@@ -87,6 +87,50 @@ class PqArgminSpec extends SparkSpec {
       s"kernel fell out of codegen:\n$plan")
   }
 
+  test("IVF centroid kernel: 64-dim id and distance equal the cross join " +
+    "+ min(struct(dist, cluster)) reference; ties take the smaller id") {
+    import spark.implicits._
+    val emb = graft.Tables.embeddings(spark, sf)
+    val q = emb.select(col("vec_id"), transform(col("embedding"),
+      x => round(x.cast("double") * 1000).cast("long")).as("qe"))
+    // centroids from the first vectors, ids NOT dense, plus a planted
+    // equidistant pair: cluster 4 and cluster 2 both sit at qe(0) + 1
+    // in coordinate 0, so vec 0 must resolve to the smaller id 2
+    val base = q.filter(col("vec_id") < 9)
+      .select((col("vec_id") * 5 + 7).as("cluster"), col("qe").as("ce"))
+    val v0 = q.filter(col("vec_id") === 0).head().getSeq[Long](1)
+    val bump = (v0.head + 1) +: v0.tail
+    val cents = base.filter(col("cluster") =!= 7)
+      .union(Seq((4L, bump), (2L, bump)).toDF("cluster", "ce"))
+    val ref = q.crossJoin(broadcast(cents))
+      .withColumn("dist", VectorFunctions.longSqDist(col("qe"), col("ce")))
+      .groupBy(col("vec_id"))
+      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
+      .select(col("vec_id"), col("m.cluster").as("cluster"),
+        col("m.dist").as("dist"))
+    val flat = cents.orderBy(col("cluster")).collect()
+    val kernel = q.crossJoin(broadcast(Seq((
+        flat.map(_.getLong(0)).toSeq, flat.toSeq.flatMap(_.getSeq[Long](1))))
+        .toDF("cids", "cflat")))
+      .select(col("vec_id"), VectorFunctions.argminCentroid(
+        col("qe"), col("cflat"), col("cids")).as("m"))
+      .select(col("vec_id"), col("m.cluster").as("cluster"),
+        col("m.dist").as("dist"))
+    assert(kernel.count() === q.count())
+    assert(kernel.except(ref).isEmpty && ref.except(kernel).isEmpty,
+      "centroid kernel deviated from the join+min(struct) reference")
+    // collect through the frame's OWN execution, so its adaptive plan
+    // is final (codegen stages rendered) when the plan string is read
+    val v0Cluster = kernel.collect()
+      .collectFirst { case r if r.getLong(0) == 0L => r.getLong(1) }
+    assert(v0Cluster === Some(2L),
+      "equidistant centroids must resolve to the smaller id")
+    val plan = kernel.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project \[.*argmin_centroid""".r
+        .findFirstIn(plan).isDefined,
+      s"centroid kernel fell out of codegen:\n$plan")
+  }
+
   test("vector_dot over array<bigint> equals the interpreted cast fold " +
     "(the ADC scan kernel)") {
     val emb = graft.Tables.embeddings(spark, sf)
