@@ -319,7 +319,7 @@ object GraphScanFrac {
         pmod(col("id"), lit(10)).cast("int").as("label"))
       .localCheckpoint()
     val t0 = System.nanoTime()
-    val root = GraphAnn.servedRootFor(emb, s"scanfrac$n")
+    val root = GraphAnn.GannIndex.root(emb, s"scanfrac$n")
     println(f"   [build took ${(System.nanoTime() - t0) / 1e9}%.1f s]")
     val nodes = spark.read.parquet(s"$root/nodes")
     val totalCells = nodes.select(col("cluster")).distinct().count()
@@ -471,7 +471,7 @@ object FilteredGraphScale {
       (truth intersect got).size.toDouble / truth.size
     }
     val t0 = System.nanoTime()
-    val root = GraphAnn.servedRootFor(emb, s"fgscale$n")
+    val root = GraphAnn.GannIndex.root(emb, s"fgscale$n")
     println(f"   [build took ${(System.nanoTime() - t0) / 1e9}%.1f s]")
     val t1 = System.nanoTime()
     val widened = recallOf(

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   *    with no driver collect barrier — the q192/q217 shape.
   *
   * B is derived from the store's CENTROID table row count via
-  * [[bucketCount]] — the same deterministic rule on both the write and
-  * read side, so no meta file is needed: every reader already reads
-  * the broadcast-sized centroid table for seeding/ranking.
+  * [[bucketsOf]] — the same deterministic rule on both the write and
+  * read side, from the table's parquet footers, so no meta file is
+  * needed and no reader pays a job for it.
   */
 object CellStore {
 
@@ -63,6 +63,12 @@ object CellStore {
   def bucketCount(nCells: Long): Long =
     math.min(MaxBuckets,
       math.max(MinBuckets, (nCells + CellsPerBucket - 1) / CellsPerBucket))
+
+  /** The bucket count of the store under `root`: [[bucketCount]] of its
+    * stored `centroids` table's row count, read from the parquet footers
+    * — no Spark job. The one rule every writer and reader applies. */
+  def bucketsOf(spark: SparkSession, root: String): Long =
+    bucketCount(graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
 
   /** The bucket of a cell — int-typed to match the partition column
     * Spark infers back from `bucket=<v>` dirs, so neither pruning shape

@@ -1313,10 +1313,9 @@ object Corpus {
   def clusterKeepBestServed(documents: DataFrame, corpusTag: String,
                             threshold: Double = 0.8): DataFrame = {
     val spark = documents.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      Similarity.corpusKey(documents, "doc_id", s"cur:$corpusTag@$threshold",
-        sum(length(col("text")))),
-      "graft_curidx_served_")(writeCurationIndex(documents, _, threshold))
+    val root = Similarity.ServedIndex("cur",
+        writeCurationIndex(_, _, threshold), "doc_id", Similarity.docSig)
+      .root(documents, s"$corpusTag@$threshold")
     val labels = spark.read.parquet(s"$root/labels")
     val quality = TextAnalysis.qualityScore(documents)
       .select(col("doc_id"), col("quality_bp"))

@@ -622,6 +622,11 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$root/variants")
   }
 
+  /** The clean-side variant index as a served index, keyed on the
+    * document corpus. */
+  private val FuzzyIndex = Similarity.ServedIndex("fuzzy",
+    writeVariantIndex, "doc_id", Similarity.docSig)
+
   /** q200: q199 timed on its SERVE leg (oracle: q199's VERBATIM —
     * store ≡ recompute): the clean-side variant index builds once per
     * corpus into the [[graft.FsUtil.ServedRoots]] cache; afterwards a
@@ -632,10 +637,7 @@ object Dedup {
     * continuously. */
   def fuzzyJoinServed(documents: DataFrame, corpusTag: String): DataFrame = {
     val spark = documents.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      Similarity.corpusKey(documents, "doc_id", s"fuzzy:$corpusTag",
-        sum(length(col("text")))),
-      "graft_fuzzyidx_served_")(writeVariantIndex(documents, _))
+    val root = FuzzyIndex.root(documents, corpusTag)
     fuzzyMatchTail(dirtyKeys(cleanKeys(documents)),
       spark.read.parquet(s"$root/variants"))
   }
@@ -650,14 +652,7 @@ object Dedup {
                             outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // resolve once per stream tag — the corpusKey aggregate must not
-    // scan the reference corpus per micro-batch (review r11)
-    val root = Similarity.streamRootFor(s"fuzzy:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        Similarity.corpusKey(documents, "doc_id", s"fuzzy:$corpusTag",
-          sum(length(col("text")))),
-        "graft_fuzzyidx_served_")(writeVariantIndex(documents, _))
-    }
+    val root = FuzzyIndex.streamRoot(documents, corpusTag)
     fuzzyMatchTail(batch.select(col("d_id"), col("dkey")),
         spark.read.parquet(s"$root/variants"))
       .write.mode("append").parquet(outDir)

@@ -603,8 +603,7 @@ object GraphAnn {
       cents.write.mode("overwrite").parquet(s"$root/centroids")
       // bucket count derives from the STORED centroid table — the same
       // deterministic rule the readers apply, so no meta file
-      val nb = CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-        v.sparkSession, s"$root/centroids"))
+      val nb = CellStore.bucketsOf(v.sparkSession, root)
       // label rides along as co-stored metadata — the filtered search
       // (q219/q220) reads it as a pushed parquet filter, the way a
       // production filtered-ANN index stores its filterable attributes
@@ -627,20 +626,13 @@ object GraphAnn {
     * vector reads per probe — constant in N. */
   def beamTopKServed(embeddings: DataFrame, corpusTag: String,
                      nProbes: Int = 10, k: Int = 5): DataFrame =
-    serveRoot(servedRootFor(embeddings, corpusTag),
+    serveRoot(GannIndex.root(embeddings, corpusTag),
       Similarity.probesFrame(embeddings, nProbes),
       embeddings.sparkSession, k)
 
-  /** The stored graph root for a corpus — built once per corpus under
-    * the shared [[graft.FsUtil.ServedRoots]] cache (exposed so the
-    * plan-shape spec can pin the pruned node read against the real
-    * store). */
-  private[llm] def servedRootFor(embeddings: DataFrame,
-                                 corpusTag: String): String =
-    graft.FsUtil.ServedRoots.getOrBuild(
-      Similarity.corpusKey(embeddings, "vec_id", s"gann:$corpusTag",
-        Similarity.embSig),
-      "graft_gann_served_")(writeGraphIndex(embeddings, _))
+  /** The stored graph as a served index (exposed so the plan-shape
+    * spec can pin the pruned node read against the real store). */
+  private[llm] val GannIndex = Similarity.ServedIndex("gann", writeGraphIndex)
 
   /** The stored node table pruned to a census frame `cellsF(cell)`: a
     * broadcast semi-join whose bucket key is the store's partition
@@ -653,8 +645,7 @@ object GraphAnn {
     * the scan-fraction gauges. */
   private[llm] def servedBaseRead(spark: org.apache.spark.sql.SparkSession,
                                   root: String): DataFrame => DataFrame = {
-    val nb = CellStore.bucketCount(
-      graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
+    val nb = CellStore.bucketsOf(spark, root)
     val nodes = spark.read.parquet(s"$root/nodes")
     cellsF =>
       CellStore.prunedToF(nodes, nb, cellsF)
@@ -681,8 +672,7 @@ object GraphAnn {
                                   root: String,
                                   nodeFilter: Option[Column] = None)
       : DataFrame => DataFrame = {
-    val nb = CellStore.bucketCount(
-      graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
+    val nb = CellStore.bucketsOf(spark, root)
     val nodes0 = spark.read.parquet(s"$root/nodes")
     val nodes = nodeFilter.map(nodes0.filter).getOrElse(nodes0)
     cand0 => {
@@ -713,8 +703,7 @@ object GraphAnn {
     * happens once per serve call; each hop only adds its join. */
   private[llm] def servedExpand(spark: org.apache.spark.sql.SparkSession,
                                 root: String): DataFrame => DataFrame = {
-    val nb = CellStore.bucketCount(
-      graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
+    val nb = CellStore.bucketsOf(spark, root)
     val edges = spark.read.parquet(s"$root/edges")
     bm => {
       val b = broadcast(bm.select(col("probe_id"), col("node"),
@@ -755,36 +744,20 @@ object GraphAnn {
     // depth; other values would silently break parity (ADVICE r14 #2)
     require(nProbes == 10 && k == 5,
       "graphRecall is oracle-gated at nProbes=10, k=5")
-    val truth = Similarity.cosineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-    val a = beamTopKServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(a, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("graph_beam").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    Similarity.recallOf(Similarity.cosineTopK(embeddings, nProbes, k),
+        beamTopKServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("graph_beam").as("method"), col("*"))
   }
 
   /** The q203 serve leg under Structured Streaming (foreachBatch):
     * probe vectors arrive as micro-batches and run the identical beam
     * search against the STORED graph — stream ≡ batch proved in
-    * StreamingSpec against [[beamTopKServed]]'s rows. The root resolves
-    * once per stream tag (the ivfPqStreamBatch discipline: corpusKey's
-    * corpus aggregate must not run on the per-batch hot path). */
+    * StreamingSpec against [[beamTopKServed]]'s rows. */
   def graphSearchStreamBatch(embeddings: DataFrame, corpusTag: String,
                              outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"),
-      Similarity.l2norm(col("embedding")).as("pn"))
-    val root = Similarity.streamRootFor(s"gann:$corpusTag") {
-      servedRootFor(embeddings, corpusTag)
-    }
-    serveRoot(root, probes, batch.sparkSession, k)
+    serveRoot(GannIndex.streamRoot(embeddings, corpusTag),
+      Similarity.probesOf(batch), batch.sparkSession, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -837,7 +810,7 @@ object GraphAnn {
     // constants (ADVICE r15 #3)
     require(nProbes == 10 && k == 5,
       "beamTopKFilteredServed is oracle-gated at nProbes=10, k=5")
-    filteredServeFromRoot(servedRootFor(embeddings, corpusTag),
+    filteredServeFromRoot(GannIndex.root(embeddings, corpusTag),
       Similarity.probesFrame(embeddings, nProbes),
       embeddings, k)
   }
@@ -864,13 +837,8 @@ object GraphAnn {
   def filteredGraphStreamBatch(embeddings: DataFrame, corpusTag: String,
                                outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"),
-      Similarity.l2norm(col("embedding")).as("pn"))
-    val root = Similarity.streamRootFor(s"gann:$corpusTag") {
-      servedRootFor(embeddings, corpusTag)
-    }
-    filteredServeFromRoot(root, probes, embeddings, k)
+    filteredServeFromRoot(GannIndex.streamRoot(embeddings, corpusTag),
+      Similarity.probesOf(batch), embeddings, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -889,28 +857,9 @@ object GraphAnn {
     // the oracle unrolls both chains at the registered constants
     require(nProbes == 10 && k == 5,
       "filteredGraphRecall is oracle-gated at nProbes=10, k=5")
-    val base = embeddings.select(col("vec_id"), col("embedding"),
-      col("label"), Similarity.l2norm(col("embedding")).as("nrm"))
-    val probes = Similarity.probesFrame(embeddings, nProbes)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = base.filter(col("label") % 2 === 0)
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pe"), col("embedding")) /
-        (col("pn") * col("nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = beamTopKFilteredServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("filtered_graph").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    Similarity.recallOf(Similarity.evenLabelTruth(embeddings, nProbes, k),
+        beamTopKFilteredServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("filtered_graph").as("method"), col("*"))
   }
 
   /** q227: MaxSim rerank over the GRAPH shortlist — q208's composition
@@ -935,7 +884,7 @@ object GraphAnn {
     require(nProbes == 10 && k == 5,
       "maxSimGraphRerank is oracle-gated at nProbes=10, k=5")
     val spark = embeddings.sparkSession
-    val root = servedRootFor(embeddings, corpusTag)
+    val root = GannIndex.root(embeddings, corpusTag)
     val short = serveRoot(root,
         Similarity.probesFrame(embeddings, nProbes), spark,
         Similarity.RegisteredFixedR)
@@ -1187,24 +1136,8 @@ object GraphAnn {
     * q35 scan with the eligibility predicate on the candidate side)
     * plus the q219 chain verbatim, q39's left-join + floor scoring. */
   val filteredGraphRecallSql: String =
-    s"""WITH ev AS (SELECT vec_id, embedding, label,
-      |    sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) nrm
-      |  FROM embeddings),
-      |tp AS (SELECT p.vec_id probe_id, n.vec_id neighbor_id,
-      |    round(list_sum(list_transform(list_zip(p.embedding, n.embedding),
-      |      z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.nrm * n.nrm), 4) cos
-      |  FROM ev p JOIN ev n ON p.vec_id < 10 AND n.vec_id != p.vec_id
-      |                     AND n.label % 2 = 0),
-      |truth AS (SELECT probe_id, neighbor_id FROM
-      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
-      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5),
-      |g AS (SELECT probe_id, neighbor_id FROM ($beamTopKFilteredSql) q)
-      |SELECT 'filtered_graph' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    Similarity.recallSql("filtered_graph", Similarity.evenLabelTruthCte,
+      beamTopKFilteredSql)
 
   /** Oracle for [[maxSimGraphRerank]]: the q202 chain cut at the
     * registered R as the shortlist, then q208's MaxSim kernel CTEs
@@ -1239,13 +1172,8 @@ object GraphAnn {
   /** Oracle for [[graphRecall]]: the q35 and q202 oracles verbatim as
     * derived tables, scored with q39's left-join + floor arithmetic. */
   val graphRecallSql: String =
-    s"""WITH truth AS (SELECT probe_id, neighbor_id
-      |               FROM (${Similarity.cosineTopKSql}) q),
-      |g AS (SELECT probe_id, neighbor_id FROM ($beamTopKSql) q)
-      |SELECT 'graph_beam' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    Similarity.recallSql("graph_beam",
+      s"""truth AS (SELECT probe_id, neighbor_id
+         |               FROM (${Similarity.cosineTopKSql}) q)""".stripMargin,
+      beamTopKSql)
 }

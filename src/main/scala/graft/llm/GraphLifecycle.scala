@@ -206,13 +206,6 @@ object GraphLifecycle {
       .withColumn("nq", qNorm(col("qe")))
   }
 
-  /** The number of bucket dirs under a base's node segment — derived
-    * from the stored centroid table by the same deterministic rule the
-    * write side used ([[CellStore.bucketCount]]); no meta file. */
-  private def nodeBucketsOf(spark: SparkSession, base: String): Long =
-    CellStore.bucketCount(
-      graft.FsUtil.parquetRowCount(spark, s"$base/centroids"))
-
   /** The LIVE members of `cells` alone — the per-batch live-view
     * resolution (the q193/q194 serve discipline applied to ingest,
     * VERDICT r13 #1): the base scan prunes to the literal cell list
@@ -228,7 +221,7 @@ object GraphLifecycle {
                             cells: Seq[Long]): DataFrame = {
     val (b0, ds) = nodeSegs(base)
     val baseSeg = CellStore.prunedTo(spark.read.parquet(b0),
-        nodeBucketsOf(spark, base), cells)
+        CellStore.bucketsOf(spark, base), cells)
       .select(col("vec_id"), col("qe"),
         col("cluster").cast("long").as("cluster"), col("gen"), col("del"))
     liveMembersFrom(baseSeg,
@@ -463,8 +456,7 @@ object GraphLifecycle {
       // prunes to the frontier's cell census on the edge base's
       // source-cell bucketing, and both file counts stay bounded
       // instead of one file per cell
-      val nb = CellStore.bucketCount(
-        graft.FsUtil.parquetRowCount(spark, s"$root/centroids"))
+      val nb = CellStore.bucketsOf(spark, root)
       CellStore.write(nodes, nb, s"$root/nodes0")
       val full = nodes.withColumn("nq", qNorm(col("qe")))
         .select(col("vec_id"), col("qe"), col("nq"), col("cluster"))
@@ -592,7 +584,7 @@ object GraphLifecycle {
   }
 
   /** The registered q206 form (r15, VERDICT r14 #4): the SAME audit
-    * rows, read from the shared [[servedRootFor]] store — the suite
+    * rows, read from the shared [[GannLcsIndex]] store — the suite
     * runs ONE lifecycle build per corpus, feeding q206's audit and
     * q211/q212's serve legs, instead of replaying the whole chain on a
     * scratch root a second time. The rows are computed during the build
@@ -602,7 +594,7 @@ object GraphLifecycle {
   def graphLifecycleAudited(embeddings: DataFrame,
                             corpusTag: String): DataFrame = {
     val spark = embeddings.sparkSession
-    spark.read.parquet(s"${servedRootFor(embeddings, corpusTag)}/audit")
+    spark.read.parquet(s"${GannLcsIndex.root(embeddings, corpusTag)}/audit")
       .orderBy(col("state"))
   }
 
@@ -726,7 +718,7 @@ object GraphLifecycle {
       case None => readNodeSeg(spark, b0).filter(lit(false))
         .select(col("vec_id"), col("gen"), col("del"))
     }
-    liveExpandFor(spark, base, nodeBucketsOf(spark, base),
+    liveExpandFor(spark, base, CellStore.bucketsOf(spark, base),
       touched)(frontier)
   }
 
@@ -773,7 +765,7 @@ object GraphLifecycle {
             coalesce(col("ncell"), col("cluster")).as("cell"))
     }).localCheckpoint()
     val baseRaw = spark.read.parquet(b0)
-    val nb = nodeBucketsOf(spark, base)
+    val nb = CellStore.bucketsOf(spark, base)
     val baseFor: DataFrame => DataFrame = cellsF =>
       liveMembersFromF(baseRaw, nb, dl, cellsF)
         .select(col("vec_id"), col("qe").as("embedding"),
@@ -803,25 +795,20 @@ object GraphLifecycle {
       .select(col("vec_id").as("probe_id"), col("qe").as("pe"),
         col("nq").as("pn"))
 
-  /** Builds (once per corpus, under the shared ServedRoots cache) the
-    * full q206 lifecycle INCLUDING a segment snapshot of the
-    * pre-compaction g2 state — a serving system pins a store state by
-    * snapshotting its segment manifest; the local stand-in copies the
-    * fixture-sized segment files. */
-  private[llm] def servedRootFor(embeddings: DataFrame,
-                                 corpusTag: String): String =
-    graft.FsUtil.ServedRoots.getOrBuild(
-      Similarity.corpusKey(embeddings, "vec_id", s"gannlcs:$corpusTag",
-        Similarity.embSig),
-      "graft_gannlc_served_") { r =>
-      // the audit rows land in the store too (q206 reads them back —
-      // one lifecycle build per corpus serves q206, q211 AND q212)
+  /** The served lifecycle store: the full q206 lifecycle INCLUDING a
+    * segment snapshot of the pre-compaction g2 state — a serving system
+    * pins a store state by snapshotting its segment manifest; the local
+    * stand-in copies the fixture-sized segment files. The audit rows
+    * land in the store too (q206 reads them back — one lifecycle build
+    * per corpus serves q206, q211 AND q212). */
+  private val GannLcsIndex = Similarity.ServedIndex("gannlcs",
+    (embeddings, r) => {
       graphLifecycleTo(embeddings, r, onState = { st =>
         if (st == "g2") graft.FsUtil.copyRecursively(
           new java.io.File(currentBase(r)), new java.io.File(s"$r/g2snap"))
       }).write.mode("overwrite").parquet(s"$r/audit")
       ()
-    }
+    })
 
   /** q211: the graph lifecycle's SERVE leg — the q206 write path closed
     * into a read path. One beam search per served state: the
@@ -839,7 +826,7 @@ object GraphLifecycle {
     require(nProbes == 10 && k == 5,
       "graphLifecycleServed is oracle-gated at nProbes=10, k=5")
     val spark = embeddings.sparkSession
-    val root = servedRootFor(embeddings, corpusTag)
+    val root = GannLcsIndex.root(embeddings, corpusTag)
     val g2 = s"$root/g2snap"
     val fin = currentBase(root)
     serveStateWith(spark, g2, "g2", stateProbes(spark, g2, nProbes), k)
@@ -859,9 +846,7 @@ object GraphLifecycle {
                                      k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val root = Similarity.streamRootFor(s"gannlcs:$corpusTag") {
-      servedRootFor(embeddings, corpusTag)
-    }
+    val root = GannLcsIndex.streamRoot(embeddings, corpusTag)
     val probes = batch.select(col("vec_id").as("probe_id"),
       col("qe").as("pe"), qNorm(col("qe")).as("pn"))
     serveStateWith(spark, currentBase(root), "g3c", probes, k)
@@ -888,7 +873,7 @@ object GraphLifecycle {
     require(nProbes == 10 && k == 5,
       "graphLifecycleRecall is oracle-gated at nProbes=10, k=5")
     val spark = embeddings.sparkSession
-    val root = servedRootFor(embeddings, corpusTag)
+    val root = GannLcsIndex.root(embeddings, corpusTag)
     recallLegAt(spark, s"$root/g2snap", "g2", nProbes, k)
       .unionByName(recallLegAt(spark, currentBase(root), "g3c", nProbes, k))
       .orderBy(col("state"))
@@ -904,23 +889,10 @@ object GraphLifecycle {
       .select(col("vec_id").as("probe_id"), col("qe").as("pe"),
         col("nq").as("pn"))
       .localCheckpoint()
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = live.join(broadcast(probes),
-        col("probe_id") =!= col("vec_id"))
-      .withColumn("cos", qCos(col("pe"), col("qe"), col("pn"), col("nq")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = serveStateWith(spark, base, state, probes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit(state).as("state"), col("n_truth"), col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth"))
-          .cast("long").as("recall_bp"))
+    Similarity.recallOf(
+        Similarity.bruteTopK(live, probes, "qe", "nq", k),
+        serveStateWith(spark, base, state, probes, k))
+      .select(lit(state).as("state"), col("*"))
   }
 
   /** Test hook: the final served state's live probe rows (vec_id, qe)
@@ -930,7 +902,7 @@ object GraphLifecycle {
                                        corpusTag: String,
                                        nProbes: Int = 10): DataFrame = {
     val spark = embeddings.sparkSession
-    val base = currentBase(servedRootFor(embeddings, corpusTag))
+    val base = currentBase(GannLcsIndex.root(embeddings, corpusTag))
     liveMembers(spark, base, col("vec_id") < nProbes)
       .select(col("vec_id"), col("qe"))
   }
@@ -1291,17 +1263,6 @@ object GraphLifecycle {
       |${serveLegSql("zz", "zn0", "zes", "zm0", "zfc2", "zgc2", "zkk", "g3c")},
       |${bruteLegSql("t2", "s2p", "lv2")},
       |${bruteLegSql("t3", "zzp", "zn0")},
-      |m AS (
-      |  SELECT 'g2' AS state, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM t2 t LEFT JOIN s2res g
-      |    ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id
-      |  UNION ALL
-      |  SELECT 'g3c' AS state, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM t3 t LEFT JOIN zzres g
-      |    ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id)
-      |SELECT state, n_truth, n_hits,
-      |  CAST(floor(10000.0 * n_hits / n_truth) AS BIGINT) AS recall_bp
-      |FROM m ORDER BY state""".stripMargin
+      |${Similarity.recallArmsSql("state", Seq(
+        ("g2", "t2", "s2res", "g"), ("g3c", "t3", "zzres", "g")))}""".stripMargin
 }

@@ -530,12 +530,9 @@ object Similarity {
     * query-time parameters (one narrow selectivity count pair +
     * the widened cell rank), never index state. */
   def ivfTopKFilteredServed(embeddings: DataFrame, corpusTag: String,
-                            nProbes: Int = 10, k: Int = 5): DataFrame = {
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-      "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
-    filteredServeRoot(root, probesFrame(embeddings, nProbes), embeddings, k)
-  }
+                            nProbes: Int = 10, k: Int = 5): DataFrame =
+    filteredServeRoot(IvfIndex.root(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k)
 
   private def filteredServeRoot(root: String, probes: DataFrame,
                                 embeddings: DataFrame, k: Int): DataFrame = {
@@ -548,21 +545,12 @@ object Similarity {
   /** The q207 serve leg under Structured Streaming (foreachBatch):
     * probe vectors arrive as micro-batches and run the identical
     * filtered search against the STORED index — stream ≡ batch proved
-    * in StreamingSpec against [[ivfTopKFilteredServed]]'s rows. The
-    * root resolves once per stream tag (the ivfPqStreamBatch
-    * discipline). */
+    * in StreamingSpec against [[ivfTopKFilteredServed]]'s rows. */
   def filteredSearchStreamBatch(embeddings: DataFrame, corpusTag: String,
                                 outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"),
-      l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"ivf:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-        "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
-    }
-    filteredServeRoot(root, probes, embeddings, k)
+    filteredServeRoot(IvfIndex.streamRoot(embeddings, corpusTag),
+      probesOf(batch), embeddings, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -653,8 +641,7 @@ object Similarity {
   private def maxSimRerankFrom(rawProbes: DataFrame, embeddings: DataFrame,
                                asg: DataFrame, cents: DataFrame, k: Int,
                                nSub: Int, dim: Int): DataFrame = {
-    val ivfProbes = rawProbes.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
+    val ivfProbes = probesOf(rawProbes)
     val wS = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     val short = ivfCandidatesFor(ivfProbes, embeddings, asg, cents, 0,
@@ -692,9 +679,7 @@ object Similarity {
                          nProbes: Int = 10, k: Int = 5,
                          nSub: Int = 4, dim: Int = 64): DataFrame = {
     val spark = embeddings.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-      "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
+    val root = IvfIndex.root(embeddings, corpusTag)
     maxSimRerankFrom(embeddings.filter(col("vec_id") < nProbes)
         .select(col("vec_id"), col("embedding")),
       embeddings,
@@ -705,17 +690,12 @@ object Similarity {
   /** The q209 serve leg under Structured Streaming (foreachBatch):
     * probe vectors arrive as micro-batches and run the identical
     * rerank against the STORED index — stream ≡ batch proved in
-    * StreamingSpec against [[maxSimRerankServed]]'s rows. The root
-    * resolves once per stream tag (the ivfPqStreamBatch discipline). */
+    * StreamingSpec against [[maxSimRerankServed]]'s rows. */
   def maxSimRerankStreamBatch(embeddings: DataFrame, corpusTag: String,
                               outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val root = streamRootFor(s"ivf:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-        "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
-    }
+    val root = IvfIndex.streamRoot(embeddings, corpusTag)
     maxSimRerankFrom(batch.select(col("vec_id"), col("embedding")),
       embeddings,
       spark.read.parquet(s"$root/assignments"),
@@ -826,13 +806,16 @@ object Similarity {
     * to the scan budget. */
   val IvfProbeFrac: Double = 0.13
 
-  /** The (probe_id, pe, pn) frame of the registered probe set — the
-    * first nProbes corpus vectors. The streaming legs substitute a
-    * micro-batch of arrivals for this frame. */
+  /** The (probe_id, pe, pn) probe frame of (vec_id, embedding) rows:
+    * the registered probe set ([[probesFrame]]) or a stream leg's
+    * micro-batch of arrivals. */
+  private[llm] def probesOf(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
+      l2norm(col("embedding")).as("pn"))
+
+  /** The registered probe set: the first nProbes corpus vectors. */
   private[llm] def probesFrame(embeddings: DataFrame, nProbes: Int): DataFrame =
-    embeddings.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        l2norm(col("embedding")).as("pn"))
+    probesOf(embeddings.filter(col("vec_id") < nProbes))
 
   /** `widen` multiplies the dynamic ⌈frac·⌈√N⌉⌉ budget inside the same
     * 1-row aggregate — the q204 filtered search passes its guarded
@@ -1339,6 +1322,104 @@ object Similarity {
       |  CAST(floor(1e6 * (p.pos_cos - n.neg_cos)) AS BIGINT) AS margin_micro
       |FROM pos p JOIN neg n USING (vec_id) ORDER BY p.vec_id""".stripMargin
 
+  /** The recall gate of every `*Recall` leg: recall@k of `got` against
+    * `truth`, both (probe_id, neighbor_id) frames, as one (n_truth,
+    * n_hits, recall_bp) row — the truth left-joined on the hits,
+    * recall_bp = floor(10000·hits/truth) on exact integers, so it is
+    * engine-independent. The caller adds its `method` or `state`
+    * label. */
+  private[llm] def recallOf(truth: DataFrame, got: DataFrame): DataFrame = {
+    val hits = got.select(col("probe_id"), col("neighbor_id"))
+      .withColumn("hit", lit(1L))
+    truth.select(col("probe_id"), col("neighbor_id"))
+      .join(hits, Seq("probe_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_truth"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .select(col("n_truth"), col("n_hits"),
+        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
+          .as("recall_bp"))
+  }
+
+  /** The brute-force truth of the recall legs that rank a subset or a
+    * store state: each probe's top-k of `rows` (vec_id, `vec`, `norm`)
+    * by rounded cosine against the (probe_id, pe, pn) `probes`, the
+    * probe itself excluded, ties on vec_id — (probe_id, neighbor_id).
+    * The caller passes only the rows eligible as neighbors. */
+  private[llm] def bruteTopK(rows: DataFrame, probes: DataFrame, vec: String,
+                             norm: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    rows.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .withColumn("cos", round(dot(col("pe"), col(vec)) /
+        (col("pn") * col(norm)), 4))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
+  }
+
+  /** The even-label truth of the filtered recall legs over the gen-0
+    * corpus (q221, q224, q240): [[bruteTopK]] of the eligible rows. */
+  private[llm] def evenLabelTruth(embeddings: DataFrame, nProbes: Int,
+                                  k: Int): DataFrame =
+    bruteTopK(embeddings.filter(col("label") % 2 === 0)
+        .withColumn("nrm", l2norm(col("embedding"))),
+      probesFrame(embeddings, nProbes), "embedding", "nrm", k)
+
+  /** The oracle of a one-method `*Recall` leg: `truthCtes` ends in a
+    * `truth(probe_id, neighbor_id)` CTE, `gotSql` is the approximate
+    * leg's oracle as a derived table aliased `alias`, scored with
+    * [[recallOf]]'s left join + floor arithmetic. */
+  private[llm] def recallSql(method: String, truthCtes: String,
+                             gotSql: String, alias: String = "q"): String =
+    s"""WITH $truthCtes,
+      |g AS (SELECT probe_id, neighbor_id FROM ($gotSql) $alias)
+      |SELECT '$method' AS method, count(*) AS n_truth,
+      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
+      |    / count(*)) AS BIGINT) AS recall_bp
+      |FROM truth t LEFT JOIN g
+      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+
+  /** The oracle tail of a many-arm recall leg (q39's methods, q212's
+    * states): one `m` CTE of (`label`, n_truth, n_hits) arms, each arm
+    * (label value, truth CTE, got CTE, got alias), then [[recallOf]]'s
+    * floor arithmetic ordered by `label`. */
+  private[llm] def recallArmsSql(label: String,
+                                 arms: Seq[(String, String, String, String)]): String =
+    arms.map { case (v, truth, got, a) =>
+      s"""  SELECT '$v' AS $label, count(*) AS n_truth,
+        |    CAST(sum(CASE WHEN $a.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+        |  FROM $truth t LEFT JOIN $got $a
+        |    ON $a.probe_id = t.probe_id AND $a.neighbor_id = t.neighbor_id""".stripMargin
+    }.mkString("m AS (\n", "\n  UNION ALL\n", ")\n") +
+      s"""SELECT $label, n_truth, n_hits,
+        |  CAST(floor(10000.0 * n_hits / n_truth) AS BIGINT) AS recall_bp
+        |FROM m ORDER BY $label""".stripMargin
+
+  /** A filtered leg's truth CTE over a scored `tp(probe_id, neighbor_id,
+    * cos)` CTE: each probe's top 5, ties on neighbor_id. */
+  private[llm] def topKTruthCte(tpCtes: String): String =
+    s"""$tpCtes,
+      |truth AS (SELECT probe_id, neighbor_id FROM
+      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
+      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5)""".stripMargin
+
+  /** The q35 truth CTE of the unfiltered recall legs. */
+  private[llm] lazy val cosineTruthCte: String =
+    s"truth AS (SELECT probe_id, neighbor_id FROM ($cosineTopKSql) q)"
+
+  /** The even-label truth of the filtered recall legs over the gen-0
+    * corpus (q221, q224, q240). */
+  private[llm] lazy val evenLabelTruthCte: String = topKTruthCte(
+    """ev AS (SELECT vec_id, embedding, label,
+      |    sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) nrm
+      |  FROM embeddings),
+      |tp AS (SELECT p.vec_id probe_id, n.vec_id neighbor_id,
+      |    round(list_sum(list_transform(list_zip(p.embedding, n.embedding),
+      |      z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.nrm * n.nrm), 4) cos
+      |  FROM ev p JOIN ev n ON p.vec_id < 10 AND n.vec_id != p.vec_id
+      |                     AND n.label % 2 = 0)""".stripMargin)
+
   /** ANN quality as a measured query: recall@k of the two approximate
     * indexes (IVF cells, SRP-LSH buckets) against the brute-force cosine
     * truth, one row per method. Turns "the index is approximately right"
@@ -1352,17 +1433,8 @@ object Similarity {
     * truth) on exact integers — engine-independent. */
   def annRecall(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5): DataFrame = {
     val truth = cosineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-    def scored(method: String, approx: DataFrame): DataFrame = {
-      val a = approx.select(col("probe_id"), col("neighbor_id"))
-        .withColumn("hit", lit(1L))
-      truth.join(a, Seq("probe_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(lit(method).as("method"), col("n_truth"), col("n_hits"),
-          floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-            .as("recall_bp"))
-    }
+    def scored(method: String, approx: DataFrame): DataFrame =
+      recallOf(truth, approx).select(lit(method).as("method"), col("*"))
     // one IVF training pass feeds the trained-IVF arm; one PQ codebook
     // AND one full-corpus encode feed BOTH the adc and refine arms (the
     // recon frame is checkpointed, so the second arm reuses the
@@ -1510,17 +1582,12 @@ object Similarity {
     // rank at the registered constants (ADVICE r15 #3)
     require(nProbes == 10 && k == 5,
       "sq8TopKServed is oracle-gated at nProbes=10, k=5")
-    val root = sq8RootFor(embeddings, corpusTag)
+    val root = Sq8Index.root(embeddings, corpusTag)
     val c = embeddings.sparkSession.read.parquet(s"$root/packed")
     sq8ScanFrom(c, c.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("b8").as("pb"),
         col("nsq").as("pn")), k)
   }
-
-  private def sq8RootFor(embeddings: DataFrame, corpusTag: String): String =
-    graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"sq8:$corpusTag", embSig),
-      "graft_sq8_served_")(writeSq8Index(embeddings, _))
 
   /** The q215 serve leg under Structured Streaming (foreachBatch):
     * probe vectors arrive as micro-batches, pack on the fly (the same
@@ -1531,9 +1598,7 @@ object Similarity {
                            outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.VectorFunctions.{int8Dot, int8Pack}
-    val root = streamRootFor(s"sq8:$corpusTag") {
-      sq8RootFor(embeddings, corpusTag)
-    }
+    val root = Sq8Index.streamRoot(embeddings, corpusTag)
     val probes = batch
       .select(col("vec_id").as("probe_id"),
         int8Pack(col("embedding")).as("pb"))
@@ -1579,29 +1644,13 @@ object Similarity {
     * packed index. */
   def sq8Recall(embeddings: DataFrame, nProbes: Int = 10,
                 k: Int = 5): DataFrame = {
-    val truth = cosineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-    val a = sq8TopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(a, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("sq8_brute").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    recallOf(cosineTopK(embeddings, nProbes, k),
+        sq8TopK(embeddings, nProbes, k))
+      .select(lit("sq8_brute").as("method"), col("*"))
   }
 
   val sq8RecallSql: String =
-    s"""WITH truth AS (SELECT probe_id, neighbor_id FROM ($cosineTopKSql) q),
-      |g AS (SELECT probe_id, neighbor_id FROM ($sq8TopKSql) q)
-      |SELECT 'sq8_brute' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    recallSql("sq8_brute", cosineTruthCte, sq8TopKSql)
 
   // -----------------------------------------------------------------
   // q236–q238: the BINARY (1-bit) quantization tier — the extreme
@@ -1717,18 +1766,9 @@ object Similarity {
     * bytes-per-recall ladder. */
   def bqRecall(embeddings: DataFrame, nProbes: Int = 10,
                k: Int = 5): DataFrame = {
-    val truth = cosineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-    val a = bqRefineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(a, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("bq_refine").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    recallOf(cosineTopK(embeddings, nProbes, k),
+        bqRefineTopK(embeddings, nProbes, k))
+      .select(lit("bq_refine").as("method"), col("*"))
   }
 
   /** Writes the binary signature index under `root`: `sigs(vec_id, lo,
@@ -1752,9 +1792,7 @@ object Similarity {
                nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "bqServed is oracle-gated at nProbes=10, k=5")
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"bq:$corpusTag", embSig),
-      "graft_bq_served_")(writeBqIndex(embeddings, _))
+    val root = BqIndex.root(embeddings, corpusTag)
     bqRefineFrom(embeddings.sparkSession.read.parquet(s"$root/sigs"),
       embeddings, nProbes, k, 60)
   }
@@ -1768,15 +1806,9 @@ object Similarity {
   def bqSearchStreamBatch(embeddings: DataFrame, corpusTag: String,
                           outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"bq:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"bq:$corpusTag", embSig),
-        "graft_bq_served_")(writeBqIndex(embeddings, _))
-    }
+    val root = BqIndex.streamRoot(embeddings, corpusTag)
     bqRefineWith(batch.sparkSession.read.parquet(s"$root/sigs"),
-      probes, embeddings, k, 60)
+      probesOf(batch), embeddings, k, 60)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -1793,9 +1825,7 @@ object Similarity {
                        nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "bqFilteredServed is oracle-gated at nProbes=10, k=5")
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"bq:$corpusTag", embSig),
-      "graft_bq_served_")(writeBqIndex(embeddings, _))
+    val root = BqIndex.root(embeddings, corpusTag)
     bqRefineWith(embeddings.sparkSession.read.parquet(s"$root/sigs"),
       probesFrame(embeddings, nProbes), embeddings, k, 60,
       pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
@@ -1810,28 +1840,9 @@ object Similarity {
                        nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "bqFilteredRecall is oracle-gated at nProbes=10, k=5")
-    val base = embeddings.select(col("vec_id"), col("embedding"),
-      col("label"), l2norm(col("embedding")).as("nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = base.filter(col("label") % 2 === 0)
-      .join(broadcast(probesFrame(embeddings, nProbes)),
-        col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pe"), col("embedding")) /
-        (col("pn") * col("nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = bqFilteredServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("bq_filtered").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    recallOf(evenLabelTruth(embeddings, nProbes, k),
+        bqFilteredServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("bq_filtered").as("method"), col("*"))
   }
 
   /** Oracle for [[bqFilteredServed]] (q239): the q236 chain with (a)
@@ -1880,24 +1891,7 @@ object Similarity {
     * truth (q224's CTE) + the q239 chain verbatim, q39's left-join +
     * floor scoring. */
   lazy val bqFilteredRecallSql: String =
-    s"""WITH ev AS (SELECT vec_id, embedding, label,
-      |    sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) nrm
-      |  FROM embeddings),
-      |tp AS (SELECT p.vec_id probe_id, n.vec_id neighbor_id,
-      |    round(list_sum(list_transform(list_zip(p.embedding, n.embedding),
-      |      z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.nrm * n.nrm), 4) cos
-      |  FROM ev p JOIN ev n ON p.vec_id < 10 AND n.vec_id != p.vec_id
-      |                     AND n.label % 2 = 0),
-      |truth AS (SELECT probe_id, neighbor_id FROM
-      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
-      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5),
-      |g AS (SELECT probe_id, neighbor_id FROM ($bqFilteredServedSql) q)
-      |SELECT 'bq_filtered' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    recallSql("bq_filtered", evenLabelTruthCte, bqFilteredServedSql)
 
   /** Oracle for [[bqRefineTopK]]: the same two-word sign-bit pack
     * (positional 2^d weights in BIGINT), XOR+POPCNT Hamming, top-60
@@ -1938,14 +1932,7 @@ object Similarity {
   /** Oracle for [[bqRecall]]: q35's truth + the q236 chain, q39's
     * left-join + floor scoring. */
   lazy val bqRecallSql: String =
-    s"""WITH truth AS (SELECT probe_id, neighbor_id FROM ($cosineTopKSql) q),
-      |g AS (SELECT probe_id, neighbor_id FROM ($bqRefineTopKSql) q)
-      |SELECT 'bq_refine' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    recallSql("bq_refine", cosineTruthCte, bqRefineTopKSql)
 
   /** q216: the IVF×SQ8 COMPOSED index (FAISS's "IVF<k>,SQ8") — the
     * trained coarse quantizer prunes the scan to the probed cells and
@@ -2023,8 +2010,7 @@ object Similarity {
       // (q222–q224) reads it as a pushed parquet filter
       CellStore.write(sq8Packed(embeddings).join(asg, "vec_id")
           .join(embeddings.select(col("vec_id"), col("label")), "vec_id"),
-        CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-          embeddings.sparkSession, s"$root/centroids")),
+        CellStore.bucketsOf(embeddings.sparkSession, root),
         s"$root/packed")
     }
 
@@ -2040,15 +2026,9 @@ object Similarity {
     // constants (ADVICE r15 #3)
     require(nProbes == 10 && k == 5,
       "ivfSq8Served is oracle-gated at nProbes=10, k=5")
-    ivfSq8ServeRoot(ivfSq8RootFor(embeddings, corpusTag),
+    ivfSq8ServeRoot(IvfSq8Index.root(embeddings, corpusTag),
       probesFrame(embeddings, nProbes), embeddings, k)
   }
-
-  private def ivfSq8RootFor(embeddings: DataFrame,
-                            corpusTag: String): String =
-    graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"ivfsq8:$corpusTag", embSig),
-      "graft_ivfsq8_served_")(writeIvfSq8Index(embeddings, _))
 
   private def ivfSq8ServeRoot(root: String, probes: DataFrame,
                               embeddings: DataFrame, k: Int): DataFrame = {
@@ -2062,7 +2042,7 @@ object Similarity {
     // probed cells' buckets are read (the ivfPqServeRoot shape over
     // the bounded-file-count layout)
     val pruned = CellStore.prunedToF(packed,
-      CellStore.bucketCount(cents.count()),
+      CellStore.bucketsOf(spark, root),
       pcells.select(col("cell")).distinct())
     ivfSq8Rank(pcells, pruned, k)
   }
@@ -2074,12 +2054,8 @@ object Similarity {
   def ivfSq8StreamBatch(embeddings: DataFrame, corpusTag: String,
                         outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"ivfsq8:$corpusTag") {
-      ivfSq8RootFor(embeddings, corpusTag)
-    }
-    ivfSq8ServeRoot(root, probes, embeddings, k)
+    ivfSq8ServeRoot(IvfSq8Index.streamRoot(embeddings, corpusTag),
+      probesOf(batch), embeddings, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -2092,18 +2068,9 @@ object Similarity {
     * scan-cost column is graded on. */
   def ivfSq8Recall(embeddings: DataFrame, corpusTag: String,
                    nProbes: Int = 10, k: Int = 5): DataFrame = {
-    val truth = cosineTopK(embeddings, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-    val a = ivfSq8Served(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(a, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("ivf_sq8").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    recallOf(cosineTopK(embeddings, nProbes, k),
+        ivfSq8Served(embeddings, corpusTag, nProbes, k))
+      .select(lit("ivf_sq8").as("method"), col("*"))
   }
 
   /** Oracle for [[ivfSq8TopK]]/[[ivfSq8Served]]: the trained-Lloyd
@@ -2154,14 +2121,7 @@ object Similarity {
   /** Oracle for [[ivfSq8Recall]]: q35's truth + the q216 chain,
     * q39's left-join + floor scoring. */
   lazy val ivfSq8RecallSql: String =
-    s"""WITH truth AS (SELECT probe_id, neighbor_id FROM ($cosineTopKSql) q),
-      |g AS (SELECT probe_id, neighbor_id FROM ($ivfSq8TopKSql) q)
-      |SELECT 'ivf_sq8' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    recallSql("ivf_sq8", cosineTruthCte, ivfSq8TopKSql)
 
   /** q222: FILTERED IVF×SQ8 — the q204 metadata-predicate discipline on
     * the composed tier (VERDICT r15 missing #2: the predicate + widening
@@ -2213,7 +2173,7 @@ object Similarity {
                            nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "ivfSq8FilteredServed is oracle-gated at nProbes=10, k=5")
-    ivfSq8FilteredServeRoot(ivfSq8RootFor(embeddings, corpusTag),
+    ivfSq8FilteredServeRoot(IvfSq8Index.root(embeddings, corpusTag),
       probesFrame(embeddings, nProbes), embeddings, k)
   }
 
@@ -2229,7 +2189,7 @@ object Similarity {
     // then the probed-cell semi-join's bucket key prunes via DPP
     val pruned = CellStore.prunedToF(
       packed.filter(col("label") % 2 === 0),
-      CellStore.bucketCount(cents.count()),
+      CellStore.bucketsOf(spark, root),
       pcells.select(col("cell")).distinct())
     ivfSq8Rank(pcells, pruned, k)
   }
@@ -2240,12 +2200,8 @@ object Similarity {
   def ivfSq8FilteredStreamBatch(embeddings: DataFrame, corpusTag: String,
                                 outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    val root = streamRootFor(s"ivfsq8:$corpusTag") {
-      ivfSq8RootFor(embeddings, corpusTag)
-    }
-    ivfSq8FilteredServeRoot(root, probes, embeddings, k)
+    ivfSq8FilteredServeRoot(IvfSq8Index.streamRoot(embeddings, corpusTag),
+      probesOf(batch), embeddings, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -2260,28 +2216,9 @@ object Similarity {
                            nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
       "ivfSq8FilteredRecall is oracle-gated at nProbes=10, k=5")
-    val base = embeddings.select(col("vec_id"), col("embedding"),
-      col("label"), l2norm(col("embedding")).as("nrm"))
-    val probes = probesFrame(embeddings, nProbes)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = base.filter(col("label") % 2 === 0)
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pe"), col("embedding")) /
-        (col("pn") * col("nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = ivfSq8FilteredServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("ivf_sq8_filtered").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    recallOf(evenLabelTruth(embeddings, nProbes, k),
+        ivfSq8FilteredServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("ivf_sq8_filtered").as("method"), col("*"))
   }
 
   /** Oracle for [[ivfSq8TopKFiltered]]/[[ivfSq8FilteredServed]]: the
@@ -2342,24 +2279,7 @@ object Similarity {
     * truth + the q222 chain verbatim, q39's left-join + floor
     * scoring. */
   lazy val ivfSq8FilteredRecallSql: String =
-    s"""WITH ev AS (SELECT vec_id, embedding, label,
-      |    sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) nrm
-      |  FROM embeddings),
-      |tp AS (SELECT p.vec_id probe_id, n.vec_id neighbor_id,
-      |    round(list_sum(list_transform(list_zip(p.embedding, n.embedding),
-      |      z -> z[1]::DOUBLE * z[2]::DOUBLE)) / (p.nrm * n.nrm), 4) cos
-      |  FROM ev p JOIN ev n ON p.vec_id < 10 AND n.vec_id != p.vec_id
-      |                     AND n.label % 2 = 0),
-      |truth AS (SELECT probe_id, neighbor_id FROM
-      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
-      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5),
-      |g AS (SELECT probe_id, neighbor_id FROM ($ivfSq8FilteredTopKSql) q)
-      |SELECT 'ivf_sq8_filtered' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+    recallSql("ivf_sq8_filtered", evenLabelTruthCte, ivfSq8FilteredTopKSql)
 
   // -----------------------------------------------------------------
   // q225/q226/q231: the SQ8 family on the generation store ([[Sq8Gen]],
@@ -2442,9 +2362,7 @@ object Similarity {
     require(nProbes == 10 && k == 5,
       "sq8LifecycleServed is oracle-gated at nProbes=10, k=5")
     val spark = embeddings.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"sq8lc:$corpusTag", embSig),
-      "graft_sq8lc_served_")(sq8LifecycleTo(embeddings, _))
+    val root = Sq8LcIndex.root(embeddings, corpusTag)
     val cents = spark.read.parquet(s"$root/centroids")
     val live0 = Sq8Gen.band(embeddings)
       .filter(col("b") === 0 && !col("del"))
@@ -2890,9 +2808,7 @@ object Similarity {
     * through the same scoring plan. */
   private def pqScoredFrom(recon: DataFrame, embeddings: DataFrame,
                            nProbes: Int): DataFrame = {
-    val probes = embeddings.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        l2norm(col("embedding")).as("pn"))
+    val probes = probesFrame(embeddings, nProbes)
     // codegen'd kernels on the hot N×probes scan (r10): the interpreted
     // aggregate(zip_with(...)) lambdas cost ~1 µs/element over 64 dims —
     // the same double-accumulation order as VectorDotProduct, which now
@@ -3711,6 +3627,50 @@ object Similarity {
     sum(round(element_at(col("embedding"), 1).cast("double") * 1000)
       .cast("long"))
 
+  /** The document-corpus content signal for [[corpusKey]]: total text
+    * length. */
+  private[llm] def docSig: Column = sum(length(col("text")))
+
+  /** One stored index, built once per corpus into the shared
+    * [[graft.FsUtil.ServedRoots]] cache: every served, filtered, stream
+    * and recall leg of a tier finds its store through its one value.
+    * `tag` namespaces the [[corpusKey]] and names the temp dir
+    * (`graft_${tag}_served_`); `idCol` and `sig` are the key's id
+    * column and content signal; `write` builds the store under a
+    * fresh root.
+    *
+    * Stream-root contract: [[streamRoot]] resolves the root once per
+    * (tag, corpus tag) per session, because the static side of a
+    * stream-static join cannot change mid-stream — the corpus-sized key
+    * aggregate runs once per tag, never once per micro-batch. A corpus
+    * that changes under a reused tag within one session needs a fresh
+    * tag; the batch legs ([[root]]) keep the content-signal guard. */
+  private[llm] final case class ServedIndex(
+      tag: String,
+      write: (DataFrame, String) => Unit,
+      idCol: String = "vec_id",
+      sig: Column = embSig) {
+    def root(df: DataFrame, corpusTag: String): String =
+      graft.FsUtil.ServedRoots.getOrBuild(
+        corpusKey(df, idCol, s"$tag:$corpusTag", sig),
+        s"graft_${tag}_served_")(write(df, _))
+
+    def streamRoot(df: DataFrame, corpusTag: String): String =
+      streamRoots.computeIfAbsent(s"$tag:$corpusTag",
+        _ => root(df, corpusTag))
+  }
+
+  private val streamRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  private[llm] val IvfIndex = ServedIndex("ivf", writeVectorIndex(_, _))
+  private[llm] val PqIndex = ServedIndex("pq", writePqIndex(_, _))
+  private[llm] val IvfPqIndex = ServedIndex("ivfpq", writeIvfPqIndex)
+  private[llm] val Sq8Index = ServedIndex("sq8", writeSq8Index)
+  private[llm] val IvfSq8Index = ServedIndex("ivfsq8", writeIvfSq8Index)
+  private[llm] val BqIndex = ServedIndex("bq", writeBqIndex)
+  private[llm] val Sq8LcIndex = ServedIndex("sq8lc", sq8LifecycleTo)
+
   /** q179: the q37/q175 multi-probe IVF search timed on its serve leg —
     * identical results (oracle: q37's VERBATIM), but the Lloyd training
     * runs only on the first call per corpus; afterwards query-time work
@@ -3721,9 +3681,7 @@ object Similarity {
                     nProbes: Int = 10, k: Int = 5,
                     nProbe: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-      "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
+    val root = IvfIndex.root(embeddings, corpusTag)
     val asg = spark.read.parquet(s"$root/assignments")
     val cents = spark.read.parquet(s"$root/centroids")
     ivfTopKWith(embeddings, asg, cents, nProbes, k, nProbe)
@@ -3758,9 +3716,7 @@ object Similarity {
   def pqRefineServed(embeddings: DataFrame, corpusTag: String,
                      nProbes: Int = 10, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"pq:$corpusTag", embSig),
-      "graft_pqidx_served_")(writePqIndex(embeddings, _))
+    val root = PqIndex.root(embeddings, corpusTag)
     val cb = spark.read.parquet(s"$root/codebook")
     val enc = spark.read.parquet(s"$root/encodings")
     pqRefineFrom(pqDecode(enc, cb), embeddings, nProbes, k)
@@ -3790,8 +3746,7 @@ object Similarity {
       CellStore.write(
         pqAssign(pqSubRows(embeddings, 16, 64, sampled = false), cb)
           .join(asg, "vec_id"),
-        CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-          embeddings.sparkSession, s"$root/centroids")),
+        CellStore.bucketsOf(embeddings.sparkSession, root),
         s"$root/invlists")
     }
   }
@@ -3810,18 +3765,8 @@ object Similarity {
     * rows — not the decode, not the scoring. */
   def ivfPqServed(embeddings: DataFrame, corpusTag: String,
                   nProbes: Int = 10, k: Int = 5): DataFrame =
-    ivfPqServeFor(probesFrame(embeddings, nProbes), embeddings,
-      corpusTag, k)
-
-  /** The serve plan over an arbitrary probe frame — shared by q187 and
-    * the streaming leg ([[ivfPqStreamBatch]]). */
-  private def ivfPqServeFor(probes: DataFrame, embeddings: DataFrame,
-                            corpusTag: String, k: Int): DataFrame =
-    ivfPqServeRoot(
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"ivfpq:$corpusTag", embSig),
-        "graft_ivfpq_served_")(writeIvfPqIndex(embeddings, _)),
-      probes, embeddings, k)
+    ivfPqServeRoot(IvfPqIndex.root(embeddings, corpusTag),
+      probesFrame(embeddings, nProbes), embeddings, k)
 
   /** The serve plan over an EXPLICIT store root (centroids + codebook +
     * cell-partitioned invlists) — split from the ServedRoots resolution
@@ -3845,7 +3790,7 @@ object Similarity {
     val cellsF = pcells.select(col("cell")).distinct()
     val pruned =
       if (inv.columns.contains("bucket"))
-        CellStore.prunedToF(inv, CellStore.bucketCount(cents.count()),
+        CellStore.prunedToF(inv, CellStore.bucketsOf(spark, root),
           cellsF)
       else inv.join(broadcast(cellsF),
         inv("cluster") === cellsF("cell"), "left_semi")
@@ -3869,16 +3814,8 @@ object Similarity {
   def ivfPqStreamBatch(embeddings: DataFrame, corpusTag: String,
                        outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
-    val probes = batch.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-    // resolve the root ONCE per stream tag — corpusKey's corpus-sized
-    // aggregate must not run per micro-batch on the serve hot path
-    val root = streamRootFor(s"ivfpq:$corpusTag") {
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"ivfpq:$corpusTag", embSig),
-        "graft_ivfpq_served_")(writeIvfPqIndex(embeddings, _))
-    }
-    ivfPqServeRoot(root, probes, embeddings, k)
+    ivfPqServeRoot(IvfPqIndex.streamRoot(embeddings, corpusTag),
+      probesOf(batch), embeddings, k)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -4506,9 +4443,7 @@ object Similarity {
                       corpusTag: String, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val root = graft.FsUtil.ServedRoots.getOrBuild(
-      corpusKey(embeddings, "vec_id", s"ivf:$corpusTag", embSig),
-      "graft_vecidx_served_")(writeVectorIndex(embeddings, _))
+    val root = IvfIndex.root(embeddings, corpusTag)
     val asg = spark.read.parquet(s"$root/assignments")
     val cents = spark.read.parquet(s"$root/centroids")
     val corpus = embeddings.select(col("vec_id"), col("embedding"),
@@ -4522,9 +4457,7 @@ object Similarity {
       ceil(lit(IvfProbeFrac) * ceil(sqrt(count(lit(1)).cast("double"))))
         .cast("int").as("plim"))
     val topk = udaf(new graft.functions.TopKAggregator(k))
-    probes
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-        l2norm(col("embedding")).as("pn"))
+    probesOf(probes)
       .join(broadcast(cellsRow))
       .join(broadcast(plim))
       .withColumn("scored", transform(col("cells"), c =>
@@ -4552,40 +4485,18 @@ object Similarity {
     * tables (DuckDB allows a WITH inside a subquery), then scores hits
     * with the same left-join + floor arithmetic as the Spark side. */
   val annRecallSql: String =
-    s"""WITH truth AS (SELECT probe_id, neighbor_id FROM ($cosineTopKSql) q),
+    s"""WITH $cosineTruthCte,
       |ivfl AS (SELECT probe_id, neighbor_id FROM ($ivfLabelTopKSql) q),
       |ivft AS (SELECT probe_id, neighbor_id FROM ($ivfTopKSql) q),
       |pq AS (SELECT probe_id, neighbor_id FROM ($pqTopKSql) q),
       |pqr AS (SELECT probe_id, neighbor_id FROM ($pqRefineSql) q),
       |lsh AS (SELECT probe_id, neighbor_id FROM ($lshTopKSql) q),
-      |m AS (
-      |  SELECT 'ivf_label' AS method, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN i.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM truth t LEFT JOIN ivfl i
-      |    ON i.probe_id = t.probe_id AND i.neighbor_id = t.neighbor_id
-      |  UNION ALL
-      |  SELECT 'ivf_trained' AS method, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN i.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM truth t LEFT JOIN ivft i
-      |    ON i.probe_id = t.probe_id AND i.neighbor_id = t.neighbor_id
-      |  UNION ALL
-      |  SELECT 'pq_adc' AS method, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN p.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM truth t LEFT JOIN pq p
-      |    ON p.probe_id = t.probe_id AND p.neighbor_id = t.neighbor_id
-      |  UNION ALL
-      |  SELECT 'pq_refine' AS method, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN p.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM truth t LEFT JOIN pqr p
-      |    ON p.probe_id = t.probe_id AND p.neighbor_id = t.neighbor_id
-      |  UNION ALL
-      |  SELECT 'srp_lsh' AS method, count(*) AS n_truth,
-      |    CAST(sum(CASE WHEN l.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM truth t LEFT JOIN lsh l
-      |    ON l.probe_id = t.probe_id AND l.neighbor_id = t.neighbor_id)
-      |SELECT method, n_truth, n_hits,
-      |  CAST(floor(10000.0 * n_hits / n_truth) AS BIGINT) AS recall_bp
-      |FROM m ORDER BY method""".stripMargin
+      |${recallArmsSql("method", Seq(
+        ("ivf_label", "truth", "ivfl", "i"),
+        ("ivf_trained", "truth", "ivft", "i"),
+        ("pq_adc", "truth", "pq", "p"),
+        ("pq_refine", "truth", "pqr", "p"),
+        ("srp_lsh", "truth", "lsh", "l")))}""".stripMargin
 
   /** Compaction threshold for the LSM vector index (q193), in percent
     * of the base segment's rows — integer arithmetic, oracle-mirrored
@@ -4796,13 +4707,13 @@ object Similarity {
       for (g <- 1 to 2) appendDelta(root, band(embeddings, g), tables)
     }
 
-    /** The mid-lifecycle store of a corpus, built once per corpus into
-      * the [[graft.FsUtil.ServedRoots]] cache: ONE physical store serves
-      * the tier's plain, filtered and streamed legs. */
+    /** The mid-lifecycle store as the tier's served index: ONE
+      * physical store serves the tier's plain, filtered and streamed
+      * legs. */
+    private val served = ServedIndex(codec.tag, midStoreTo)
+
     def servedRoot(embeddings: DataFrame, corpusTag: String): String =
-      graft.FsUtil.ServedRoots.getOrBuild(
-        corpusKey(embeddings, "vec_id", s"${codec.tag}:$corpusTag", embSig),
-        s"graft_${codec.tag}_served_")(midStoreTo(embeddings, _))
+      served.root(embeddings, corpusTag)
 
     /** The latest-wins view of the store's current state: the live base
       * anti-join (broadcast: deltas are batch-sized) the delta entity
@@ -4823,8 +4734,7 @@ object Similarity {
         codec.payload.map(col)
       val base = readSegment(spark, basePath, bucketed = true)
       val b = cells.fold(base)(CellStore.prunedToF(base,
-          CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-            spark, s"$root/centroids")), _))
+          CellStore.bucketsOf(spark, root), _))
         .select(cols: _*)
       if (deltas.isEmpty) b
       else {
@@ -4866,20 +4776,15 @@ object Similarity {
     }
 
     /** A probe micro-batch (vec_id, embedding) served by `serve` from
-      * the SAME stored root as the batch leg (resolved once per stream
-      * tag, [[streamRootFor]]), results appended to `outDir`. Per-probe
-      * results depend only on the probe row and the stored segments, so
-      * the union of micro-batches ≡ one batch (StreamingSpec). */
+      * the SAME stored root as the batch leg, results appended to
+      * `outDir`. Per-probe results depend only on the probe row and the
+      * stored segments, so the union of micro-batches ≡ one batch
+      * (StreamingSpec). */
     def serveStream(embeddings: DataFrame, corpusTag: String, outDir: String,
                     batch: DataFrame)(
-        serve: (String, DataFrame) => DataFrame): Unit = {
-      val probes = batch.select(col("vec_id").as("probe_id"),
-        col("embedding").as("pe"), l2norm(col("embedding")).as("pn"))
-      val root = streamRootFor(s"${codec.tag}:$corpusTag") {
-        servedRoot(embeddings, corpusTag)
-      }
-      serve(root, probes).write.mode("append").parquet(outDir)
-    }
+        serve: (String, DataFrame) => DataFrame): Unit =
+      serve(served.streamRoot(embeddings, corpusTag), probesOf(batch))
+        .write.mode("append").parquet(outDir)
   }
 
   /** One generation-store tier's encoder: everything that differs between
@@ -5147,10 +5052,7 @@ object Similarity {
     * table, the same rule the pruned readers apply. */
   private def lsmWriteBase(df: DataFrame, root: String,
                            path: String): Unit =
-    CellStore.write(df,
-      CellStore.bucketCount(graft.FsUtil.parquetRowCount(
-        df.sparkSession, s"$root/centroids")),
-      path)
+    CellStore.write(df, CellStore.bucketsOf(df.sparkSession, root), path)
 
   /** The corpus in the ×1000 integer domain with its label riding
     * along (entity-stable in the fixture): (vec_id, qe, label). */
@@ -5262,18 +5164,6 @@ object Similarity {
   private def dropSegCount(path: String): Unit = {
     segCounts.remove(path); ()
   }
-
-  /** Session cache of resolved ServedRoots for the STREAMING legs: the
-    * static side of a stream-static join cannot change mid-stream, so
-    * the corpus-sized [[corpusKey]] aggregate runs once per tag rather
-    * than once per micro-batch (review r11). A corpus genuinely
-    * changing under a reused tag within one session must use a fresh
-    * tag — the BATCH legs keep the content-signature guard. */
-  private val streamRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[llm] def streamRootFor(key: String)(resolve: => String): String =
-    streamRoots.computeIfAbsent(key, _ => resolve)
 
   /** The compaction index of a base segment path: 0 for the seed
     * `base`, N for `base_cN`. */
@@ -5489,26 +5379,10 @@ object Similarity {
         FlatLsm.servedRoot(embeddings, corpusTag), None)
       .withColumn("qvec", transform(col("qe"), x => x.cast("double")))
       .withColumn("qn", l2norm(col("qvec")))
-    val probes = probesFrame(embeddings, nProbes)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = view.filter(col("label") % 2 === 0)
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pe"), col("qvec")) /
-        (col("pn") * col("qn")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = lsmFilteredServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("lsm_filtered").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    val truth = bruteTopK(view.filter(col("label") % 2 === 0),
+      probesFrame(embeddings, nProbes), "qvec", "qn", k)
+    recallOf(truth, lsmFilteredServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("lsm_filtered").as("method"), col("*"))
   }
 
   /** Oracle: the frozen trained-Lloyd CTE, the g2 LSM view from scratch
@@ -5622,7 +5496,8 @@ object Similarity {
     * live row) + the q228 chain verbatim, q39's left-join + floor
     * scoring. */
   val lsmFilteredRecallSql: String =
-    s"""WITH q AS (SELECT vec_id,
+    recallSql("lsm_filtered", topKTruthCte(
+      """q AS (SELECT vec_id,
       |    list_transform(embedding, x -> CAST(round(x::DOUBLE * 1000) AS BIGINT)) AS qe
       |  FROM embeddings),
       |arr AS (SELECT g.range AS b, q.vec_id AS ent, q.vec_id,
@@ -5645,17 +5520,8 @@ object Similarity {
       |      / (p.pn * sqrt(list_sum(list_transform(w.qe,
       |          x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos
       |  FROM probes p JOIN lvv w ON w.vec_id != p.probe_id
-      |  JOIN embeddings e ON e.vec_id = w.vec_id AND e.label % 2 = 0),
-      |truth AS (SELECT probe_id, neighbor_id FROM
-      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
-      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5),
-      |g AS (SELECT probe_id, neighbor_id FROM ($lsmFilteredServedSql) q2)
-      |SELECT 'lsm_filtered' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+      |  JOIN embeddings e ON e.vec_id = w.vec_id AND e.label % 2 = 0)""".stripMargin),
+      lsmFilteredServedSql, "q2")
 
   // -------------------------------------------------------------------
   // q232/q233: the SQ8 LSM store — the q193 segment pattern on the
@@ -5839,27 +5705,11 @@ object Similarity {
     val live = al.withColumn("rn", row_number().over(wl))
       .filter(col("rn") === 1 && !col("del"))
       .select(col("vec_id"), col("embedding"), col("label"))
-    val probes = probesFrame(embeddings, nProbes)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val truth = live.filter(col("label") % 2 === 0)
-      .withColumn("nrm", l2norm(col("embedding")))
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(dot(col("pe"), col("embedding")) /
-        (col("pn") * col("nrm")), 4))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val got = sq8LsmFilteredServed(embeddings, corpusTag, nProbes, k)
-      .select(col("probe_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(got, Seq("probe_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_truth"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(lit("sq8_lsm_filtered").as("method"), col("n_truth"),
-        col("n_hits"),
-        floor(lit(10000.0) * col("n_hits") / col("n_truth")).cast("long")
-          .as("recall_bp"))
+    val truth = bruteTopK(live.filter(col("label") % 2 === 0)
+        .withColumn("nrm", l2norm(col("embedding"))),
+      probesFrame(embeddings, nProbes), "embedding", "nrm", k)
+    recallOf(truth, sq8LsmFilteredServed(embeddings, corpusTag, nProbes, k))
+      .select(lit("sq8_lsm_filtered").as("method"), col("*"))
   }
 
   /** Oracle for [[sq8IndexLifecycle]]'s packed-LSM filtered serve
@@ -5949,7 +5799,8 @@ object Similarity {
     * double, round 4) + the q234 chain verbatim, q39's left-join +
     * floor scoring. */
   lazy val sq8LsmFilteredRecallSql: String =
-    s"""WITH arr0 AS (SELECT g.range AS b, e.vec_id AS ent, e.vec_id,
+    recallSql("sq8_lsm_filtered", topKTruthCte(
+      """arr0 AS (SELECT g.range AS b, e.vec_id AS ent, e.vec_id,
       |    list_transform(e.embedding, x -> CAST(x + 0.5 * g.range AS FLOAT)) AS emb,
       |    e.label, (e.vec_id % 3 = 0) AS del
       |  FROM embeddings e CROSS JOIN range(1, 3) g
@@ -5969,17 +5820,8 @@ object Similarity {
       |      / (p.pn * sqrt(list_sum(list_transform(w.emb,
       |          x -> x::DOUBLE * x::DOUBLE)))), 4) AS cos
       |  FROM probes0 p JOIN lv0 w
-      |    ON w.vec_id != p.probe_id AND w.label % 2 = 0),
-      |truth AS (SELECT probe_id, neighbor_id FROM
-      |    (SELECT *, row_number() OVER (PARTITION BY probe_id
-      |       ORDER BY cos DESC, neighbor_id) rnk FROM tp) WHERE rnk <= 5),
-      |g AS (SELECT probe_id, neighbor_id FROM ($sq8LsmFilteredServedSql) q2)
-      |SELECT 'sq8_lsm_filtered' AS method, count(*) AS n_truth,
-      |  CAST(sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-      |  CAST(floor(10000.0 * sum(CASE WHEN g.probe_id IS NOT NULL THEN 1 ELSE 0 END)
-      |    / count(*)) AS BIGINT) AS recall_bp
-      |FROM truth t LEFT JOIN g
-      |  ON g.probe_id = t.probe_id AND g.neighbor_id = t.neighbor_id""".stripMargin
+      |    ON w.vec_id != p.probe_id AND w.label % 2 = 0)""".stripMargin),
+      sq8LsmFilteredServedSql, "q2")
 
   /** Oracle for [[sq8LsmIndex]]: the frozen trained-Lloyd CTE over the
     * whole corpus, every state's served view from one latest-wins

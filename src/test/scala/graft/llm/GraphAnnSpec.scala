@@ -47,7 +47,7 @@ class GraphAnnSpec extends SparkSpec {
   test("served vector reads prune to the candidate cells IN-PLAN: the " +
     "stored node scan carries a dynamic-partition-pruning subquery on " +
     "bucket, and the store's file count is bounded (VERDICT r15 #1/#2)") {
-    val root = GraphAnn.servedRootFor(emb, s"gann-spec-$sf")
+    val root = GraphAnn.GannIndex.root(emb, s"gann-spec-$sf")
     val all = spark.read.parquet(s"$root/nodes")
       .select(col("cluster")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -90,7 +90,7 @@ class GraphAnnSpec extends SparkSpec {
   test("r18 candidate-join base read (servedJoinBase): the scoring " +
     "join itself prunes the stored node scan — DPP on bucket plants " +
     "from the candidate frame, no census semi-join, no checkpoint") {
-    val root = GraphAnn.servedRootFor(emb, s"gann-spec-$sf")
+    val root = GraphAnn.GannIndex.root(emb, s"gann-spec-$sf")
     val nodes = spark.read.parquet(s"$root/nodes")
     val all = nodes.select(col("cluster")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -120,7 +120,7 @@ class GraphAnnSpec extends SparkSpec {
     "IN-PLAN (r17, VERDICT r16 #1): the stored edge scan carries a DPP " +
     "subquery on its source-cell bucket, the expansion is exact, and " +
     "the edge store's file count is bounded") {
-    val root = GraphAnn.servedRootFor(emb, s"gann-spec-$sf")
+    val root = GraphAnn.GannIndex.root(emb, s"gann-spec-$sf")
     val stored = spark.read.parquet(s"$root/edges")
     val nodes = spark.read.parquet(s"$root/nodes")
     val all = nodes.select(col("cluster")).distinct()

@@ -1015,4 +1015,43 @@ class SimilaritySpec extends SparkSpec {
       assert(jobs <= 2, s"one ingest batch ran $jobs jobs (bound 2)")
     } finally graft.FsUtil.deleteRecursively(new java.io.File(root))
   }
+
+  test("recall gate and brute truth on planted frames: recallOf floors " +
+    "(2 of 3 = 6666 bp), bruteTopK under the even-label predicate skips " +
+    "the probe and odd labels and breaks a cos tie on the smaller vec_id") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    def bp(truth: Seq[(Long, Long)], got: Seq[(Long, Long)]): (Long, Long, Long) = {
+      val r = Similarity.recallOf(truth.toDF("probe_id", "neighbor_id"),
+        got.toDF("probe_id", "neighbor_id")).head()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    assert(bp(Seq((1L, 10L), (1L, 11L), (1L, 12L)),
+      Seq((1L, 10L), (1L, 12L), (1L, 99L), (2L, 11L))) === ((3L, 2L, 6666L)))
+    assert(bp(Seq((2L, 20L), (2L, 21L)), Seq((2L, 30L), (1L, 20L))) ===
+      ((2L, 0L, 0L)))
+    assert(bp(Seq((1L, 10L), (2L, 20L)), Seq((2L, 20L), (1L, 10L))) ===
+      ((2L, 2L, 10000L)))
+    // probe 0 points along x; row 1 (odd label) is its exact twin, rows
+    // 4 and 6 tie at cos 0.7071 behind row 2 (0.8)
+    val emb = Seq(
+      (0L, Array(1.0f, 0.0f), 0),
+      (1L, Array(1.0f, 0.0f), 1),
+      (2L, Array(0.8f, 0.6f), 2),
+      (4L, Array(1.0f, 1.0f), 4),
+      (6L, Array(2.0f, 2.0f), 0),
+      (8L, Array(0.0f, 1.0f), 2)).toDF("vec_id", "embedding", "label")
+    val probes = Similarity.probesFrame(emb, 1)
+    def top(k: Int): Seq[Long] =
+      Similarity.bruteTopK(emb.filter(col("label") % 2 === 0)
+          .withColumn("nrm", Similarity.l2norm(col("embedding"))),
+        probes, "embedding", "nrm", k)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .map { case (p, n) => assert(p === 0L); n }
+    assert(top(2).sorted === Seq(2L, 4L), "tie at the cut must keep vec_id 4")
+    assert(top(5).sorted === Seq(2L, 4L, 6L, 8L))
+    assert(Similarity.evenLabelTruth(emb, 1, 2).collect()
+      .map(_.getLong(1)).sorted.toSeq === Seq(2L, 4L))
+  }
 }
