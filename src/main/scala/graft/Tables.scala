@@ -11,10 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the reference's SSTable→Parquet job lays out its output
   * (reference `App.scala:65-81`).
   *
-  * Scale notes: `spark.read.parquet` yields a `FileSourceScanExec` whose
+  * Scale notes: a table read yields a `FileSourceScanExec` whose
   * splits are parquet row groups — at 100 TB this is thousands of parallel
   * input splits with predicate pushdown and column pruning handled by
-  * Catalyst; nothing here caps parallelism.
+  * Catalyst; nothing here caps parallelism. The schema comes from ONE
+  * footer, read on the driver ([[FsUtil.readParquet]]): the same footer
+  * Spark's own inference would read, so the read resolves the same schema
+  * at any scale and launches no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -22,7 +25,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    FsUtil.readParquet(spark, s"$dir/$table.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -14,7 +14,7 @@ object CopyPipeline {
   def read(spark: SparkSession, conf: JobConfig): Option[DataFrame] =
     if (!conf.shouldRead) None
     else conf.readPath.map(p =>
-      spark.read.options(conf.readOptions - "path").parquet(p))
+      graft.FsUtil.readParquet(spark, conf.readOptions - "path", p))
 
   /** Write leg; passes through None / skips when writeOptions is empty
     * (reference `SparkUtils.scala:68-69`, `:77`). Returns rows written. */

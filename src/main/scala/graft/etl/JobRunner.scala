@@ -55,7 +55,7 @@ object JobRunner {
         val dirs = CoordinatedCommit.write(df,
           Seq(CoordinatedCommit.Destination("cluster_1", conf.writePath.get)),
           jobId, observer)
-        df.sparkSession.read.parquet(dirs.head).count()
+        graft.FsUtil.parquetRowCount(df.sparkSession, dirs.head)
     }
 
   /** Session bootstrap (reference `initialize`, `SparkUtils.scala:20-32`):

@@ -1228,8 +1228,8 @@ object Corpus {
     val scratch = java.nio.file.Files.createTempDirectory("graft_curidx_").toString
     try {
       writeCurationIndex(documents, scratch)
-      val fps = spark.read.parquet(s"$scratch/fingerprints")
-      val labels = spark.read.parquet(s"$scratch/labels")
+      val fps = graft.FsUtil.readParquet(spark, s"$scratch/fingerprints")
+      val labels = graft.FsUtil.readParquet(spark, s"$scratch/labels")
       val fpRow = fps.agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("fp")).as("n_keys"),
@@ -1285,7 +1285,7 @@ object Corpus {
     val scratch = java.nio.file.Files.createTempDirectory("graft_curidx_").toString
     try {
       writeCurationIndex(documents, scratch)
-      val labels = spark.read.parquet(s"$scratch/labels")
+      val labels = graft.FsUtil.readParquet(spark, s"$scratch/labels")
       val quality = TextAnalysis.qualityScore(documents)
         .select(col("doc_id"), col("quality_bp"))
       labels.join(quality, col("id") === col("doc_id"))
@@ -1316,7 +1316,7 @@ object Corpus {
     val root = Similarity.ServedIndex("cur",
         writeCurationIndex(_, _, threshold), "doc_id", Similarity.docSig)
       .root(documents, s"$corpusTag@$threshold")
-    val labels = spark.read.parquet(s"$root/labels")
+    val labels = graft.FsUtil.readParquet(spark, s"$root/labels")
     val quality = TextAnalysis.qualityScore(documents)
       .select(col("doc_id"), col("quality_bp"))
     labels.join(quality, col("id") === col("doc_id"))
@@ -1498,7 +1498,7 @@ object Corpus {
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val cur = Similarity.nextGen(root) - 1
-    val stored = spark.read.parquet(s"$root/gen$cur")
+    val stored = graft.FsUtil.readParquet(spark, s"$root/gen$cur")
     val surv = batch.select(col("doc_id"), normFp.as("fp"))
       .join(stored.select(col("fp")).distinct(), Seq("fp"), "left_anti")
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
@@ -1511,7 +1511,7 @@ object Corpus {
                               root: String): (DataFrame, DataFrame, DataFrame) = {
     val spark = documents.sparkSession
     writeFpGen0(documents, root)
-    val stored = spark.read.parquet(s"$root/gen0")
+    val stored = graft.FsUtil.readParquet(spark, s"$root/gen0")
     // in-batch dedup (ADVICE r8): two new docs sharing a novel fp must
     // not both land in the next generation — fp stays a UNIQUE key of
     // the index (min doc_id wins, deterministic)
@@ -1521,7 +1521,7 @@ object Corpus {
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     stored.unionByName(surv.select(col("doc_id"), col("fp")))
       .write.mode("overwrite").parquet(s"$root/gen1")
-    (stored, surv, spark.read.parquet(s"$root/gen1"))
+    (stored, surv, graft.FsUtil.readParquet(spark, s"$root/gen1"))
   }
 
   val updateFingerprintIndexSql: String =
@@ -1749,7 +1749,7 @@ object Corpus {
       .repartition(32, col("bkt"))
       .write.mode("overwrite").partitionBy("bkt").parquet(store)
     def audit(g: String, nDirty: Int): DataFrame =
-      spark.read.parquet(store)
+      graft.FsUtil.readParquet(spark, store)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("ent")).as("n_ents"),
           sum(col("ent") * 100000L +
@@ -1779,7 +1779,7 @@ object Corpus {
   private[llm] def dirtyStoreScan(spark: org.apache.spark.sql.SparkSession,
                                   store: String,
                                   dirtyF: DataFrame): DataFrame =
-    spark.read.parquet(store)
+    graft.FsUtil.readParquet(spark, store)
       .withColumn("bkt", col("bkt").cast("long"))
       .join(broadcast(dirtyF.filter(col("bkt") >= 0)), Seq("bkt"), "left_semi")
 
@@ -1898,8 +1898,8 @@ object Corpus {
             when(col("inherited"), 1L).otherwise(0L)).as("checksum"))
         .select(lit("2_ingest").as("stage"), col("n_rows"), col("checksum"))
       Similarity.writeVectorIndex(embeddings, s"$scratch/vec")
-      val vAsg = spark.read.parquet(s"$scratch/vec/assignments")
-      val vCents = spark.read.parquet(s"$scratch/vec/centroids")
+      val vAsg = graft.FsUtil.readParquet(spark, s"$scratch/vec/assignments")
+      val vCents = graft.FsUtil.readParquet(spark, s"$scratch/vec/centroids")
       val s3 = vAsg.agg(count(lit(1)).as("n_rows"),
           sum(col("vec_id") * 100000L + col("cluster")).as("ca"))
         .crossJoin(vCents.agg(sum(col("cluster") * 1000000L +

@@ -639,7 +639,7 @@ object Dedup {
     val spark = documents.sparkSession
     val root = FuzzyIndex.root(documents, corpusTag)
     fuzzyMatchTail(dirtyKeys(cleanKeys(documents)),
-      spark.read.parquet(s"$root/variants"))
+      graft.FsUtil.readParquet(spark, s"$root/variants"))
   }
 
   /** q200 under STRUCTURED STREAMING — dirty records arrive as a
@@ -654,7 +654,7 @@ object Dedup {
     val spark = batch.sparkSession
     val root = FuzzyIndex.streamRoot(documents, corpusTag)
     fuzzyMatchTail(batch.select(col("d_id"), col("dkey")),
-        spark.read.parquet(s"$root/variants"))
+        graft.FsUtil.readParquet(spark, s"$root/variants"))
       .write.mode("append").parquet(outDir)
     ()
   }

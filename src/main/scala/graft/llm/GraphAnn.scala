@@ -646,7 +646,7 @@ object GraphAnn {
   private[llm] def servedBaseRead(spark: org.apache.spark.sql.SparkSession,
                                   root: String): DataFrame => DataFrame = {
     val nb = CellStore.bucketsOf(spark, root)
-    val nodes = spark.read.parquet(s"$root/nodes")
+    val nodes = graft.FsUtil.readParquet(spark, s"$root/nodes")
     cellsF =>
       CellStore.prunedToF(nodes, nb, cellsF)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("label"),
@@ -673,7 +673,7 @@ object GraphAnn {
                                   nodeFilter: Option[Column] = None)
       : DataFrame => DataFrame = {
     val nb = CellStore.bucketsOf(spark, root)
-    val nodes0 = spark.read.parquet(s"$root/nodes")
+    val nodes0 = graft.FsUtil.readParquet(spark, s"$root/nodes")
     val nodes = nodeFilter.map(nodes0.filter).getOrElse(nodes0)
     cand0 => {
       val b = broadcast(cand0.select(col("probe_id"), col("node"),
@@ -704,7 +704,7 @@ object GraphAnn {
   private[llm] def servedExpand(spark: org.apache.spark.sql.SparkSession,
                                 root: String): DataFrame => DataFrame = {
     val nb = CellStore.bucketsOf(spark, root)
-    val edges = spark.read.parquet(s"$root/edges")
+    val edges = graft.FsUtil.readParquet(spark, s"$root/edges")
     bm => {
       val b = broadcast(bm.select(col("probe_id"), col("node"),
           CellStore.bucketOf(col("cell").cast("long"), nb).as("bkt"))
@@ -721,10 +721,10 @@ object GraphAnn {
                              k: Int): DataFrame =
     beamFrom(probes, servedJoinBase(spark, root),
       servedExpand(spark, root),
-      spark.read.parquet(s"$root/medoids")
+      graft.FsUtil.readParquet(spark, s"$root/medoids")
         .withColumn("cell", col("cluster")),
-      spark.read.parquet(s"$root/centroids"),
-      spark.read.parquet(s"$root/coarse"), k)
+      graft.FsUtil.readParquet(spark, s"$root/centroids"),
+      graft.FsUtil.readParquet(spark, s"$root/coarse"), k)
 
   /** q210: graph-tier quality as a MEASURED query — recall@k of the
     * α-pruned beam search against the brute-force cosine truth (q35),
@@ -824,10 +824,10 @@ object GraphAnn {
     beamFrom(probes,
       servedJoinBase(spark, root, Some(col("label") % 2 === 0)),
       servedExpand(spark, root),
-      spark.read.parquet(s"$root/medoids")
+      graft.FsUtil.readParquet(spark, s"$root/medoids")
         .withColumn("cell", col("cluster")),
-      spark.read.parquet(s"$root/centroids"),
-      spark.read.parquet(s"$root/coarse"), k,
+      graft.FsUtil.readParquet(spark, s"$root/centroids"),
+      graft.FsUtil.readParquet(spark, s"$root/coarse"), k,
       widen = Some(embeddings.agg(Similarity.evenLabelWiden.as("w"))))
   }
 

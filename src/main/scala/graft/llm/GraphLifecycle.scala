@@ -183,7 +183,7 @@ object GraphLifecycle {
     * explicit select drops the bucket column so unionByName and the
     * join keys agree across segments. */
   private def readNodeSeg(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p).select(col("vec_id"), col("qe"),
+    graft.FsUtil.readParquet(spark, p).select(col("vec_id"), col("qe"),
       col("cluster").cast("long").as("cluster"), col("gen"), col("del"))
 
   /** The node segments' resolved view at the current store state:
@@ -220,7 +220,7 @@ object GraphLifecycle {
   private def liveMembersIn(spark: SparkSession, base: String,
                             cells: Seq[Long]): DataFrame = {
     val (b0, ds) = nodeSegs(base)
-    val baseSeg = CellStore.prunedTo(spark.read.parquet(b0),
+    val baseSeg = CellStore.prunedTo(graft.FsUtil.readParquet(spark, b0),
         CellStore.bucketsOf(spark, base), cells)
       .select(col("vec_id"), col("qe"),
         col("cluster").cast("long").as("cluster"), col("gen"), col("del"))
@@ -344,7 +344,7 @@ object GraphLifecycle {
         // explicit select: the base segment's read-back carries the
         // bucketed layout's cluster/bucket columns, the delta segments
         // carry scell — normalize to the liveness schema
-        spark.read.parquet(p)
+        graft.FsUtil.readParquet(spark, p)
           .select(col("src"), col("dst"), col("cos"), col("dcell"))
           .withColumn("seg", lit(g))
       }.reduce(_ unionByName _)
@@ -394,9 +394,9 @@ object GraphLifecycle {
     * (one file-index listing); each hop only adds its joins. */
   private def liveExpandFor(spark: SparkSession, base: String, nb: Long,
                             touched: DataFrame): DataFrame => DataFrame = {
-    val e0 = spark.read.parquet(s"$base/edges0")
+    val e0 = graft.FsUtil.readParquet(spark, s"$base/edges0")
     val deltas = deltaGens(base).map(g =>
-      spark.read.parquet(s"$base/edges$g") -> g.toLong)
+      graft.FsUtil.readParquet(spark, s"$base/edges$g") -> g.toLong)
     bm => {
       val b = broadcast(bm.select(col("probe_id"), col("node"),
           col("cell").cast("long").as("cell"),
@@ -500,8 +500,8 @@ object GraphLifecycle {
     * + the probed cells only — never the base segments. */
   private def ingestBatch(spark: SparkSession, base: String,
                           batch: DataFrame, g: Long): Unit = {
-    val fine = spark.read.parquet(s"$base/centroids")
-    val coarse = spark.read.parquet(s"$base/coarse")
+    val fine = graft.FsUtil.readParquet(spark, s"$base/centroids")
+    val coarse = graft.FsUtil.readParquet(spark, s"$base/coarse")
     val liveArr = batch.filter(!col("del")).select(col("vec_id"), col("qe"))
     val cand = frozenCand2L(liveArr, coarse, fine).localCheckpoint()
     val nodes = liveArr.join(argminCell(cand), "vec_id")
@@ -594,7 +594,8 @@ object GraphLifecycle {
   def graphLifecycleAudited(embeddings: DataFrame,
                             corpusTag: String): DataFrame = {
     val spark = embeddings.sparkSession
-    spark.read.parquet(s"${GannLcsIndex.root(embeddings, corpusTag)}/audit")
+    graft.FsUtil.readParquet(spark,
+        s"${GannLcsIndex.root(embeddings, corpusTag)}/audit")
       .orderBy(col("state"))
   }
 
@@ -752,7 +753,7 @@ object GraphLifecycle {
       case None => readNodeSeg(spark, b0).filter(lit(false))
         .select(col("vec_id"), col("gen"), col("del"))
     }
-    val m0 = spark.read.parquet(s"$base/medoids")
+    val m0 = graft.FsUtil.readParquet(spark, s"$base/medoids")
     val medoids = (dl match {
       case None => m0.select(col("cluster"), col("node"),
         col("cluster").as("cell"))
@@ -764,7 +765,7 @@ object GraphLifecycle {
           .select(col("cluster"), col("node"),
             coalesce(col("ncell"), col("cluster")).as("cell"))
     }).localCheckpoint()
-    val baseRaw = spark.read.parquet(b0)
+    val baseRaw = graft.FsUtil.readParquet(spark, b0)
     val nb = CellStore.bucketsOf(spark, base)
     val baseFor: DataFrame => DataFrame = cellsF =>
       liveMembersFromF(baseRaw, nb, dl, cellsF)
@@ -778,8 +779,8 @@ object GraphLifecycle {
     // folded (cell = cluster) scoring join does not apply here.
     GraphAnn.beamFrom(probes, GraphAnn.censusJoin(baseFor),
         liveExpandFor(spark, base, nb, touched), medoids,
-        spark.read.parquet(s"$base/centroids"),
-        spark.read.parquet(s"$base/coarse"), k)
+        graft.FsUtil.readParquet(spark, s"$base/centroids"),
+        graft.FsUtil.readParquet(spark, s"$base/coarse"), k)
       .select(lit(state).as("state"), col("probe_id"), col("neighbor_id"),
         col("cos"), col("rnk"))
   }

@@ -538,8 +538,8 @@ object Similarity {
                                 embeddings: DataFrame, k: Int): DataFrame = {
     val spark = embeddings.sparkSession
     ivfTopKFilteredFrom(probes, embeddings,
-      spark.read.parquet(s"$root/assignments"),
-      spark.read.parquet(s"$root/centroids"), k)
+      graft.FsUtil.readParquet(spark, s"$root/assignments"),
+      graft.FsUtil.readParquet(spark, s"$root/centroids"), k)
   }
 
   /** The q207 serve leg under Structured Streaming (foreachBatch):
@@ -683,8 +683,8 @@ object Similarity {
     maxSimRerankFrom(embeddings.filter(col("vec_id") < nProbes)
         .select(col("vec_id"), col("embedding")),
       embeddings,
-      spark.read.parquet(s"$root/assignments"),
-      spark.read.parquet(s"$root/centroids"), k, nSub, dim)
+      graft.FsUtil.readParquet(spark, s"$root/assignments"),
+      graft.FsUtil.readParquet(spark, s"$root/centroids"), k, nSub, dim)
   }
 
   /** The q209 serve leg under Structured Streaming (foreachBatch):
@@ -698,8 +698,8 @@ object Similarity {
     val root = IvfIndex.streamRoot(embeddings, corpusTag)
     maxSimRerankFrom(batch.select(col("vec_id"), col("embedding")),
       embeddings,
-      spark.read.parquet(s"$root/assignments"),
-      spark.read.parquet(s"$root/centroids"), k, 4, 64)
+      graft.FsUtil.readParquet(spark, s"$root/assignments"),
+      graft.FsUtil.readParquet(spark, s"$root/centroids"), k, 4, 64)
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -1583,7 +1583,7 @@ object Similarity {
     require(nProbes == 10 && k == 5,
       "sq8TopKServed is oracle-gated at nProbes=10, k=5")
     val root = Sq8Index.root(embeddings, corpusTag)
-    val c = embeddings.sparkSession.read.parquet(s"$root/packed")
+    val c = graft.FsUtil.readParquet(embeddings.sparkSession, s"$root/packed")
     sq8ScanFrom(c, c.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("b8").as("pb"),
         col("nsq").as("pn")), k)
@@ -1603,7 +1603,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"),
         int8Pack(col("embedding")).as("pb"))
       .withColumn("pn", int8Dot(col("pb"), col("pb")))
-    sq8ScanFrom(batch.sparkSession.read.parquet(s"$root/packed"),
+    sq8ScanFrom(graft.FsUtil.readParquet(batch.sparkSession, s"$root/packed"),
       probes, k)
       .write.mode("append").parquet(outDir)
     ()
@@ -1691,27 +1691,29 @@ object Similarity {
     * filters the CANDIDATE signatures before the Hamming ranking
     * (ineligible rows never occupy shortlist slots) and `widen` scales
     * the shortlist depth R by the measured 1/selectivity in-plan —
-    * the q204 discipline with R as the budget. */
+    * the q204 discipline with R as the budget. Without `widen` the
+    * budget is the constant R: no corpus aggregate, no cross join. */
   private[llm] def bqRefineWith(sigs: DataFrame, probeF: DataFrame,
                                 embeddings: DataFrame, k: Int,
                                 baseR: Int,
                                 pred: Option[Column] = None,
-                                widen: Column = lit(1.0)): DataFrame = {
+                                widen: Option[Column] = None): DataFrame = {
     val psig = probeF.select(col("probe_id"),
       bqSigCol(col("pe"), 1).as("plo"),
       bqSigCol(col("pe"), 33).as("phi"))
-    val rlim = broadcast(embeddings.agg(
-      ceil(lit(baseR.toDouble) * widen).cast("long").as("rlim")))
     val wh = Window.partitionBy(col("probe_id"))
       .orderBy(col("ham"), col("vec_id"))
-    val short = pred.map(sigs.filter).getOrElse(sigs)
+    val ranked = pred.map(sigs.filter).getOrElse(sigs)
       .join(broadcast(psig), col("vec_id") =!= col("probe_id"))
       .withColumn("ham",
         (bit_count(col("plo").bitwiseXOR(col("lo"))) +
           bit_count(col("phi").bitwiseXOR(col("hi")))).cast("long"))
       .withColumn("rn", row_number().over(wh))
-      .crossJoin(rlim)
-      .filter(col("rn") <= col("rlim"))
+    val short = widen.fold(ranked.filter(col("rn") <= baseR)) { w =>
+        ranked.crossJoin(broadcast(embeddings.agg(
+            ceil(lit(baseR.toDouble) * w).cast("long").as("rlim"))))
+          .filter(col("rn") <= col("rlim"))
+      }
       .select(col("probe_id"), col("vec_id"))
     val base = embeddings.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
@@ -1793,7 +1795,8 @@ object Similarity {
     require(nProbes == 10 && k == 5,
       "bqServed is oracle-gated at nProbes=10, k=5")
     val root = BqIndex.root(embeddings, corpusTag)
-    bqRefineFrom(embeddings.sparkSession.read.parquet(s"$root/sigs"),
+    bqRefineFrom(
+      graft.FsUtil.readParquet(embeddings.sparkSession, s"$root/sigs"),
       embeddings, nProbes, k, 60)
   }
 
@@ -1807,7 +1810,7 @@ object Similarity {
                           outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
     val root = BqIndex.streamRoot(embeddings, corpusTag)
-    bqRefineWith(batch.sparkSession.read.parquet(s"$root/sigs"),
+    bqRefineWith(graft.FsUtil.readParquet(batch.sparkSession, s"$root/sigs"),
       probesOf(batch), embeddings, k, 60)
       .write.mode("append").parquet(outDir)
     ()
@@ -1826,9 +1829,10 @@ object Similarity {
     require(nProbes == 10 && k == 5,
       "bqFilteredServed is oracle-gated at nProbes=10, k=5")
     val root = BqIndex.root(embeddings, corpusTag)
-    bqRefineWith(embeddings.sparkSession.read.parquet(s"$root/sigs"),
+    bqRefineWith(
+      graft.FsUtil.readParquet(embeddings.sparkSession, s"$root/sigs"),
       probesFrame(embeddings, nProbes), embeddings, k, 60,
-      pred = Some(col("label") % 2 === 0), widen = evenLabelWiden)
+      pred = Some(col("label") % 2 === 0), widen = Some(evenLabelWiden))
   }
 
   /** q240: the filtered binary tier's acceptance gate — recall@5 of
@@ -2033,8 +2037,8 @@ object Similarity {
   private def ivfSq8ServeRoot(root: String, probes: DataFrame,
                               embeddings: DataFrame, k: Int): DataFrame = {
     val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val packed = spark.read.parquet(s"$root/packed")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
+    val packed = graft.FsUtil.readParquet(spark, s"$root/packed")
     val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
       nProbe = 0, frac = IvfPqProbeFrac))
     // prune FIRST: the probed-cell semi-join's bucket key is the
@@ -2181,8 +2185,8 @@ object Similarity {
                                       embeddings: DataFrame,
                                       k: Int): DataFrame = {
     val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val packed = spark.read.parquet(s"$root/packed")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
+    val packed = graft.FsUtil.readParquet(spark, s"$root/packed")
     val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
       nProbe = 0, frac = IvfPqProbeFrac, widen = evenLabelWiden))
     // predicate FIRST (a pushed parquet filter on the stored label),
@@ -2363,14 +2367,14 @@ object Similarity {
       "sq8LifecycleServed is oracle-gated at nProbes=10, k=5")
     val spark = embeddings.sparkSession
     val root = Sq8LcIndex.root(embeddings, corpusTag)
-    val cents = spark.read.parquet(s"$root/centroids")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
     val live0 = Sq8Gen.band(embeddings)
       .filter(col("b") === 0 && !col("del"))
       .select(col("vec_id"), col("embedding"))
     val pcells = broadcast(probeCellsFor(probesFrame(embeddings, nProbes),
       live0, cents, nProbe = 0, frac = IvfPqProbeFrac))
     ivfSq8Rank(pcells,
-      spark.read.parquet(s"$root/gen3")
+      graft.FsUtil.readParquet(spark, s"$root/gen3")
         .select(col("vec_id"), col("b8"), col("nsq"), col("cluster")), k)
   }
 
@@ -3502,8 +3506,8 @@ object Similarity {
     val scratch = java.nio.file.Files.createTempDirectory("graft_vecidx_").toString
     try {
       writeVectorIndex(embeddings, scratch)
-      val asg = spark.read.parquet(s"$scratch/assignments")
-      val cents = spark.read.parquet(s"$scratch/centroids")
+      val asg = graft.FsUtil.readParquet(spark, s"$scratch/assignments")
+      val cents = graft.FsUtil.readParquet(spark, s"$scratch/centroids")
       val aRow = asg.agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("cluster")).as("n_clusters"),
@@ -3546,8 +3550,8 @@ object Similarity {
     val scratch = java.nio.file.Files.createTempDirectory("graft_vecidx_").toString
     try {
       writeVectorIndex(embeddings, scratch)
-      val asg = spark.read.parquet(s"$scratch/assignments")
-      val cents = spark.read.parquet(s"$scratch/centroids")
+      val asg = graft.FsUtil.readParquet(spark, s"$scratch/assignments")
+      val cents = graft.FsUtil.readParquet(spark, s"$scratch/centroids")
       ivfTopKWith(embeddings, asg, cents, nProbes, k, nProbe)
         .localCheckpoint()
     } finally graft.FsUtil.deleteRecursively(new java.io.File(scratch))
@@ -3682,8 +3686,8 @@ object Similarity {
                     nProbe: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
     val root = IvfIndex.root(embeddings, corpusTag)
-    val asg = spark.read.parquet(s"$root/assignments")
-    val cents = spark.read.parquet(s"$root/centroids")
+    val asg = graft.FsUtil.readParquet(spark, s"$root/assignments")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
     ivfTopKWith(embeddings, asg, cents, nProbes, k, nProbe)
   }
 
@@ -3717,8 +3721,8 @@ object Similarity {
                      nProbes: Int = 10, k: Int = 5): DataFrame = {
     val spark = embeddings.sparkSession
     val root = PqIndex.root(embeddings, corpusTag)
-    val cb = spark.read.parquet(s"$root/codebook")
-    val enc = spark.read.parquet(s"$root/encodings")
+    val cb = graft.FsUtil.readParquet(spark, s"$root/codebook")
+    val enc = graft.FsUtil.readParquet(spark, s"$root/encodings")
     pqRefineFrom(pqDecode(enc, cb), embeddings, nProbes, k)
   }
 
@@ -3775,9 +3779,9 @@ object Similarity {
   private[llm] def ivfPqServeRoot(root: String, probes: DataFrame,
                                   embeddings: DataFrame, k: Int): DataFrame = {
     val spark = embeddings.sparkSession
-    val cents = spark.read.parquet(s"$root/centroids")
-    val cb = spark.read.parquet(s"$root/codebook")
-    val inv = spark.read.parquet(s"$root/invlists")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
+    val cb = graft.FsUtil.readParquet(spark, s"$root/codebook")
+    val inv = graft.FsUtil.readParquet(spark, s"$root/invlists")
     val pcells = broadcast(probeCellsFor(probes, embeddings, cents,
       nProbe = 0, frac = IvfPqProbeFrac))
     // prune FIRST, decode after: only probed cells' inverted lists are
@@ -3872,7 +3876,7 @@ object Similarity {
       val band = store.drifted(embeddings, shift)
       store.lifecycleTo(root, band)
       def meanDist(gen: String) =
-        floorMeanOf(spark.read.parquet(s"$root/$gen"), "dist")
+        floorMeanOf(graft.FsUtil.readParquet(spark, s"$root/$gen"), "dist")
       val baseMean = meanDist("gen0")
       require(retrainTrigger(meanDist("gen3"), baseMean),
         s"$query's drifted fixture must fire the retrain trigger — the " +
@@ -4071,7 +4075,8 @@ object Similarity {
       val spark = embeddings.sparkSession
       PqGen.lifecycleTo(root, PqGen.band(embeddings))
       PqGen.audit(spark, root, GenStates, pqAudit, a => a.localCheckpoint()
-        .crossJoin(broadcast(heldOut(spark.read.parquet(s"$root/gen0"))
+        .crossJoin(broadcast(
+          heldOut(graft.FsUtil.readParquet(spark, s"$root/gen0"))
           .agg(floorMean("d2").as("base_mean"))))
         .withColumn("retrain", retrainFlag(col("mean_err"), col("base_mean")))
         .drop("base_mean"))
@@ -4193,7 +4198,8 @@ object Similarity {
       floorMean("d2").as("mean_err")), a => {
         val c = a.localCheckpoint()
         c.crossJoin(g0Base(c, "mean_dist", "base_dist"))
-          .crossJoin(broadcast(heldOut(spark.read.parquet(s"$scratch/gen0"))
+          .crossJoin(broadcast(
+            heldOut(graft.FsUtil.readParquet(spark, s"$scratch/gen0"))
             .agg(floorMean("d2").as("base_err"))))
           .withColumn("retrain_ivf",
             retrainFlag(col("mean_dist"), col("base_dist")))
@@ -4294,12 +4300,14 @@ object Similarity {
     PqGen.inScratch { root =>
       val spark = embeddings.sparkSession
       def heldOutErr(gen: String) =
-        floorMeanOf(heldOut(spark.read.parquet(s"$root/$gen")), "d2")
+        floorMeanOf(
+          heldOut(graft.FsUtil.readParquet(spark, s"$root/$gen")), "d2")
       val band = PqGen.drifted(embeddings, transform(_, x => x + lit(2000L)))
       PqGen.lifecycleTo(root, band)
       val baseErr = heldOutErr("gen0")
       require(retrainTrigger(
-          floorMeanOf(spark.read.parquet(s"$root/gen3"), "d2"), baseErr),
+          floorMeanOf(graft.FsUtil.readParquet(spark, s"$root/gen3"), "d2"),
+          baseErr),
         "q191's drifted fixture must fire the PQ retrain trigger — the " +
           "undrifted path is q189's")
       PqGen.retrainTo(root, band, pqRetrainTables)
@@ -4444,8 +4452,8 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val root = IvfIndex.root(embeddings, corpusTag)
-    val asg = spark.read.parquet(s"$root/assignments")
-    val cents = spark.read.parquet(s"$root/centroids")
+    val asg = graft.FsUtil.readParquet(spark, s"$root/assignments")
+    val cents = graft.FsUtil.readParquet(spark, s"$root/centroids")
     val corpus = embeddings.select(col("vec_id"), col("embedding"),
         l2norm(col("embedding")).as("nrm"))
       .join(asg, "vec_id")
@@ -4532,22 +4540,7 @@ object Similarity {
   /** The [[LsmTables]] of a store root. */
   private def lsmTables(spark: org.apache.spark.sql.SparkSession,
                         root: String): LsmTables =
-    name => readSegment(spark, s"$root/$name")
-
-  /** Reads a stored segment (a quantizer table, an LSM base or delta, a
-    * generation) with its schema from one parquet footer
-    * ([[graft.FsUtil.parquetSchema]]), so the read pays no
-    * schema-inference job. `bucketed` adds the int `bucket` partition
-    * column of the [[CellStore]] layout the LSM bases are written in. */
-  private def readSegment(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          bucketed: Boolean = false): DataFrame =
-    graft.FsUtil.parquetSchema(spark, path).fold(spark.read.parquet(path)) {
-      s => spark.read.schema(
-          if (bucketed) s.add("bucket", org.apache.spark.sql.types.IntegerType)
-          else s)
-        .parquet(path)
-    }
+    name => graft.FsUtil.readParquet(spark, s"$root/$name")
 
   /** One LSM vector tier's codec: everything that differs between the
     * flat (q193), SQ8 (q232) and composed (q196) segment stores. The
@@ -4732,14 +4725,14 @@ object Similarity {
       val cols = Seq(col("ent"), col("vec_id"),
         col("cluster").cast("long").as("cluster"), col("dist")) ++
         codec.payload.map(col)
-      val base = readSegment(spark, basePath, bucketed = true)
+      val base = graft.FsUtil.readParquet(spark, basePath)
       val b = cells.fold(base)(CellStore.prunedToF(base,
           CellStore.bucketsOf(spark, root), _))
         .select(cols: _*)
       if (deltas.isEmpty) b
       else {
         val ds = deltas.zipWithIndex.map { case (i, gen) =>
-            readSegment(spark, s"$root/delta$i")
+            graft.FsUtil.readParquet(spark, s"$root/delta$i")
               .withColumn("gen", lit(gen.toLong))
           }.reduce(_ unionByName _)
         val latest = ds
@@ -4768,8 +4761,8 @@ object Similarity {
                    widen: Column): (DataFrame, DataFrame) = {
       val spark = embeddings.sparkSession
       val pcells = broadcast(probeCellsFor(probes, embeddings,
-        readSegment(spark, s"$root/centroids"), nProbe = 0, frac = frac,
-        widen = widen))
+        graft.FsUtil.readParquet(spark, s"$root/centroids"), nProbe = 0,
+        frac = frac, widen = widen))
       val resolved =
         resolvedView(spark, root, Some(pcells.select(col("cell")).distinct()))
       (pcells, pred.map(resolved.filter).getOrElse(resolved))
@@ -4877,7 +4870,7 @@ object Similarity {
       * a tombstoned entity does not re-enter. */
     def merge(root: String, g: Int, batch: DataFrame,
               tables: LsmTables): Unit =
-      readSegment(batch.sparkSession, s"$root/gen${g - 1}")
+      graft.FsUtil.readParquet(batch.sparkSession, s"$root/gen${g - 1}")
         .join(broadcast(batch.select(col("ent"))), Seq("ent"), "left_anti")
         .unionByName(enc.encode(batch.filter(!col("del")), tables))
         .write.mode("overwrite").parquet(s"$root/gen$g")
@@ -4902,10 +4895,11 @@ object Similarity {
                   train: DataFrame => Seq[(String, DataFrame)] = enc.train)
         : Unit = {
       val spark = band.sparkSession
-      val live = band.join(readSegment(spark, s"$root/gen3")
+      val live = band.join(graft.FsUtil.readParquet(spark, s"$root/gen3")
         .select(col(enc.id)), Seq(enc.id), "left_semi")
       trainTo(root, live, "_rt", train)
-      enc.encode(live, name => readSegment(spark, s"$root/${name}_rt"))
+      enc.encode(live,
+          name => graft.FsUtil.readParquet(spark, s"$root/${name}_rt"))
         .write.mode("overwrite").parquet(s"$root/gen3r")
     }
 
@@ -4916,7 +4910,7 @@ object Similarity {
               states: Seq[String], aggs: Seq[Column],
               trigger: DataFrame => DataFrame = identity): DataFrame =
       trigger(states.map { s =>
-          readSegment(spark, s"$root/gen${s.drop(1)}")
+          graft.FsUtil.readParquet(spark, s"$root/gen${s.drop(1)}")
             .agg(aggs.head, aggs.tail: _*)
             .select(lit(s).as("state"), col("*"))
         }.reduce(_ unionAll _))
@@ -6112,7 +6106,7 @@ object Similarity {
     val labeled = pqDecodeLabeled(
       pruned.select(col("vec_id"), col("cluster"),
         posexplode(col("cws")).as(Seq("m", "cw"))),
-      embeddings.sparkSession.read.parquet(s"$root/codebook"))
+      graft.FsUtil.readParquet(embeddings.sparkSession, s"$root/codebook"))
     val shortlist = adcShortlist(pcells, labeled, RegisteredFixedR)
     // exact refine against the view's co-stored CURRENT vectors —
     // built from the PRUNED frame: every shortlist vec_id lives in a

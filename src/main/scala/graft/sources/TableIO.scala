@@ -116,7 +116,7 @@ object TableIO {
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
     val dst = scratchDir("part_rt", dir)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(dst)
-    spark.read.parquet(dst)
+    graft.FsUtil.readParquet(spark, dst)
   }
 
   /** The pruned read-side plan, split out so the plan guard can inspect
@@ -211,7 +211,7 @@ object TableIO {
     docs.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .write.mode("append").parquet(dst)
-    spark.read.option("mergeSchema", "true").parquet(dst)
+    graft.FsUtil.readParquet(spark, Map("mergeSchema" -> "true"), dst)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("v2_chars"),

@@ -6,7 +6,9 @@ package graft
   * fixture floors, CellStore bucket derivation). The substitution is
   * only sound if the two numbers are IDENTICAL on every store layout
   * the composites write: flat multi-file, partitioned (bucket=N dirs,
-  * the CellStore shape), and empty-but-present.
+  * the CellStore shape), and empty-but-present. Pins
+  * [[FsUtil.readParquet]] the same way: its footer schema must be the
+  * schema Spark's inference resolves, on every layout it reads.
   */
 class FsUtilSpec extends SparkSpec {
 
@@ -34,34 +36,117 @@ class FsUtilSpec extends SparkSpec {
     } finally FsUtil.deleteRecursively(new java.io.File(dir))
   }
 
-  test("parquetSchema equals the inferred schema: flat store, and the " +
-    "CellStore layout once its int bucket column is added") {
+  /** `readParquet`'s schema next to Spark's own inference over the same
+    * path: the same schema when both resolve, the same error otherwise. */
+  private def sameAsInferred(path: String): Unit = {
+    val inferred = scala.util.Try(spark.read.parquet(path).schema)
+    val footer = scala.util.Try(FsUtil.readParquet(spark, path).schema)
+    assert(footer.map(_.toString) === inferred.map(_.toString),
+      s"readParquet($path) diverges from spark.read.parquet")
+    if (inferred.isFailure)
+      assert(footer.failed.get.getMessage === inferred.failed.get.getMessage)
+  }
+
+  test("readParquet's footer schema equals the inferred schema on every " +
+    "fixture table (single files, non-Spark footers), events under both " +
+    "nanosAsLong settings") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(key)
+    try {
+      for (nanos <- Seq("true", "false")) {
+        spark.conf.set(key, nanos)
+        Tables.names.foreach { t =>
+          val p = s"$sf/$t.parquet"
+          sameAsInferred(p)
+          // the footer path itself answered, not the fallback
+          if (t != "events" || nanos == "true")
+            assert(FsUtil.parquetSchema(spark, p).isDefined, p)
+        }
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("readParquet's footer schema equals the inferred schema: flat " +
+    "Spark-written store, CellStore bucketed root, empty-frame write") {
     import org.apache.spark.sql.functions._
-    val flat = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
-    val bucketed = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
+    val dirs = Seq.fill(3)(
+      java.nio.file.Files.createTempDirectory("graft_fsc_").toString)
+    val Seq(flat, bucketed, empty) = dirs
     try {
       val rows = spark.range(0, 300).toDF("vec_id")
         .select(col("vec_id"), (col("vec_id") % 23).as("cluster"),
           array(col("vec_id"), lit(1L)).as("qe"), lit("x").as("label"))
-      // compared as READ: a file source reads every column nullable,
-      // given or inferred, while the footer keeps the writer's flags
-      def readWith(path: String, s: org.apache.spark.sql.types.StructType) =
-        spark.read.schema(s).parquet(path)
-      rows.write.mode("overwrite").parquet(flat)
-      val fs = FsUtil.parquetSchema(spark, flat)
-      assert(fs.map(readWith(flat, _).schema) ===
-        Some(spark.read.parquet(flat).schema))
+      rows.repartition(3).write.mode("overwrite").parquet(flat)
       graft.llm.CellStore.write(rows, nBuckets = 5, bucketed)
-      val bs = FsUtil.parquetSchema(spark, bucketed)
-        .map(_.add("bucket", org.apache.spark.sql.types.IntegerType))
-      assert(bs.map(readWith(bucketed, _).schema) ===
-        Some(spark.read.parquet(bucketed).schema))
-      assert(readWith(bucketed, bs.get)
+      rows.filter(col("vec_id") < 0).coalesce(1)
+        .write.mode("overwrite").parquet(empty)
+      dirs.foreach { d =>
+        sameAsInferred(d)
+        assert(FsUtil.parquetSchema(spark, d).isDefined, d)
+      }
+      // the bucket partition column is discovered from the directory
+      // names, typed as inference types it, with the same rows
+      assert(FsUtil.readParquet(spark, bucketed).schema("bucket").dataType ===
+        org.apache.spark.sql.types.IntegerType)
+      assert(FsUtil.readParquet(spark, bucketed)
         .except(spark.read.parquet(bucketed)).isEmpty)
-    } finally {
-      FsUtil.deleteRecursively(new java.io.File(flat))
-      FsUtil.deleteRecursively(new java.io.File(bucketed))
-    }
+    } finally dirs.foreach(d => FsUtil.deleteRecursively(new java.io.File(d)))
+  }
+
+  test("readParquet falls back to Spark's own read: missing path, no data " +
+    "file, mergeSchema") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
+    try {
+      // Spark's own PATH_NOT_FOUND / "unable to infer schema" errors
+      val missing = s"$root/missing"
+      val noData = s"$root/nodata"
+      new java.io.File(noData).mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(noData, "_SUCCESS").toPath, "")
+      Seq(missing, noData).foreach { p =>
+        assert(FsUtil.parquetSchema(spark, p).isEmpty)
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          FsUtil.readParquet(spark, p))
+        val s = intercept[org.apache.spark.sql.AnalysisException](
+          spark.read.parquet(p))
+        assert(e.getMessage === s.getMessage)
+      }
+      // mergeSchema: the union of both files' columns, as Spark merges
+      // it — one footer alone would miss a column
+      val evo = s"$root/evo"
+      spark.range(0, 10).toDF("id").write.parquet(evo)
+      spark.range(0, 10).toDF("id").withColumn("v", col("id") * 2)
+        .write.mode("append").parquet(evo)
+      val merge = Map("mergeSchema" -> "true")
+      val merged = FsUtil.readParquet(spark, merge, evo)
+      assert(merged.schema ===
+        spark.read.option("mergeSchema", "true").parquet(evo).schema)
+      assert(merged.columns.toSet === Set("id", "v"))
+      assert(merged.count() === 20L)
+    } finally FsUtil.deleteRecursively(new java.io.File(root))
+  }
+
+  test("no job to resolve a table's schema; a ParquetSink write runs only " +
+    "its write job and counts its own rows from the footers") {
+    val load = jobsOf(Tables.names.foreach { t =>
+      // events through its own loader: it sets nanosAsLong first
+      if (t == "events") Tables.events(spark, sf).schema
+      else Tables.load(spark, sf, t).schema
+    })
+    assert(load === 0, s"10 table schemas ran $load jobs")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fsc_").toString
+    try {
+      var n = 0L
+      val w1 = jobsOf { n = graft.etl.ParquetSink.write(
+        spark.range(0, 1000).toDF("id"), dir, maxRecordsPerFile = 300) }
+      assert(w1 === 1, s"one sink write ran $w1 jobs")
+      assert(n === 1000L)
+      // an append reports its own delta only
+      assert(graft.etl.ParquetSink.write(
+        spark.range(0, 250).toDF("id"), dir, maxRecordsPerFile = 300) === 250L)
+      assert(spark.read.parquet(dir).count() === 1250L)
+    } finally FsUtil.deleteRecursively(new java.io.File(dir))
   }
 
   test("parquetRowCount counts an empty store as 0") {

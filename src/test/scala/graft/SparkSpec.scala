@@ -7,6 +7,40 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started by `body`, counted by a listener between two
+    * marker jobs: the bus delivers events in order, so the end marker's
+    * arrival proves every job of `body` was seen, and jobs queued before
+    * the start marker are not counted. */
+  protected def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (startMark, endMark) = ("jobsOf-start", "jobsOf-end")
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `startMark` => counting.set(true)
+          case `endMark` => counting.set(false); done.countDown()
+          case _ => if (counting.get) n.incrementAndGet()
+        }
+    }
+    def mark(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      ()
+    }
+    sc.addSparkListener(l)
+    try {
+      mark(startMark)
+      body
+      mark(endMark)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
