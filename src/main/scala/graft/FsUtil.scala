@@ -137,12 +137,21 @@ private[graft] object FsUtil {
     * inference), so Spark-, DuckDB- and pyarrow-written footers and
     * single-file tables all resolve as Spark would resolve them. None
     * when there is no single footer to read; the caller then lets Spark
-    * infer. Partition columns are not in it (see [[readParquet]]). */
+    * infer. Partition columns are not in it (see [[readParquet]]).
+    * `nanosAsLong` converts TIMESTAMP(NANOS) columns to LONG whatever
+    * the session's flag says: a read given that schema gets the raw
+    * nanos on either parquet reader, with the session left alone. */
   def parquetSchema(spark: org.apache.spark.sql.SparkSession, path: String,
-                    options: Map[String, String] = Map.empty)
+                    options: Map[String, String] = Map.empty,
+                    nanosAsLong: Boolean = false)
       : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet._
     val conf = spark.sessionState.newHadoopConfWithOptions(options)
+    val sqlConf = if (!nanosAsLong) spark.sessionState.conf else {
+      val c = spark.sessionState.conf.clone()
+      c.setConfString("spark.sql.legacy.parquet.nanosAsLong", "true")
+      c
+    }
     try dataFiles(conf, path, _ => true)
       .flatMap(_.minByOption(_.getPath.toString)).map { f =>
         val footer = ParquetFooterReader.readFooter(
@@ -151,7 +160,7 @@ private[graft] object FsUtil {
             .SKIP_ROW_GROUPS)
         ParquetFileFormat.readSchemaFromFooter(
           new org.apache.parquet.hadoop.Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          new ParquetToSparkSchemaConverter(sqlConf))
       }
     catch { case scala.util.control.NonFatal(_) => None }
   }

@@ -35,13 +35,16 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** `events.ts` is parquet TIMESTAMP(NANOS) which Spark's reader rejects
-    * outright ([PARQUET_TYPE_ILLEGAL]); read it as raw nanos and convert
-    * with integer division (a double division would lose precision at
-    * 1.7e18). Downstream sees a plain micros TimestampType.
+    * outright ([PARQUET_TYPE_ILLEGAL]); read it as raw nanos, through a
+    * footer schema that maps TIMESTAMP(NANOS) to LONG (the session's
+    * `nanosAsLong` flag stays as it was), and convert with integer
+    * division (a double division would lose precision at 1.7e18).
+    * Downstream sees a plain micros TimestampType.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val path = s"$d/events.parquet"
+    val raw = FsUtil.parquetSchema(s, path, nanosAsLong = true)
+      .fold(s.read)(s.read.schema).parquet(path)
     raw.schema("ts").dataType match {
       // TIMESTAMP(NANOS) surfaced as raw long nanos — convert
       case org.apache.spark.sql.types.LongType =>

@@ -346,14 +346,13 @@ object Similarity {
     * probe grid, 4→6 buys ≤200 bp; PERF.md r9 sweep table). An explicit
     * kCells > 0 keeps the fixed-k path for tests/tools.
     *
-    * Returns (assignment (vec_id, cluster), centroids (cluster, ce)) —
-    * both localCheckpoint'd: every consumer of the assignment joins it
-    * at least once, and the centroid frame is ~√N rows consumed on two
-    * paths in q39. */
+    * Returns (assignment (vec_id, cluster), centroids (cluster, ce)):
+    * the assignment localCheckpoint'd (every consumer joins it at least
+    * once), the ~√N centroid rows already a local frame. */
   private[llm] def trainLloyd(embeddings: DataFrame, kCells: Int = 0,
                               iters: Int = 4, dim: Int = 64): (DataFrame, DataFrame) = {
     val q = quantized(embeddings, 1000)
-    val cents = lloydTrainCentsQ(q, kCells, iters, dim).localCheckpoint()
+    val cents = lloydTrainCentsQ(q, kCells, iters, dim)
     // full-corpus final assignment against the FINAL trained centroids
     // (r13: assignment and cell ranking now use the SAME centroid frame
     // — the pre/post-update mismatch ADVICE r12 flagged on the graph
@@ -382,36 +381,103 @@ object Similarity {
         pmod(col("vec_id"), col("kdyn")).as("cluster"))
   }
 
-  /** One Lloyd round over sample points (qe): the kernel assignment
-    * against `cents`, then the floor(sum/count) recompute. */
-  private def lloydRound(pts: DataFrame, cents: DataFrame,
-                         dim: Int): DataFrame =
-    centroidsOf(frozenAssignQ(pts, cents), dim)
+  /** A Lloyd round's map plan: each point's (cluster, qe) under the
+    * per-row kernel against `cents` — no exchange. */
+  private def lloydRoundMap(pts: DataFrame, cents: DataFrame): DataFrame =
+    frozenAssignQ(pts, cents).select(col("cluster"), col("qe"))
+
+  /** One Lloyd round over points (qe) as ONE Spark job: the kernel map
+    * against `cents`, then [[clusterMeans]]. The one round of every
+    * Lloyd loop ([[lloydTrainCentsQ]], [[lloydAssign]]). */
+  private[llm] def lloydRound(pts: DataFrame, cents: DataFrame,
+                              dim: Int): DataFrame =
+    clusterMeans(lloydRoundMap(pts, cents), dim)
+
+  /** Per-cluster floor(sum/count) centroids of rows carrying (cluster,
+    * qe), as ONE Spark job that returns a local (cluster, ce) frame: each
+    * partition folds its rows into per-cluster (count, Σqe) longs, the
+    * driver merges the partitions' maps and divides — the Spark MLlib
+    * `KMeans` per-iteration shape. Bit-identical to the aggregate of
+    * [[recomputeCentroids]]: sums overflow-check like Spark's ANSI
+    * `sum`, each coordinate is `(long) floor((double) s / cnt)` like its
+    * cast-divide-floor, and an empty cell has no entry. Every vector must carry `dim` non-null
+    * coordinates (ANSI `element_at` fails on a short one too). The next
+    * round collects its kernel operand from the driver anyway, so
+    * nothing is lost by reducing there: the merge is k·dim longs per
+    * partition. */
+  private[llm] def clusterMeans(rows: DataFrame, dim: Int): DataFrame = {
+    type Sums = scala.collection.mutable.LongMap[Array[Long]]
+    def merge(a: Sums, b: Sums): Sums = {
+      b.foreachEntry { (id, s) =>
+        a.get(id) match {
+          case Some(t) =>
+            var i = 0
+            while (i <= dim) { t(i) = Math.addExact(t(i), s(i)); i += 1 }
+          case None => a.update(id, s)
+        }
+      }
+      a
+    }
+    val sums = rows.select(col("cluster").cast("long"), col("qe"))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        val m = new Sums
+        it.foreach { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1),
+            "clusterMeans: a null cluster or vector")
+          val qe = r.getArray(1)
+          require(qe.numElements() == dim,
+            s"clusterMeans: a vector without $dim coordinates")
+          val s = m.getOrElseUpdate(r.getLong(0), new Array[Long](dim + 1))
+          s(0) += 1
+          var i = 0
+          while (i < dim) {
+            require(!qe.isNullAt(i), "clusterMeans: a null coordinate")
+            s(i + 1) = Math.addExact(s(i + 1), qe.getLong(i)); i += 1
+          }
+        }
+        Iterator.single(m)
+      }
+      .fold(new Sums)(merge)
+    centroidFrame(rows.sparkSession, sums.toSeq.sortBy(_._1).map {
+      case (id, s) => id -> Array.tabulate(dim)(i =>
+        Math.floor(s(i + 1).toDouble / s(0).toDouble).toLong)
+    })
+  }
+
+  /** A centroid table (cluster, ce) as a local frame: collecting it, the
+    * kernel operand's path, runs no job. */
+  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+                            rows: Seq[(Long, Array[Long])]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (id, ce) =>
+        org.apache.spark.sql.Row(id, ce.toSeq)
+      }: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "cluster BIGINT, ce ARRAY<BIGINT>"))
 
   /** The Lloyd ROUNDS over the capped training sample of a quantized
-    * frame, returning the FINAL trained centroids (the oracle's `c4`).
-    * Shared by [[trainLloyd]], the LSM seed and the generation stores'
-    * coarse tables. The sample is checkpointed ONCE; each round is then
-    * a small plan — the kernel map over the sample plus a per-cluster
-    * aggregate — whose centroids the next round collects as its kernel
-    * operand, so no round re-scans or re-quantizes the corpus and no
-    * plan grows with the round count. The final centroids are returned
-    * lazily (one aggregate over the sample). */
+    * frame, returning the FINAL trained centroids (the oracle's `c4`) as
+    * a local frame. Shared by [[trainLloyd]], the LSM seed and the
+    * generation stores' coarse tables. The sample is checkpointed ONCE;
+    * the mod-k seed means and then each round are one job over it
+    * ([[clusterMeans]], [[lloydRound]]), so no round re-scans or
+    * re-quantizes the corpus and no plan grows with the round count. */
   private[llm] def lloydTrainCentsQ(q: DataFrame, kCells: Int,
                                     iters: Int, dim: Int): DataFrame = {
     val sq = lloydSample(q, kCells).localCheckpoint()
     val pts = sq.select(col("qe"))
-    (1 to iters).foldLeft(centroidsOf(sq, dim))((c, _) =>
+    (1 to iters).foldLeft(clusterMeans(sq, dim))((c, _) =>
       lloydRound(pts, c, dim))
   }
 
-  /** One training round's plan over an embeddings frame (the seeded
+  /** One training round's map plan over an embeddings frame (the seeded
     * sample's first round), UNCHECKPOINTED — the plan-audit entry point
-    * (ADVICE r8); every round has this shape. */
+    * (ADVICE r8); every round maps this shape. */
   private[graft] def lloydTrainPlan(embeddings: DataFrame, kCells: Int,
                                     dim: Int): DataFrame = {
     val sq = lloydSample(quantized(embeddings, 1000), kCells)
-    lloydRound(sq.select(col("qe")), centroidsOf(sq, dim), dim)
+    lloydRoundMap(sq.select(col("qe")), clusterMeans(sq, dim))
   }
 
   /** q37: IVF top-k over the TRAINED coarse codebook with MULTI-PROBE
@@ -1001,8 +1067,8 @@ object Similarity {
       ceil(sqrt(kExpr)).cast("long").as("kc")))
     // coarse level: mod-kc seeds, full Lloyd rounds at √k cells
     val a0c = q.crossJoin(kk)
-      .select(col("vec_id"), pmod(col("vec_id"), col("kc")).as("cluster"))
-    val asgC = lloydAssign(q, recomputeCentroids(a0c, q, dim), iters, dim)
+      .select(col("qe"), pmod(col("vec_id"), col("kc")).as("cluster"))
+    val asgC = lloydAssign(q, clusterMeans(a0c, dim), iters, dim)
       .select(col("vec_id"), col("cluster"))
       .localCheckpoint()
     // NOT checkpointed: one cheap agg over the checkpointed assignment —
@@ -2008,7 +2074,7 @@ object Similarity {
                                     root: String): Unit =
     sweepAfter(embeddings.sparkSession) {
       val (asg, cents) = trainLloyd(embeddings)
-      cents.write.mode("overwrite").parquet(s"$root/centroids")
+      writeTable(cents, s"$root/centroids")
       // label rides along as co-stored filterable metadata (the
       // writeGraphIndex discipline) — the filtered composed search
       // (q222–q224) reads it as a pushed parquet filter
@@ -3372,42 +3438,36 @@ object Similarity {
 
   /** The Lloyd assign/recompute loop over quantized vectors (vec_id,
     * qe), shared by [[kmeansLloyd]] (q88) and the two-level blocking's
-    * coarse level (q77): each round is the per-row [[frozenAssignQ]]
-    * kernel ((dist, cluster) tie order) against the previous round's
-    * centroids, collected as its operand, then the floor(sum/count)
-    * recompute. Returns the FINAL assignment (vec_id, cluster, dist).
-    * `init` is the seed centroid frame (cluster, ce) — a literal-k
-    * prefix for q88, a data-derived dynamic-k prefix for q77. */
+    * coarse level (q77): `iters − 1` one-job [[lloydRound]]s from
+    * `init`, then the per-row [[frozenAssignQ]] kernel ((dist, cluster)
+    * tie order) against their centroids. Returns that FINAL assignment
+    * (vec_id, cluster, dist), lazily. `init` is the seed centroid frame
+    * (cluster, ce) — a literal-k prefix for q88, a data-derived
+    * dynamic-k prefix for q77. */
   private def lloydAssign(q: DataFrame, init: DataFrame, iters: Int,
                           dim: Int): DataFrame = {
-    var centroids = init
-    var assigned: DataFrame = null
+    require(iters >= 1, s"lloydAssign needs iters >= 1, got $iters")
     val pts = q.select(col("vec_id"), col("qe"))
-    for (_ <- 1 to iters) {
-      assigned = frozenAssignQ(pts, centroids)
-      centroids = centroidsOf(assigned, dim)
-    }
-    assigned.select(col("vec_id"), col("cluster"), col("dist"))
+    frozenAssignQ(pts,
+        (1 until iters).foldLeft(init)((c, _) => lloydRound(pts, c, dim)))
+      .select(col("vec_id"), col("cluster"), col("dist"))
   }
 
-  /** Per-cluster quantized-mean centroids of rows carrying (cluster,
-    * qe) — floor(sum/count) per dimension, a map-side-combinable
-    * partial+final agg with O(k·dim) state (never a (vec, dim)
-    * explode). */
-  private def centroidsOf(rows: DataFrame, dim: Int): DataFrame =
-    rows.groupBy(col("cluster"))
+  /** The per-cluster quantized-mean centroids of an assignment (vec_id,
+    * cluster) over the quantized vectors `q` — floor(sum/count) per
+    * dimension, a map-side-combinable partial+final agg with O(k·dim)
+    * state (never a (vec, dim) explode), kept lazy in the plan: the
+    * two-level blocking's fine seeds and fine rounds, its coarse and
+    * fine reported centroids, and [[kmeansLloyd]]'s. The Lloyd loops
+    * that collect their centroids run [[clusterMeans]] instead. */
+  private[llm] def recomputeCentroids(assigned: DataFrame, q: DataFrame,
+                                      dim: Int): DataFrame =
+    assigned.join(q, "vec_id").groupBy(col("cluster"))
       .agg(count(lit(1)).as("cnt"),
         (1 to dim).map(i => sum(element_at(col("qe"), i)).as(s"s$i")): _*)
       .select(col("cluster"),
         array((1 to dim).map(i =>
           floor(col(s"s$i").cast("double") / col("cnt")).cast("long")): _*).as("ce"))
-
-  /** [[centroidsOf]] an assignment (vec_id, cluster) over the quantized
-    * vectors `q` — the two-level blocking's seeds and fine rounds, and
-    * [[kmeansLloyd]]'s reported centroids. */
-  private[llm] def recomputeCentroids(assigned: DataFrame, q: DataFrame,
-                                 dim: Int): DataFrame =
-    centroidsOf(assigned.join(q, "vec_id"), dim)
 
   /** Lloyd's k-means proper over the embedding column — a fixed number
     * of assign/recompute rounds from deterministic seeds (the vectors
@@ -3427,9 +3487,10 @@ object Similarity {
     * 100 TB shape per round: the k centroids are collected to the
     * driver and broadcast as one row; the assignment AND its argmin are
     * one per-row kernel ([[frozenAssignQ]]: k·dim work, no fan-out, no
-    * shuffle); the recompute is the q37 per-dimension partial+final hash
-    * aggregate with O(k·dim) state. The per-round collect also cuts the
-    * lineage, so the plan never grows with the round count. */
+    * shuffle); the recompute folds per-partition (count, Σqe) maps in
+    * the same job ([[lloydRound]]), O(k·dim) state. Landing the
+    * centroids on the driver also cuts the lineage, so the plan never
+    * grows with the round count. */
   def kmeansLloyd(embeddings: DataFrame, k: Int = 4, iters: Int = 2,
                   dim: Int = 64, scale: Int = 1000): DataFrame = {
     val q = quantized(embeddings, scale)
@@ -3484,14 +3545,14 @@ object Similarity {
     * re-scan the corpus k×iters times. */
   private[llm] def writeVectorIndex(embeddings: DataFrame, root: String,
                                     kCells: Int = 0, iters: Int = 4): Unit = {
-    // trainLloyd's frames are localCheckpoint'd — RDD-level persistence
-    // that Dataset.unpersist (a CacheManager call) cannot release
-    // (review r8). Consumers use the written tables, not these frames,
-    // so sweep exactly the RDD ids the training created.
+    // trainLloyd's sample and assignment are localCheckpoint'd —
+    // RDD-level persistence that Dataset.unpersist (a CacheManager call)
+    // cannot release (review r8). Consumers use the written tables, not
+    // these frames, so sweep exactly the RDD ids the training created.
     sweepAfter(embeddings.sparkSession) {
       val (asg, cents) = trainLloyd(embeddings, kCells, iters)
       asg.write.mode("overwrite").parquet(s"$root/assignments")
-      cents.write.mode("overwrite").parquet(s"$root/centroids")
+      writeTable(cents, s"$root/centroids")
     }
   }
 
@@ -3741,7 +3802,7 @@ object Similarity {
                                    root: String): Unit = {
     sweepAfter(embeddings.sparkSession) {
       val (asg, cents) = trainLloyd(embeddings)
-      cents.write.mode("overwrite").parquet(s"$root/centroids")
+      writeTable(cents, s"$root/centroids")
       val cb = trainPqCodebook(embeddings)
       cb.write.mode("overwrite").parquet(s"$root/codebook")
       // bucketed block files (VERDICT r15 #1 — see [[CellStore]]):
@@ -3860,9 +3921,16 @@ object Similarity {
   private def retrainFlag(mean: Column, base: Column): Column =
     when(mean * lit(100L) > base * lit(RetrainPct.toLong), 1L).otherwise(0L)
 
-  /** The g0 audit row's `mean` as a broadcast 1-row baseline `as`. */
-  private def g0Base(a: DataFrame, mean: String, as: String): DataFrame =
-    broadcast(a.filter(col("state") === "g0").select(col(mean).as(as)))
+  /** The g0 audit row's `mean`, read off the local audit rows, as a
+    * literal baseline. */
+  private def g0Mean(a: DataFrame, mean: String): Column =
+    lit(a.filter(col("state") === "g0").select(col(mean)).head().get(0))
+
+  /** A stored PQ generation's held-out mean reconstruction error: the
+    * PQ drift baseline. */
+  private def heldOutErr(spark: org.apache.spark.sql.SparkSession,
+                         gen: String): Long =
+    floorMeanOf(heldOut(graft.FsUtil.readParquet(spark, gen)), "d2")
 
   /** q188/q231's retrain chain: the drifted lifecycle, the coarse trigger
     * required to fire at g3 against gen0's mean assignment distance (a
@@ -3912,15 +3980,9 @@ object Similarity {
     IvfGen.inScratch { root =>
       IvfGen.lifecycleTo(root, IvfGen.band(embeddings))
       IvfGen.audit(embeddings.sparkSession, root, GenStates,
-        cellAudit :+ floorMean("dist").as("mean_dist"), a => {
-          // checkpointed before the double consumption (the rows + the
-          // gen-0 baseline row the trigger compares against)
-          val c = a.localCheckpoint()
-          c.crossJoin(g0Base(c, "mean_dist", "base_mean"))
-            .withColumn("retrain",
-              retrainFlag(col("mean_dist"), col("base_mean")))
-            .drop("base_mean")
-        })
+        cellAudit :+ floorMean("dist").as("mean_dist"), a =>
+          a.withColumn("retrain",
+            retrainFlag(col("mean_dist"), g0Mean(a, "mean_dist"))))
     }
 
   /** Oracle: frozen centroids from the unrolled trained-Lloyd CTE over
@@ -4074,12 +4136,8 @@ object Similarity {
     PqGen.inScratch { root =>
       val spark = embeddings.sparkSession
       PqGen.lifecycleTo(root, PqGen.band(embeddings))
-      PqGen.audit(spark, root, GenStates, pqAudit, a => a.localCheckpoint()
-        .crossJoin(broadcast(
-          heldOut(graft.FsUtil.readParquet(spark, s"$root/gen0"))
-          .agg(floorMean("d2").as("base_mean"))))
-        .withColumn("retrain", retrainFlag(col("mean_err"), col("base_mean")))
-        .drop("base_mean"))
+      PqGen.audit(spark, root, GenStates, pqAudit, _.withColumn("retrain",
+        retrainFlag(col("mean_err"), lit(heldOutErr(spark, s"$root/gen0")))))
     }
 
   /** Oracle: frozen codebook from scratch over the gen-0 live subset,
@@ -4195,18 +4253,12 @@ object Similarity {
       // dist repeats on each of a vector's 16 rows, so the row mean
       // equals the per-vector mean exactly
       floorMean("dist").as("mean_dist"),
-      floorMean("d2").as("mean_err")), a => {
-        val c = a.localCheckpoint()
-        c.crossJoin(g0Base(c, "mean_dist", "base_dist"))
-          .crossJoin(broadcast(
-            heldOut(graft.FsUtil.readParquet(spark, s"$scratch/gen0"))
-            .agg(floorMean("d2").as("base_err"))))
-          .withColumn("retrain_ivf",
-            retrainFlag(col("mean_dist"), col("base_dist")))
-          .withColumn("retrain_pq",
-            retrainFlag(col("mean_err"), col("base_err")))
-          .drop("base_dist", "base_err")
-      })
+      floorMean("d2").as("mean_err")), a => a
+        .withColumn("retrain_ivf",
+          retrainFlag(col("mean_dist"), g0Mean(a, "mean_dist")))
+        .withColumn("retrain_pq",
+          retrainFlag(col("mean_err"),
+            lit(heldOutErr(spark, s"$scratch/gen0")))))
   }
 
   /** Oracle: both frozen quantizers from scratch (trained-Lloyd over
@@ -4299,19 +4351,16 @@ object Similarity {
   def pqIndexRetrain(embeddings: DataFrame): DataFrame =
     PqGen.inScratch { root =>
       val spark = embeddings.sparkSession
-      def heldOutErr(gen: String) =
-        floorMeanOf(
-          heldOut(graft.FsUtil.readParquet(spark, s"$root/$gen")), "d2")
       val band = PqGen.drifted(embeddings, transform(_, x => x + lit(2000L)))
       PqGen.lifecycleTo(root, band)
-      val baseErr = heldOutErr("gen0")
+      val baseErr = heldOutErr(spark, s"$root/gen0")
       require(retrainTrigger(
           floorMeanOf(graft.FsUtil.readParquet(spark, s"$root/gen3"), "d2"),
           baseErr),
         "q191's drifted fixture must fire the PQ retrain trigger — the " +
           "undrifted path is q189's")
       PqGen.retrainTo(root, band, pqRetrainTables)
-      val rtBase = heldOutErr("gen3r")
+      val rtBase = heldOutErr(spark, s"$root/gen3r")
       PqGen.audit(spark, root, GenStates :+ "g3r", pqAudit,
         _.withColumn("retrain", retrainFlag(col("mean_err"),
           when(col("state") === "g3r", lit(rtBase)).otherwise(lit(baseErr)))))
@@ -4533,14 +4582,47 @@ object Similarity {
     * mirrored verbatim in the q206 oracle's HAVING. */
   private[llm] val LsmDeltaAbsMax = 2000000L
 
-  /** Reads a quantizer table (`centroids`, `codebook`) stored under an
-    * LSM root by name. */
-  private[graft] type LsmTables = String => DataFrame
+  /** Writes a trained quantizer table (centroids, codebook) as one
+    * file. */
+  private def writeTable(t: DataFrame, path: String): Unit =
+    t.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** The [[LsmTables]] of a store root. */
-  private def lsmTables(spark: org.apache.spark.sql.SparkSession,
-                        root: String): LsmTables =
-    name => graft.FsUtil.readParquet(spark, s"$root/$name")
+  /** The quantizer tables (`centroids`, `codebook`) stored under an LSM
+    * or generation-store root, by name (`<name><suffix>`). The coarse
+    * `centroids` table, the argmin kernel's operand (at most ⌈√N⌉
+    * rows), is held as ONE local frame from the trainer that
+    * [[store]]s it or from its first read, so every frozen assignment
+    * of a lifecycle collects it without a job: once per lifecycle, not
+    * once per segment. */
+  private[graft] final class LsmTables(
+      spark: org.apache.spark.sql.SparkSession, root: String,
+      suffix: String = "") {
+    private var cents: Option[DataFrame] = None
+
+    def apply(name: String): DataFrame =
+      if (name != "centroids") read(name)
+      else cents.getOrElse(hold(read(name)))
+
+    /** Writes a trained table under the root (one file). */
+    def store(name: String, t: DataFrame): Unit = {
+      writeTable(t, s"$root/$name$suffix")
+      if (name == "centroids") hold(t)
+      ()
+    }
+
+    private def read(name: String): DataFrame =
+      graft.FsUtil.readParquet(spark, s"$root/$name$suffix")
+
+    private def hold(t: DataFrame): DataFrame = {
+      val c = t.queryExecution.logical match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => t
+        case _ => spark.createDataFrame(
+          java.util.Arrays.asList(t.collect(): _*), t.schema)
+      }
+      cents = Some(c)
+      c
+    }
+  }
 
   /** One LSM vector tier's codec: everything that differs between the
     * flat (q193), SQ8 (q232) and composed (q196) segment stores. The
@@ -4615,9 +4697,10 @@ object Similarity {
 
     /** Checks the [[LsmDeltaPct]] trigger against the CURRENT base and,
       * on fire, compacts the resolved view into `base_cN` (N = the
-      * newest delta) and deletes the deltas. True when it compacted. */
+      * newest delta), runs `beforeDelete`, and deletes the deltas. True
+      * when it compacted. */
     def compactIfDue(spark: org.apache.spark.sql.SparkSession,
-                     root: String): Boolean = {
+                     root: String, beforeDelete: => Unit = ()): Boolean = {
       val (basePath, deltas) = lsmStorePaths(root)
       val deltaPaths = deltas.map(i => s"$root/delta$i")
       // memoized per immutable segment: batch k counts ONE new segment,
@@ -4631,6 +4714,7 @@ object Similarity {
         // deletes and rewrites base_c3), so the trigger re-anchors on
         // the new segment's footer count, never a memo of the old one
         dropSegCount(compacted)
+        beforeDelete
         deltaPaths.foreach { p =>
           graft.FsUtil.deleteRecursively(new java.io.File(p))
           dropSegCount(p)
@@ -4641,7 +4725,7 @@ object Similarity {
 
     /** The ingest step on its own — the stream legs' micro-batch body. */
     def ingest(root: String, batch: DataFrame): Unit = {
-      appendDelta(root, batch, lsmTables(batch.sparkSession, root))
+      appendDelta(root, batch, new LsmTables(batch.sparkSession, root))
       compactIfDue(batch.sparkSession, root)
       ()
     }
@@ -4652,11 +4736,17 @@ object Similarity {
       * SERVED VIEW — rows/entities/cells, live delta rows, compacted
       * flag, checksum and the codec's [[LsmCodec.auditSums]] — which
       * the oracle recomputes from scratch per state, emitting the
-      * post-compaction row behind the SAME integer trigger predicate. */
+      * post-compaction row behind the SAME integer trigger predicate.
+      *
+      * Each state's audit reads the [[Snapshot]] taken when the state
+      * was reached, and every segment is immutable, so the pending
+      * audits run together ([[localRows]]): once before compaction
+      * deletes the deltas they read, and once at the end. The rows come
+      * back as one local frame ordered by state. */
     def indexTo(embeddings: DataFrame, root: String,
                 onState: String => Unit): DataFrame = {
       val spark = embeddings.sparkSession
-      val tables = lsmTables(spark, root)
+      val tables = new LsmTables(spark, root)
       codec.seed(embeddings, root, tables)
       val baseRows = graft.FsUtil.parquetRowCount(spark, s"$root/base")
       // the oracle emits the compaction row only at g3 (the registered
@@ -4668,34 +4758,48 @@ object Similarity {
         s"${codec.tag} LSM store: fixture needs >= 100 vectors (got " +
           s"$baseRows) for the oracle's fires-first-at-g3 trigger " +
           "contract to hold")
-      val audits = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val pending = scala.collection.mutable.ArrayBuffer.empty[() => DataFrame]
+      val done = scala.collection.mutable.ArrayBuffer.empty[LocalRows]
       def audit(state: String, compacted: Long): Unit = {
-        val nDelta = lsmStorePaths(root)._2
-          .map(i => segCount(spark, s"$root/delta$i")).sum
+        pending += auditOf(spark, root, snapshot(root), state, compacted)
+        onState(state)
+      }
+      def flush(): Unit = { done ++= localRows(pending.toSeq); pending.clear() }
+      audit("g0", 0L)
+      for (g <- 1 to 3) {
+        appendDelta(root, band(embeddings, g), tables)
+        audit(s"g$g", 0L)
+        if (compactIfDue(spark, root, flush())) audit(s"g${g}c", 1L)
+      }
+      flush()
+      localFrame(spark, done.toSeq)
+    }
+
+    /** One lifecycle state's audit over a snapshot: the aggregate frame,
+      * built when it runs. It fails, naming the path, if a segment of
+      * the snapshot is gone by then. */
+    private[graft] def auditOf(spark: org.apache.spark.sql.SparkSession,
+                               root: String, snap: Snapshot, state: String,
+                               compacted: Long): () => DataFrame =
+      () => {
+        (snap.base +: snap.deltas).foreach(p => require(
+          new java.io.File(p).exists(),
+          s"${codec.tag} audit $state: snapshot segment $p is gone"))
+        val nDelta = snap.deltas.map(segCount(spark, _)).sum
         val aggs = Seq(lit(state).as("state"), count(lit(1)).as("n_rows"),
           countDistinct(col("ent")).as("n_ents"),
           countDistinct(col("cluster")).as("n_cells"),
           lit(nDelta).as("n_delta"), lit(compacted).as("compacted"),
           sum(col("ent") * 100000L + col("vec_id") * 10L + col("cluster"))
             .as("checksum")) ++ codec.auditSums
-        audits += resolvedView(spark, root, None)
-          .agg(aggs.head, aggs.tail: _*).localCheckpoint()
-        onState(state)
+        resolvedView(spark, root, snap, None).agg(aggs.head, aggs.tail: _*)
       }
-      audit("g0", 0L)
-      for (g <- 1 to 3) {
-        appendDelta(root, band(embeddings, g), tables)
-        audit(s"g$g", 0L)
-        if (compactIfDue(spark, root)) audit(s"g${g}c", 1L)
-      }
-      audits.reduce(_ unionAll _).orderBy(col("state")).localCheckpoint()
-    }
 
     /** The MID-LIFECYCLE store the serve legs read: the seed plus TWO
       * fixture generations (cumulative 4% — deliberately below the
       * trigger, so one live base and two live delta segments). */
     def midStoreTo(embeddings: DataFrame, root: String): Unit = {
-      val tables = lsmTables(embeddings.sparkSession, root)
+      val tables = new LsmTables(embeddings.sparkSession, root)
       codec.seed(embeddings, root, tables)
       for (g <- 1 to 2) appendDelta(root, band(embeddings, g), tables)
     }
@@ -4720,19 +4824,23 @@ object Similarity {
       * latest-wins window; the anti-join always uses the UNFILTERED
       * delta entity set — an entity can change cells on re-write. */
     def resolvedView(spark: org.apache.spark.sql.SparkSession, root: String,
-                     cells: Option[DataFrame]): DataFrame = {
-      val (basePath, deltas) = lsmStorePaths(root)
+                     cells: Option[DataFrame]): DataFrame =
+      resolvedView(spark, root, snapshot(root), cells)
+
+    /** [[resolvedView]] over an explicit snapshot of the root. */
+    def resolvedView(spark: org.apache.spark.sql.SparkSession, root: String,
+                     snap: Snapshot, cells: Option[DataFrame]): DataFrame = {
       val cols = Seq(col("ent"), col("vec_id"),
         col("cluster").cast("long").as("cluster"), col("dist")) ++
         codec.payload.map(col)
-      val base = graft.FsUtil.readParquet(spark, basePath)
+      val base = graft.FsUtil.readParquet(spark, snap.base)
       val b = cells.fold(base)(CellStore.prunedToF(base,
           CellStore.bucketsOf(spark, root), _))
         .select(cols: _*)
-      if (deltas.isEmpty) b
+      if (snap.deltas.isEmpty) b
       else {
-        val ds = deltas.zipWithIndex.map { case (i, gen) =>
-            graft.FsUtil.readParquet(spark, s"$root/delta$i")
+        val ds = snap.deltas.zipWithIndex.map { case (p, gen) =>
+            graft.FsUtil.readParquet(spark, p)
               .withColumn("gen", lit(gen.toLong))
           }.reduce(_ unionByName _)
         val latest = ds
@@ -4844,25 +4952,23 @@ object Similarity {
       band(source).withColumn(enc.domain, when(col("b") === 3,
         shift(col(enc.domain))).otherwise(col(enc.domain)))
 
-    /** Writes `train`'s tables over a live set as `<name><suffix>`; the
+    /** Stores `train`'s tables over a live set into `tables`; the
       * trainers' checkpoints are swept once the tables land. */
-    private def trainTo(root: String, live: DataFrame, suffix: String,
+    private def trainTo(tables: LsmTables, live: DataFrame,
                         train: DataFrame => Seq[(String, DataFrame)]): Unit =
       sweepAfter(live.sparkSession) {
-        train(live).foreach { case (name, t) =>
-          t.write.mode("overwrite").parquet(s"$root/$name$suffix")
-        }
+        train(live).foreach { case (name, t) => tables.store(name, t) }
       }
 
     /** Trains the frozen tables on the gen-0 live set and writes `gen0`. */
     def seedTo(root: String, band: DataFrame, tables: LsmTables): Unit = {
       val live0 = band.filter(col("b") === 0 && !col("del"))
-      trainTo(root, live0, "", enc.train)
+      trainTo(tables, live0, enc.train)
       enc.encode(live0, tables).write.mode("overwrite").parquet(s"$root/gen0")
     }
 
     def seedTo(root: String, band: DataFrame): Unit =
-      seedTo(root, band, lsmTables(band.sparkSession, root))
+      seedTo(root, band, new LsmTables(band.sparkSession, root))
 
     /** Merges one arrival batch as generation `g`: gen(g−1) anti-joined
       * on the batch's entities (the batch side broadcasts), union the
@@ -4878,7 +4984,7 @@ object Similarity {
     /** The batch chain: `gen0`, then batches b = 1..3 as gen1..gen3. The
       * quantizer tables are read once for the whole chain. */
     def lifecycleTo(root: String, band: DataFrame): Unit = {
-      val tables = lsmTables(band.sparkSession, root)
+      val tables = new LsmTables(band.sparkSession, root)
       seedTo(root, band, tables)
       for (g <- 1 to 3) merge(root, g, band.filter(col("b") === g), tables)
     }
@@ -4886,7 +4992,7 @@ object Similarity {
     /** The stream legs' micro-batch body: band rows (ent, id, del,
       * domain) merged as the root's next generation. */
     def ingest(root: String, batch: DataFrame): Unit =
-      merge(root, nextGen(root), batch, lsmTables(batch.sparkSession, root))
+      merge(root, nextGen(root), batch, new LsmTables(batch.sparkSession, root))
 
     /** The retrain leg: `train` over gen3's live set, stored as
       * `<name>_rt`, and that live set re-encoded against the new tables
@@ -4897,25 +5003,26 @@ object Similarity {
       val spark = band.sparkSession
       val live = band.join(graft.FsUtil.readParquet(spark, s"$root/gen3")
         .select(col(enc.id)), Seq(enc.id), "left_semi")
-      trainTo(root, live, "_rt", train)
-      enc.encode(live,
-          name => graft.FsUtil.readParquet(spark, s"$root/${name}_rt"))
-        .write.mode("overwrite").parquet(s"$root/gen3r")
+      val rt = new LsmTables(spark, root, "_rt")
+      trainTo(rt, live, train)
+      enc.encode(live, rt).write.mode("overwrite").parquet(s"$root/gen3r")
     }
 
     /** One audit row per state (`g0`…`g3`, `g3r`): `aggs` over that
-      * generation read back from parquet, then the tier's `trigger`
-      * columns, ordered by state and checkpointed. */
+      * generation read back from parquet, collected ([[localRows]]) as
+      * one local frame ordered by state; then the tier's `trigger`
+      * columns over it. Every state is written (and never rewritten)
+      * before the audit, so the states go as ONE union frame, whose
+      * per-state stages adaptive execution submits together: one result
+      * job for all of them, not one per state. */
     def audit(spark: org.apache.spark.sql.SparkSession, root: String,
               states: Seq[String], aggs: Seq[Column],
               trigger: DataFrame => DataFrame = identity): DataFrame =
-      trigger(states.map { s =>
+      trigger(localFrame(spark, localRows(Seq(() => states.map { s =>
           graft.FsUtil.readParquet(spark, s"$root/gen${s.drop(1)}")
             .agg(aggs.head, aggs.tail: _*)
             .select(lit(s).as("state"), col("*"))
-        }.reduce(_ unionAll _))
-        .orderBy(col("state"))
-        .localCheckpoint()
+        }.reduce(_ unionAll _)))))
 
     /** Runs `body` over a fresh scratch root, deleted afterwards. */
     def inScratch[A](body: String => A): A = {
@@ -4925,6 +5032,47 @@ object Similarity {
       finally graft.FsUtil.deleteRecursively(new java.io.File(root))
     }
   }
+
+  /** Collected audit rows with their schema. */
+  private[llm] type LocalRows =
+    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])
+
+  /** Builds and collects audit frames all at once, one named thread per
+    * frame on a pool made for this call. The pool's threads start from
+    * the caller's thread, so each inherits a copy of the caller's Spark
+    * local properties (job group, scheduler pool, a tracer's span) and
+    * every job is attributed as if the caller ran it. The frames must
+    * read only inputs that nothing rewrites while they run. */
+  private[llm] def localRows(audits: Seq[() => DataFrame]): Seq[LocalRows] =
+    if (audits.isEmpty) Nil
+    else {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        audits.size, r => {
+          val t = new Thread(r, s"graft-audit-${n.getAndIncrement()}")
+          t.setDaemon(true)
+          t
+        })
+      try audits.map(a => pool.submit(
+          new java.util.concurrent.Callable[LocalRows] {
+            def call(): LocalRows = {
+              val df = a()
+              (df.schema, df.collect())
+            }
+          }))
+        .map(f => try f.get() catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        })
+      finally pool.shutdown()
+    }
+
+  /** Audit rows as ONE local frame ordered by `state`, their first
+    * column: reading it runs no job. */
+  private[llm] def localFrame(spark: org.apache.spark.sql.SparkSession,
+                              rows: Seq[LocalRows]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.flatMap(_._2).sortBy(_.getString(0)): _*),
+      rows.head._1)
 
   /** The batch chain's audit states. */
   private[graft] val GenStates: Seq[String] = (0 to 3).map(g => s"g$g")
@@ -5032,11 +5180,12 @@ object Similarity {
     encode = (v, t) => sq8ComposedRows(v, t("centroids")).drop("dist")))
 
   /** Trains the frozen coarse centroids on the whole corpus and stores
-    * them as the root's `centroids` table. */
-  private def lsmTrainTo(embeddings: DataFrame, root: String): Unit =
+    * them as the root's `centroids` table, held local for the seed's
+    * encode. */
+  private def lsmTrainTo(embeddings: DataFrame, tables: LsmTables): Unit =
     sweepAfter(embeddings.sparkSession) {
-      lloydTrainCentsQ(quantized(embeddings, 1000), 0, 4, 64)
-        .write.mode("overwrite").parquet(s"$root/centroids")
+      tables.store("centroids",
+        lloydTrainCentsQ(quantized(embeddings, 1000), 0, 4, 64))
     }
 
   /** Writes an LSM base segment in the bucketed block-file layout
@@ -5070,7 +5219,7 @@ object Similarity {
     tag = "lsm",
     payload = Seq("qe", "label"),
     seed = (embeddings, root, tables) => {
-      lsmTrainTo(embeddings, root)
+      lsmTrainTo(embeddings, tables)
       lsmWriteBase(
         frozenAssignQ(lsmQuantized(embeddings), tables("centroids"))
           .select(col("vec_id").as("ent"), col("vec_id"), col("cluster"),
@@ -5128,6 +5277,16 @@ object Similarity {
     * (`base`, or the highest-numbered `base_cN` if compaction ran) and
     * the live delta generation numbers in ascending order. Every reader
     * and writer resolves the store's current state this way. */
+  /** The segments one state of an LSM root reads: its live base and its
+    * live deltas, oldest first. Segments are immutable, so a snapshot
+    * reads the same rows until compaction deletes its deltas. */
+  private[graft] final case class Snapshot(base: String, deltas: Seq[String])
+
+  private[graft] def snapshot(root: String): Snapshot = {
+    val (base, deltas) = lsmStorePaths(root)
+    Snapshot(base, deltas.map(i => s"$root/delta$i"))
+  }
+
   private def lsmStorePaths(root: String): (String, Seq[Int]) = {
     val dirs = Option(new java.io.File(root).list()).getOrElse(Array.empty)
     require(dirs.contains("base") && dirs.contains("centroids"),
@@ -5543,7 +5702,7 @@ object Similarity {
     tag = "sq8lsm",
     payload = Seq("b8", "nsq", "label"),
     seed = (embeddings, root, tables) => {
-      lsmTrainTo(embeddings, root)
+      lsmTrainTo(embeddings, tables)
       lsmWriteBase(
         sq8ComposedRows(embeddings.select(col("vec_id").as("ent"),
             col("vec_id"), col("embedding")), tables("centroids"))
@@ -5992,10 +6151,9 @@ object Similarity {
     tag = "lsmc",
     payload = Seq("qe", "cws", "label"),
     seed = (embeddings, root, tables) => {
-      lsmTrainTo(embeddings, root)
+      lsmTrainTo(embeddings, tables)
       sweepAfter(embeddings.sparkSession) {
-        trainPqCodebook(embeddings)
-          .write.mode("overwrite").parquet(s"$root/codebook")
+        tables.store("codebook", trainPqCodebook(embeddings))
       }
       lsmWriteBase(
         composedRowsQ(

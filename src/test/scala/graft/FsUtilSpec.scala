@@ -130,7 +130,8 @@ class FsUtilSpec extends SparkSpec {
   test("no job to resolve a table's schema; a ParquetSink write runs only " +
     "its write job and counts its own rows from the footers") {
     val load = jobsOf(Tables.names.foreach { t =>
-      // events through its own loader: it sets nanosAsLong first
+      // events through its own loader: its footer schema reads the nanos
+      // as LONG
       if (t == "events") Tables.events(spark, sf).schema
       else Tables.load(spark, sf, t).schema
     })
@@ -147,6 +148,26 @@ class FsUtilSpec extends SparkSpec {
         spark.range(0, 250).toDF("id"), dir, maxRecordsPerFile = 300) === 250L)
       assert(spark.read.parquet(dir).count() === 1250L)
     } finally FsUtil.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("Tables.events leaves the session's nanosAsLong flag as it found " +
+    "it, and reads the same micros timestamps under every setting") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.getOption(key)
+    def ts(): Seq[Long] = Tables.events(spark, sf)
+      .selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
+    try {
+      spark.conf.unset(key)
+      val unset = ts()
+      assert(!spark.conf.getAll.contains(key), "events set the flag")
+      assert(Tables.events(spark, sf).schema("ts").dataType ===
+        org.apache.spark.sql.types.TimestampType)
+      for (nanos <- Seq("true", "false")) {
+        spark.conf.set(key, nanos)
+        assert(ts() === unset, nanos)
+        assert(spark.conf.get(key) === nanos)
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("parquetRowCount counts an empty store as 0") {

@@ -111,4 +111,15 @@ class PlanAuditSpec extends SparkSpec {
     assert(windows.isEmpty,
       s"single-partition Window in build pipeline: ${windows.mkString(", ")}")
   }
+
+  test("a Lloyd round's map plan shuffles no sample row: the per-row " +
+    "kernel projection, with the sums reduced to the driver in the same job") {
+    val plan = buildAudits.collectFirst {
+      case ("ivf_lloyd_train", p, _) => p
+    }.get
+    assert(plan.contains("argmin_centroid"), plan)
+    // only the k aggregate's single-partition and broadcast exchanges
+    // remain; the DataFrame round's per-cluster hash exchange is gone
+    assert(!plan.contains("hashpartitioning"), plan)
+  }
 }
