@@ -519,7 +519,14 @@ object Corpus {
       .filter(col("u") =!= col("v"))
       .distinct()
       .repartition(parts, col("u"))
-      .persist()
+      .localCheckpoint(eager = false)
+    // a round's checkpointed edges, released once the next round holds
+    // its own
+    def release(edges: DataFrame): Unit = edges.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+        ()
+    }
 
     /** min(v) per u joined back onto the edges; the agg is map-side
       * combinable so a hot star center costs O(1) state per task. */
@@ -553,20 +560,25 @@ object Corpus {
           col("mn").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      // lineage truncation every few rounds (a cache miss would
-      // otherwise re-derive the whole chain); convergence = the edge
-      // set reached a fixed point, checked as (count, xor of edge
-      // hashes — order-independent, overflow-free under ANSI, and the
-      // edges are distinct so nothing cancels) on the SAME
-      // materialization — one job per round
-      val next =
-        if ((rounds + 1) % 5 == 0) ss.localCheckpoint()
-        else ss.repartition(parts, col("u")).persist()
+      // every round is cut from its lineage by a lazy local checkpoint:
+      // the next round plans over a scan of these blocks, not over this
+      // round's plan, which holds the previous frame four times (two
+      // withMin self-joins) and so grows ~4x per round — AQE renders
+      // the whole plan on the query thread at every re-plan.
+      // Convergence = the edge set reached a fixed point, checked as
+      // (count, xor of edge hashes — order-independent, overflow-free
+      // under ANSI, and the edges are distinct so nothing cancels) by
+      // the action that materializes the checkpoint.
+      // 100 TB shape: the cut writes each round's edges once to the
+      // executors' block stores (memory and disk), as the persist it
+      // replaces did; like any local checkpoint it does not survive the
+      // loss of an executor.
+      val next = ss.repartition(parts, col("u")).localCheckpoint(eager = false)
       val row = next.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       val cur = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
       converged = cur == prev
       prev = cur
-      dir.unpersist()
+      release(dir)
       dir = next
       rounds += 1
     }
@@ -582,7 +594,7 @@ object Corpus {
       .select(col("u").as("id"), least(col("u"), col("mn")).as("label"))
       .persist()
     out.count() // materialize before releasing the loop frame
-    dir.unpersist()
+    release(dir)
     out
   }
 

@@ -2,8 +2,16 @@ package graft.llm
 
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
+  BindReferences, BoundReference, Descending, Expression,
+  GenericInternalRow, InterpretedOrdering, JoinedRow, SortDirection,
+  SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
+  StructField, StructType}
 
 /** Similarity search over the embedding column (SURVEY.md §2B
   * "LLM: similarity"). Dot products / norms are pure built-in higher-order
@@ -1750,53 +1758,146 @@ object Similarity {
       // co-stored filterable metadata (the writeGraphIndex discipline)
       col("label"))
 
+  /** The `n` least rows offered under `ord`, in a bounded max-heap: one
+    * probe's state in a top-k fold. */
+  private final class Least(n: Long, ord: Ordering[InternalRow])
+      extends Serializable {
+    private val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+    def offer(r: InternalRow): Unit =
+      if (heap.size < n) heap.add(r)
+      else if (n > 0 && ord.lt(r, heap.peek())) { heap.poll(); heap.add(r) }
+    def merge(o: Least): Unit = o.heap.forEach(r => offer(r))
+    def sorted: Array[InternalRow] =
+      heap.toArray(Array.empty[InternalRow]).sorted(ord)
+  }
+
+  /** A top-k fold as ONE Spark job: each partition of `rows` hands every
+    * row to `offer` with one [[Least]] state per probe, and the driver
+    * merges the partitions' states. Returns each probe's rows in order. */
+  private def topFold(rows: DataFrame, probes: Int, n: Long,
+                      ord: Ordering[InternalRow])(
+      offer: (InternalRow, Array[Least]) => Unit): Array[Array[InternalRow]] = {
+    def states = Array.fill(probes)(new Least(n, ord))
+    rows.queryExecution.toRdd
+      .mapPartitions { it =>
+        val tops = states
+        it.foreach(offer(_, tops))
+        Iterator.single(tops)
+      }
+      .fold(states) { (a, b) => a.indices.foreach(i => a(i).merge(b(i))); a }
+      .map(_.sorted)
+  }
+
+  /** (key ascending or descending with Spark's default null order, then
+    * the id in column 1 ascending): the order of a window's `orderBy(key,
+    * id)` over (key, id) rows. */
+  private def keyIdOrder(key: DataType,
+                         dir: SortDirection): Ordering[InternalRow] =
+    new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(0, key, nullable = true), dir),
+      SortOrder(BoundReference(1, LongType, nullable = false), Ascending)))
+
+  /** `c` as Spark's analyzer resolves it against `fields`, bound to
+    * their ordinals: the very expression a plan would run, for
+    * evaluation on a fold's rows. */
+  private def boundExpr(spark: org.apache.spark.sql.SparkSession,
+                        fields: Seq[StructField], c: Column): Expression =
+    spark.createDataFrame(java.util.Collections.emptyList[
+        org.apache.spark.sql.Row](), StructType(fields))
+      .select(c).queryExecution.analyzed match {
+      case Project(Seq(a: Alias), in) =>
+        BindReferences.bindReference(a.child, in.output)
+    }
+
   /** The q236 chain over an explicit signature frame and an explicit
-    * (probe_id, pe, pn) probe frame — probes pack ON THE FLY with the
-    * identical per-row sign rule (bit-identical words), so the stream
-    * leg substitutes a micro-batch for the registered probe set. `pred`
-    * filters the CANDIDATE signatures before the Hamming ranking
-    * (ineligible rows never occupy shortlist slots) and `widen` scales
-    * the shortlist depth R by the measured 1/selectivity in-plan —
-    * the q204 discipline with R as the budget. Without `widen` the
-    * budget is the constant R: no corpus aggregate, no cross join. */
+    * (probe_id, pe, pn) probe frame, as two per-partition top-k folds
+    * merged on the driver (the [[clusterMeans]] shape), returning a local
+    * (probe_id, neighbor_id, cos, rnk) frame sorted by (probe_id, rnk):
+    *  - shortlist: each partition of `sigs` keeps, per probe, its R best
+    *    (ham, vec_id), ham ascending (null first), then vec_id, over the
+    *    rows `pred` admits (ineligible rows never occupy shortlist
+    *    slots) and never the probe's own id;
+    *  - rerank: each embedding row that some probe shortlisted is scored
+    *    against those probes alone, and each probe keeps its k best
+    *    (cos descending, null last, then neighbor_id).
+    * Probe words pack with [[bqSigCol]], the stored signatures' rule, so
+    * a stream leg substitutes a micro-batch for the registered probe set;
+    * cos is `round(dot(pe, embedding) / (pn · l2norm(embedding)), 4)`
+    * evaluated as Spark's own expression ([[boundExpr]]), null elements
+    * and zero norms included. R is `baseR`, or ⌈baseR·widen⌉ from one
+    * corpus aggregate on the driver (the q204 discipline with R as the
+    * budget). Probe ids must be distinct; a null one matches nothing.
+    *
+    * Driver bound: a merge holds O(probes × R) ids, its own state plus
+    * the partition's partial it folds in, so a micro-batch, not the
+    * corpus, sizes it; a local probe frame is collected without a job. */
   private[llm] def bqRefineWith(sigs: DataFrame, probeF: DataFrame,
                                 embeddings: DataFrame, k: Int,
                                 baseR: Int,
                                 pred: Option[Column] = None,
                                 widen: Option[Column] = None): DataFrame = {
-    val psig = probeF.select(col("probe_id"),
-      bqSigCol(col("pe"), 1).as("plo"),
-      bqSigCol(col("pe"), 33).as("phi"))
-    val wh = Window.partitionBy(col("probe_id"))
-      .orderBy(col("ham"), col("vec_id"))
-    val ranked = pred.map(sigs.filter).getOrElse(sigs)
-      .join(broadcast(psig), col("vec_id") =!= col("probe_id"))
-      .withColumn("ham",
-        (bit_count(col("plo").bitwiseXOR(col("lo"))) +
-          bit_count(col("phi").bitwiseXOR(col("hi")))).cast("long"))
-      .withColumn("rn", row_number().over(wh))
-    val short = widen.fold(ranked.filter(col("rn") <= baseR)) { w =>
-        ranked.crossJoin(broadcast(embeddings.agg(
-            ceil(lit(baseR.toDouble) * w).cast("long").as("rlim"))))
-          .filter(col("rn") <= col("rlim"))
+    val spark = probeF.sparkSession
+    val pf = probeF.select(col("probe_id").cast("long").as("probe_id"),
+      bqSigCol(col("pe"), 1).as("plo"), bqSigCol(col("pe"), 33).as("phi"),
+      col("pe"), col("pn"))
+    val probes = pf.queryExecution.executedPlan.executeCollect()
+      .filterNot(_.isNullAt(0)).sortBy(_.getLong(0))
+    require(probes.map(_.getLong(0)).distinct.length == probes.length,
+      "bqRefineWith: duplicate probe ids")
+    val r = widen.fold(baseR.toLong) { w =>
+      val row = embeddings.agg(
+        ceil(lit(baseR.toDouble) * w).cast("long")).head()
+      if (row.isNullAt(0)) 0L else row.getLong(0)
+    }
+    val short = topFold(pred.map(sigs.filter).getOrElse(sigs)
+        .select(col("vec_id").cast("long"), col("lo"), col("hi")),
+      probes.length, r, keyIdOrder(LongType, Ascending)) { (s, tops) =>
+      if (!s.isNullAt(0)) {
+        var p = 0
+        while (p < probes.length) {
+          val q = probes(p)
+          if (q.getLong(0) != s.getLong(0)) {
+            val ham =
+              if (q.isNullAt(1) || q.isNullAt(2) || s.isNullAt(1) ||
+                  s.isNullAt(2)) null
+              else Long.box(java.lang.Long.bitCount(q.getLong(1) ^ s.getLong(1)) +
+                java.lang.Long.bitCount(q.getLong(2) ^ s.getLong(2)))
+            tops(p).offer(new GenericInternalRow(Array[Any](ham, s.getLong(0))))
+          }
+          p += 1
+        }
       }
-      .select(col("probe_id"), col("vec_id"))
-    val base = embeddings.select(col("vec_id"), col("embedding"),
-      l2norm(col("embedding")).as("nrm"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    base.join(broadcast(short), "vec_id")
-      .join(broadcast(probeF.select(col("probe_id"), col("pe"),
-        col("pn"))), "probe_id")
-      .withColumn("cos", round(dot(col("pe"), col("embedding")) /
-        (col("pn") * col("nrm")), 4))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        col("cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("probe_id"), col("neighbor_id"), col("cos"),
-        col("rnk").cast("long").as("rnk"))
-      .orderBy(col("probe_id"), col("rnk"))
+    }
+    // vec_id → the probes that shortlisted it, once per slot
+    val byVec = short.zipWithIndex
+      .flatMap { case (s, p) => s.map(_.getLong(1) -> p) }
+      .groupMap(_._1)(_._2)
+    val ef = embeddings.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding"))
+    val cos = boundExpr(spark, pf.schema.fields ++ ef.schema.fields,
+      round(dot(col("pe"), col("embedding")) /
+        (col("pn") * l2norm(col("embedding"))), 4))
+    val top = topFold(ef, probes.length, k,
+        keyIdOrder(DoubleType, Descending)) { (e, tops) =>
+      if (!e.isNullAt(0)) byVec.get(e.getLong(0)).foreach(_.foreach { p =>
+        tops(p).offer(new GenericInternalRow(Array[Any](
+          cos.eval(new JoinedRow(probes(p), e)), e.getLong(0))))
+      })
+    }
+    val rows = probes.zip(top).flatMap { case (q, ns) =>
+      ns.zipWithIndex.map { case (n, i) =>
+        org.apache.spark.sql.Row(q.getLong(0), n.getLong(1),
+          if (n.isNullAt(0)) null else n.getDouble(0), i + 1L)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType.fromDDL(
+          "probe_id BIGINT, neighbor_id BIGINT, cos DOUBLE, rnk BIGINT"))
+      .select(
+        col("probe_id").cast(probeF.schema("probe_id").dataType).as("probe_id"),
+        col("neighbor_id").cast(embeddings.schema("vec_id").dataType)
+          .as("neighbor_id"),
+        col("cos"), col("rnk"))
   }
 
   private[llm] def bqRefineFrom(sigs: DataFrame, embeddings: DataFrame,
@@ -1815,9 +1916,11 @@ object Similarity {
     *
     * 100 TB shape: the signature table is 16 B/vector — at a corpus
     * size where even the SQ8 pack spills, the binary tier stays
-    * memory-resident; the Hamming scan is one whole-stage-codegen'd
-    * integer loop, and the refine touches R·nProbes float rows
-    * through a broadcast shortlist join. */
+    * memory-resident. The Hamming scan is one pass of two XOR+POPCNTs
+    * per (row, probe) that keeps R ids per probe in each partition; the
+    * driver merges probes × R ids per partition, and the rerank reads
+    * only the shortlisted float rows, scoring each against the probes
+    * that shortlisted it ([[bqRefineWith]]). */
   def bqRefineTopK(embeddings: DataFrame, nProbes: Int = 10,
                    k: Int = 5, fixedR: Int = 60): DataFrame = {
     // the oracle unrolls the probe CTE, R and the final rank at the
@@ -1855,7 +1958,11 @@ object Similarity {
     * corpus packs once under [[graft.FsUtil.ServedRoots]]; afterwards
     * the query-time work is the production shape of the binary tier:
     * stream the 16 B/vector signature table through the XOR+POPCNT
-    * kernel, then read floats for the R-shortlist alone. */
+    * kernel, then read floats for the R-shortlist alone.
+    *
+    * 100 TB shape: two jobs over the stored tables, the shortlist fold
+    * over the signatures and the rerank fold over the floats; the driver
+    * holds probes × R ids per merge and never a corpus-sized frame. */
   def bqServed(embeddings: DataFrame, corpusTag: String,
                nProbes: Int = 10, k: Int = 5): DataFrame = {
     require(nProbes == 10 && k == 5,
@@ -1871,13 +1978,20 @@ object Similarity {
     * identical per-row rule — bit-identical words) and run the
     * Hamming + rerank chain against the STORED signature table —
     * union of micro-batches ≡ one batch, StreamingSpec proves it
-    * against [[bqServed]]'s rows. */
+    * against [[bqServed]]'s rows.
+    *
+    * 100 TB shape: a warm micro-batch is three jobs — the shortlist
+    * fold, the rerank fold and the write — and a local batch is
+    * collected without one. The driver holds batch × R ids per merge,
+    * so the micro-batch, not the corpus, sizes it; the rerank reads only
+    * the shortlisted float rows. */
   def bqSearchStreamBatch(embeddings: DataFrame, corpusTag: String,
                           outDir: String, k: Int = 5)(
       batch: DataFrame, batchId: Long): Unit = {
     val root = BqIndex.streamRoot(embeddings, corpusTag)
     bqRefineWith(graft.FsUtil.readParquet(batch.sparkSession, s"$root/sigs"),
       probesOf(batch), embeddings, k, 60)
+      .coalesce(1) // one file per micro-batch
       .write.mode("append").parquet(outDir)
     ()
   }
@@ -2372,11 +2486,6 @@ object Similarity {
         int8Dot(col("b8"), col("b8")).as("nsq"), col("cluster"),
         col("dist"))
   }
-
-  /** Seeds the q225 store under `root`: frozen coarse centroids trained
-    * on the gen-0 live set, then `gen0`. */
-  private[graft] def sq8SeedTo(embeddings: DataFrame, root: String): Unit =
-    Sq8Gen.seedTo(root, Sq8Gen.band(embeddings))
 
   /** The q225 ingest leg under Structured Streaming (foreachBatch):
     * arrival micro-batches (ent, vec_id, embedding, del) merge into the

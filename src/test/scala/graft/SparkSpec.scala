@@ -8,15 +8,17 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Spark jobs started by `body`, counted by a listener between two
-    * marker jobs: the bus delivers events in order, so the end marker's
-    * arrival proves every job of `body` was seen, and jobs queued before
-    * the start marker are not counted. */
-  protected def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Hands `on` every listener event that `body` posts, as seen between
+    * two marker jobs: the bus delivers events in order, so the end
+    * marker's arrival proves every event of `body` was seen, and events
+    * queued before the start marker are not counted. `on` runs on the
+    * listener thread. */
+  protected def eventsOf(body: => Unit)(
+      on: org.apache.spark.scheduler.SparkListenerEvent => Unit): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
     val sc = spark.sparkContext
     val (startMark, endMark) = ("jobsOf-start", "jobsOf-end")
-    val n = new java.util.concurrent.atomic.AtomicInteger
     val counting = new java.util.concurrent.atomic.AtomicBoolean(false)
     val done = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
@@ -24,8 +26,10 @@ trait SparkSpec extends AnyFunSuite {
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
           case `startMark` => counting.set(true)
           case `endMark` => counting.set(false); done.countDown()
-          case _ => if (counting.get) n.incrementAndGet()
+          case _ => if (counting.get) on(e)
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (counting.get) on(e)
     }
     def mark(group: String): Unit = {
       sc.setJobGroup(group, group)
@@ -38,8 +42,18 @@ trait SparkSpec extends AnyFunSuite {
       body
       mark(endMark)
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      n.get
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Spark jobs started by `body` ([[eventsOf]]). */
+  protected def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    eventsOf(body) {
+      case _: org.apache.spark.scheduler.SparkListenerJobStart =>
+        n.incrementAndGet()
+      case _ =>
+    }
+    n.get
   }
 }
 

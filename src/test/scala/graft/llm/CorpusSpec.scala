@@ -97,20 +97,53 @@ class CorpusSpec extends SparkSpec {
     assert(comps === Map(1L -> 3L))
   }
 
-  test("deep chains propagate labels through checkpointed rounds") {
+  /** 12-doc chain over a sliding 22-token window with stride 2: adjacent
+    * docs share 19 of 23 distinct bigrams (J = 0.826 >= 0.8) but docs two
+    * apart only 17 of 25 (J = 0.68 < 0.8), so the graph is a pure path. */
+  private def deepChain: org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    // 12-doc chain over a sliding 22-token window with stride 2: adjacent
-    // docs share 19 of 23 distinct bigrams (J = 0.826 >= 0.8) but docs two
-    // apart only 17 of 25 (J = 0.68 < 0.8), so the graph is a pure path.
-    // The min label must walk 11 hops — crossing the every-5-rounds
-    // localCheckpoint twice — without plan blowup (VERDICT r2 #6).
     val toks = (0 until 44).map(i => f"tok$i%02d")
-    val docs = (0 until 12).map { i =>
+    (0 until 12).map { i =>
       ((i + 1).toLong, toks.slice(2 * i, 2 * i + 22).mkString(" "))
-    }
-    val comps = Corpus.nearDupComponents(docs.toDF("doc_id", "text")).collect()
+    }.toDF("doc_id", "text")
+  }
+
+  test("deep chains propagate labels through checkpointed rounds") {
+    // The min label must walk 11 hops across the per-round checkpoints
+    // without plan blowup (VERDICT r2 #6).
+    val comps = Corpus.nearDupComponents(deepChain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps === Map(1L -> 12L))
+  }
+
+  test("deep chains: no SQL execution's plan description reaches 1 M " +
+    "characters (each round plans over the previous round's checkpoint)") {
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val largest = new java.util.concurrent.atomic.AtomicLong
+    eventsOf(Corpus.nearDupComponents(deepChain).collect()) {
+      case e: SparkListenerSQLExecutionStart =>
+        largest.accumulateAndGet(e.physicalPlanDescription.length, math.max)
+      case e: SparkListenerSQLAdaptiveExecutionUpdate =>
+        largest.accumulateAndGet(e.physicalPlanDescription.length, math.max)
+      case _ =>
+    }
+    assert(largest.get > 0, "no SQL execution event was seen")
+    assert(largest.get < 1000000L,
+      s"largest plan description ${largest.get} characters (bound 1 M)")
+  }
+
+  test("component labels release every round's checkpoint blocks; only " +
+    "the returned labels stay held") {
+    import spark.implicits._
+    def held = spark.sparkContext.getPersistentRDDs.keySet
+    val before = held
+    val labels = Corpus.componentLabels(
+      (1L until 12L).map(i => (i, i + 1)).toDF("a", "b"))
+    assert(labels.collect().map(_.getLong(1)).toSet === Set(1L))
+    assert((held -- before).size === 1, "a round's blocks are still held")
+    labels.unpersist()
+    assert((held -- before).isEmpty)
   }
 
   test("connected components on a pair-free corpus return empty, not error") {

@@ -3,6 +3,10 @@ package graft.llm
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 class SimilaritySpec extends SparkSpec {
 
@@ -411,6 +415,135 @@ class SimilaritySpec extends SparkSpec {
     // not a scale claim — q237 is the measured number)
     val recall = Similarity.bqRecall(emb).head().getLong(3)
     assert(recall >= 5000L, s"binary refine recall $recall below 5000bp")
+  }
+
+  /** The window formulation the binary tier's folds replaced, kept as
+    * their parity reference: a broadcast nested-loop Hamming join ranked
+    * by `row_number`, the widened budget as a broadcast aggregate, and a
+    * second `row_number` over the rescored shortlist. Probe words come
+    * from `bqSigned`, the stored signatures' rule. */
+  private def windowRefine(sigs: DataFrame, probeF: DataFrame,
+                           embeddings: DataFrame, k: Int, baseR: Int,
+                           pred: Option[Column] = None,
+                           widen: Option[Column] = None): DataFrame = {
+    val psig = Similarity.bqSigned(probeF.select(col("probe_id").as("vec_id"),
+        col("pe").as("embedding"), lit(0).as("label")))
+      .select(col("vec_id").as("probe_id"), col("lo").as("plo"),
+        col("hi").as("phi"))
+    val wh = Window.partitionBy(col("probe_id"))
+      .orderBy(col("ham"), col("vec_id"))
+    val ranked = pred.map(sigs.filter).getOrElse(sigs)
+      .join(broadcast(psig), col("vec_id") =!= col("probe_id"))
+      .withColumn("ham",
+        (bit_count(col("plo").bitwiseXOR(col("lo"))) +
+          bit_count(col("phi").bitwiseXOR(col("hi")))).cast("long"))
+      .withColumn("rn", row_number().over(wh))
+    val short = widen.fold(ranked.filter(col("rn") <= baseR)) { w =>
+        ranked.crossJoin(broadcast(embeddings.agg(
+            ceil(lit(baseR.toDouble) * w).cast("long").as("rlim"))))
+          .filter(col("rn") <= col("rlim"))
+      }
+      .select(col("probe_id"), col("vec_id"))
+    val base = embeddings.select(col("vec_id"), col("embedding"),
+      Similarity.l2norm(col("embedding")).as("nrm"))
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("cos").desc, col("neighbor_id"))
+    base.join(broadcast(short), "vec_id")
+      .join(broadcast(probeF.select(col("probe_id"), col("pe"),
+        col("pn"))), "probe_id")
+      .withColumn("cos", round(Similarity.dot(col("pe"), col("embedding")) /
+        (col("pn") * col("nrm")), 4))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+        col("cos"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("probe_id"), col("neighbor_id"), col("cos"),
+        col("rnk").cast("long").as("rnk"))
+      .orderBy(col("probe_id"), col("rnk"))
+  }
+
+  /** (vec_id, embedding, label) rows with nullable float elements. */
+  private def planted(rows: (Long, Seq[java.lang.Float], Int)*): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map {
+        case (id, e, l) => Row(id, e, l)
+      }: _*),
+      StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+
+  test("binary tier folds equal the window formulation on planted frames: " +
+    "Hamming tie at the R-th slot, 4-dp cos tie at the k-th, own id in " +
+    "the corpus, R >= corpus, a pred under R, widen, null elements and " +
+    "zero norms") {
+    def v(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    // probe 0 is (1,1,1,1) and sits in the corpus. Against it, id 5 is
+    // at Hamming 0; ids 1–4 and 8 tie at 1, so R = 3 keeps 1 and 2 by
+    // vec_id. Ids 1 and 2 tie at cos 0.5000 only after rounding, and
+    // id 2's unrounded cos is the larger, so k = 2 keeps id 1. Id 8
+    // carries a null element (a 0 sign bit, a null cos that ranks
+    // last). Labels leave 0, 2, 4 and 6 eligible under the even pred,
+    // so widen doubles R.
+    val emb = planted(
+      (0L, v(1f, 1f, 1f, 1f), 0),
+      (1L, v(1f, 1f, 1f, -1.00001f), 1),
+      (2L, v(2f, 2f, 2f, -2f), 2),
+      (3L, v(1f, 1f, -1f, 1f), 3),
+      (4L, v(1f, -1f, 1f, 1f), 4),
+      (5L, v(3f, 1f, 1f, 1f), 5),
+      (6L, v(1f, 1f, -1f, -1f), 6),
+      (7L, v(-1f, -1f, -1f, -1f), 7),
+      (8L, v(1f, null, 1f, 1f), 9))
+    val probes = Similarity.probesOf(planted(
+      (0L, v(1f, 1f, 1f, 1f), 0),
+      (100L, v(-1f, 1f, -1f, 1f), 0),
+      (101L, v(1f, null, -1f, 1f), 0)))
+    val sigs = Similarity.bqSigned(emb)
+    val even = Some(col("label") % 2 === 0)
+    def both(k: Int, r: Int, pred: Option[Column] = None,
+             widen: Option[Column] = None): Seq[Row] = {
+      val ref = windowRefine(sigs, probes, emb, k, r, pred, widen)
+      val got = Similarity.bqRefineWith(sigs, probes, emb, k, r, pred, widen)
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        ref.schema.map(f => f.name -> f.dataType))
+      val rows = got.collect().toSeq
+      assert(rows === ref.collect().toSeq, s"k=$k R=$r pred=$pred widen=$widen")
+      rows
+    }
+    def of(rows: Seq[Row], probe: Long): Seq[Long] =
+      rows.filter(_.getLong(0) == probe).map(_.getLong(1))
+    assert(of(both(2, 3), 0L) === Seq(5L, 1L))
+    val all = both(9, 50)
+    assert(of(all, 0L).length === 8 && of(all, 0L).last === 8L,
+      "R >= corpus keeps every other row; the null cos ranks last")
+    assert(all.filter(_.getLong(0) == 101L).forall(_.isNullAt(2)),
+      "a probe with a null element scores null")
+    assert(of(both(5, 5, even), 0L) === Seq(2L, 4L, 6L))
+    assert(of(both(5, 2, even, Some(Similarity.evenLabelWiden)), 0L) ===
+      Seq(2L, 4L, 6L))
+    // a zero norm: both formulations divide by zero the same way (an
+    // error under ANSI, else a null cos)
+    val zero = planted((0L, v(1f, 1f, 1f, 1f), 0), (1L, v(0f, 0f, 0f, 0f), 0))
+    val zs = Similarity.bqSigned(zero)
+    val zp = Similarity.probesFrame(zero, 1)
+    def outcome(f: => DataFrame) = scala.util.Try(f.collect().toSeq).toOption
+    assert(outcome(Similarity.bqRefineWith(zs, zp, zero, 5, 60)) ===
+      outcome(windowRefine(zs, zp, zero, 5, 60)))
+  }
+
+  test("binary tier stream leg: a warm bqSearchStreamBatch call on a " +
+    "local 8-probe batch runs at most 3 jobs (shortlist, rerank, write)") {
+    val emb = Tables.embeddings(spark, sf)
+    val local = emb.filter(col("vec_id") < 8).select("vec_id", "embedding")
+    val batch = spark.createDataFrame(
+      java.util.Arrays.asList(local.collect(): _*), local.schema)
+    val out = Files.createTempDirectory("graft_bqjobs_").toString
+    try {
+      val serve = Similarity.bqSearchStreamBatch(emb, s"bqjobs-$sf", out) _
+      serve(batch, 0L) // builds the stored index
+      val jobs = jobsOf(serve(batch, 1L))
+      assert(jobs <= 3, s"one probe micro-batch ran $jobs jobs (bound 3)")
+      assert(spark.read.parquet(out).count() === 2 * 8 * 5)
+      assert(new java.io.File(out).list().count(_.startsWith("part-")) === 2,
+        "one file per micro-batch")
+    } finally graft.FsUtil.deleteRecursively(new java.io.File(out))
   }
 
   test("SQ8 LSM store (q232): ingest never touches the packed base; " +
